@@ -985,17 +985,23 @@ def main() -> None:
     # Full record first (and mirrored to a repo file): the driver keeps
     # only the LAST 2000 chars of stdout, so this line may be truncated
     # there — the committed file is the durable copy. Reduced-core
-    # scaling runs (SPARK_GRAFT_CPUS below the box's core count) write
-    # a CPU-suffixed file so they stop clobbering the committed
-    # full-core record (VERDICT r13 item 7).
+    # scaling runs write a CPU-suffixed file so they stop clobbering
+    # the committed full-core record (VERDICT r13 item 7). The usable
+    # cores are the process's affinity mask (taskset/cgroup cpusets
+    # shrink it; os.cpu_count() reports host cores regardless),
+    # further capped by SPARK_GRAFT_CPUS when set.
     print(json.dumps(detail))
-    cpus_env = os.environ.get("SPARK_GRAFT_CPUS")
-    detail_name = "BENCH_DETAIL.json"
+    host_cores = os.cpu_count() or 1
     try:
-        if cpus_env and int(cpus_env) < (os.cpu_count() or 1):
-            detail_name = f"BENCH_DETAIL_c{int(cpus_env)}.json"
+        cores = len(os.sched_getaffinity(0))
+    except AttributeError:  # platform without an affinity API
+        cores = host_cores
+    try:
+        cores = min(cores, int(os.environ.get("SPARK_GRAFT_CPUS", cores)))
     except ValueError:
         pass
+    detail_name = (f"BENCH_DETAIL_c{cores}.json" if cores < host_cores
+                   else "BENCH_DETAIL.json")
     try:
         with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                detail_name), "w") as fh:

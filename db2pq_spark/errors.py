@@ -29,7 +29,3 @@ class UnknownColumnError(PlanError):
 
 class UnknownTypeError(PlanError):
     """col_types referenced a type alias the engine does not know."""
-
-
-class FreshnessError(RuntimeError):
-    """Source freshness metadata missing or unparseable when required."""

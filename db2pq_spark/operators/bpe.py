@@ -42,6 +42,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from db2pq_spark.operators.dedup import normalize_text
+from db2pq_spark.staging import stage
 
 __all__ = ["word_freqs", "bpe_train", "bpe_apply_merge"]
 
@@ -128,14 +129,14 @@ def bpe_train(
     the final segmented word-frequency relation
     ``(word, freq, sym: array<string>)``.
 
-    Each round the word-vocab relation is ``localCheckpoint``-pinned:
+    Each round the word-vocab relation is staged (eagerly):
     the per-round plan would otherwise nest ``merges`` deep (the same
     lineage-explosion guard as connected components), and every round's
     pair aggregate re-reads the pinned relation instead of replaying
     all previous rewrites."""
     vocab = word_freqs(df, text_col).select(
         "word", "freq", F.split("word", "").alias("sym"))
-    vocab = vocab.localCheckpoint(eager=True)
+    vocab = stage(vocab, eager=True)
 
     rules: list[tuple[int, str, str, int]] = []
     for r in range(1, merges + 1):
@@ -149,7 +150,7 @@ def bpe_train(
         vocab = vocab.select(
             "word", "freq",
             bpe_apply_merge("sym", left, right).alias("sym"))
-        vocab = vocab.localCheckpoint(eager=True)
+        vocab = stage(vocab, eager=True)
     return rules, vocab
 
 

@@ -18,9 +18,10 @@ Scale design:
 - Each round is one shuffle join (edges ⋈ labels on the node id) plus
   one groupBy-min — both partition by the same key, and AQE coalesces
   the tiny tail rounds.
-- ``localCheckpoint`` after every round truncates the lineage: without
-  it the plan doubles each iteration and the job dies on driver-side
-  plan explosion long before the data is large.
+- Eager staging (:func:`..staging.stage`) after every round
+  truncates the lineage: without it the plan doubles each iteration
+  and the job dies on driver-side plan explosion long before the data
+  is large.
 - Convergence is detected with a LIMIT-1 probe on changed labels (an
   existence check, not a full count — short-circuits on first change).
 - The edge list is symmetrized once up front; oversized-component
@@ -33,6 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from db2pq_spark.staging import stage
 
 
 def _driver_union_find(spark, a_vals, b_vals,
@@ -112,7 +115,7 @@ def connected_components(
     e = half.union(
         half.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).distinct()
-    e = e.localCheckpoint(eager=True)
+    e = stage(e, eager=True)
 
     if small_graph_edges and e.count() <= 2 * small_graph_edges:
         # Arrow-backed collect: columnar transfer, no per-row Row
@@ -125,10 +128,10 @@ def connected_components(
                                   pdf["b"].to_numpy(),
                                   dict(e.dtypes)["a"])
 
-    labels = (
+    labels = stage(
         e.select(F.col("a").alias("id")).distinct()
-        .withColumn("comp", F.col("id"))
-        .localCheckpoint(eager=True)
+        .withColumn("comp", F.col("id")),
+        eager=True,
     )
 
     for _ in range(max_iterations):
@@ -136,11 +139,11 @@ def connected_components(
             e.join(labels.withColumnRenamed("id", "a"), "a")
             .select(F.col("b").alias("id"), "comp")
         )
-        new_labels = (
+        new_labels = stage(
             labels.union(msgs)
             .groupBy("id")
-            .agg(F.min("comp").alias("comp"))
-            .localCheckpoint(eager=True)
+            .agg(F.min("comp").alias("comp")),
+            eager=True,
         )
         changed = (
             new_labels.join(

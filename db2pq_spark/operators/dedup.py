@@ -5,7 +5,7 @@ declarative DataFrame plans. No row-at-a-time Python UDFs anywhere;
 the one Python surface is the Arrow-batched MinHash signature kernel
 (see :func:`minhash_signatures` — Spark evaluates higher-order lambdas
 interpreted, so the |shingles|×num_hashes fold is the documented
-Pandas-UDF exception; a pure-JVM ``impl="fold"`` remains available):
+Pandas-UDF exception):
 
 - :func:`exact_dedup` — hash-groupBy on normalized content
 - :func:`minhash_signatures` / :func:`minhash_dedup` — shingle →
@@ -30,6 +30,8 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from db2pq_spark.staging import stage
 
 
 def normalize_text(col: Column | str) -> Column:
@@ -245,41 +247,21 @@ def minhash_signatures(
     their DuckDB oracles replay Jaccard on the literal shingle sets.
     The two representations produce different signature values and
     band keys, so they must never be mixed across a precomputed corpus
-    and an increment — the output carries a ``_sig_repr`` stamp
-    enforced alongside ``_sig_impl``.
+    and an increment — the output carries a ``_sig_repr`` stamp that
+    the incremental entry points enforce.
 
     Each slot j must induce an **independent ordering** of the shingle
     set (affine tricks like Kirsch-Mitzenmacher double hashing fail —
     the base-hash term dominates the ordering, making one shingle win
-    every slot), so both implementations hash the shingle string once
-    and re-mix the 64-bit value per slot:
-
-    - ``impl="arrow"`` (default): shingle strings hash JVM-side
-      (``xxhash64``, one interpreted lambda eval per shingle), then an
-      Arrow-batched pandas UDF computes all ``num_hashes`` slot minima
-      in numpy (``splitmix64(h ^ seed_j)`` + segmented min). Spark
-      evaluates higher-order lambdas INTERPRETED — the pure-expression
-      fold below costs |shingles| × num_hashes lambda evaluations per
-      document (~64 M for sf0.1), which dominates the whole dedup
-      pipeline; the vectorized path does the same arithmetic at C
-      speed and cuts signature materialization ~3× at sf0.1. This is
-      exactly the sanctioned Pandas-UDF use: semantics the built-in
-      operators only express via interpreted lambdas.
-    - ``impl="fold"``: pure JVM expressions, zero Python workers —
-      slot hash ``xxhash64(xxhash64(s), j)``, one ``aggregate`` fold
-      updating every slot via ``zip_with(acc, hashes, least)``. The
-      expression tree is constant-size in ``num_hashes`` (the naive
-      per-slot ``array_min(transform(...))`` formulation costs ~18 s
-      of one-time janino codegen at 64 slots). Use where Python
-      workers/Arrow are unavailable.
-
-    The two families produce different signature VALUES but the same
-    statistical guarantees; band-collision recall bounds (q36 gate
-    docstring) hold for either. Never mix implementations across a
-    precomputed-signature corpus and an increment — the output carries
-    a ``_sig_impl`` stamp column and the incremental entry points
-    ENFORCE it (a corpus persisted under ``fold`` band-matches nothing
-    against an ``arrow``-signed batch, silently returning zero dups).
+    every slot), so the shingle is hashed once and its 64-bit value
+    re-mixed per slot: an Arrow-batched pandas UDF computes all
+    ``num_hashes`` slot minima in numpy (``splitmix64(h ^ seed_j)`` +
+    segmented min). Spark evaluates higher-order lambdas INTERPRETED,
+    so a pure-expression fold would cost |shingles| × num_hashes
+    lambda evaluations per document (~64 M for sf0.1) and dominate the
+    whole dedup pipeline; the vectorized kernel does the same
+    arithmetic at C speed (~3× faster signature materialization at
+    sf0.1). ``impl`` accepts only ``"arrow"``.
 
     The input is pre-spread to the session's parallelism when the scan
     plans fewer partitions than cores (one small file ⇒ one partition ⇒
@@ -287,6 +269,8 @@ def minhash_signatures(
     :func:`..skew.ensure_parallelism` — a no-op at any real scale)."""
     from db2pq_spark.operators.skew import ensure_parallelism
 
+    if impl != "arrow":
+        raise ValueError(f"unknown minhash impl {impl!r} — 'arrow'")
     if shingle_repr == "hash":
         base = with_shingle_hashes(ensure_parallelism(df), text_col,
                                    id_col, shingle_n)
@@ -298,27 +282,9 @@ def minhash_signatures(
     else:
         raise ValueError(f"unknown shingle_repr {shingle_repr!r} — "
                          "'hash' or 'text'")
-    stamp = F.lit(impl).alias("_sig_impl")
-    rstamp = F.lit(shingle_repr).alias("_sig_repr")
-
-    if impl == "arrow":
-        sig = _minhash_from_hashes_udf(num_hashes)(hs).alias("sig")
-        return base.select("id", "shingles", sig, stamp, rstamp)
-    if impl != "fold":
-        raise ValueError(f"unknown minhash impl {impl!r}")
-
-    max_long = (1 << 63) - 1
-    seeds = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-    sig = F.aggregate(
-        hs,
-        F.array_repeat(F.lit(max_long), num_hashes),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(seeds, lambda j: F.xxhash64(h, j)),
-            lambda x, y: F.least(x, y),
-        ),
-    ).alias("sig")
-    return base.select("id", "shingles", sig, stamp, rstamp)
+    sig = _minhash_from_hashes_udf(num_hashes)(hs).alias("sig")
+    return base.select("id", "shingles", sig,
+                       F.lit(shingle_repr).alias("_sig_repr"))
 
 
 def _bucket_pairs(
@@ -400,19 +366,8 @@ def minhash_dedup(
     rows_per_band = num_hashes // bands
     sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n,
                               impl=impl, shingle_repr=shingle_repr)
-    # The signature relation feeds multiple plan branches (bucket
-    # self-join, two verify sides). Without materialization Spark
-    # recomputes shingling+hashing per branch — staging makes the
-    # dedup linear in corpus size. localCheckpoint (serialized row
-    # blocks, MEMORY_AND_DISK) rather than DataFrame.persist: the
-    # columnar InMemoryRelation build is expensive for array<string>
-    # shingle columns (measured ~1.3x slower whole-op at sf0.1 — the
-    # cache build cost more than it saved). Tradeoff:
-    # truncated lineage means an executor loss fails the job loudly
-    # instead of recomputing (same documented stance as
-    # operators/ranking.py); blocks are freed by the ContextCleaner
-    # when the result is garbage-collected.
-    sigs = sigs.localCheckpoint(eager=False)
+    # three consumers: the bucket self-join and both verify sides
+    sigs = stage(sigs)
 
     band_entries = _band_key_entries(bands, rows_per_band)
     buckets = sigs.select("id", band_entries).select("id", "bk.band", "bk.key")
@@ -512,77 +467,36 @@ def _minhash_dedup_incremental_cached(
     )
     if {"id", "shingles", "sig"}.issubset(set(corpus.columns)):
         csig = corpus  # precomputed signature relation
-        has_stamp = "_sig_impl" in csig.columns
         head = csig.select(F.size("sig").alias("n")).head(1)
         if head and head[0]["n"] != num_hashes:
             raise ValueError(
                 f"precomputed corpus signatures carry {head[0]['n']} "
                 f"minhashes but num_hashes={num_hashes} was requested — "
                 "band keys would be derived from mismatched slices")
-        # signature VALUES differ between impls (arrow: splitmix64 mix,
-        # fold: xxhash64(h, j)) — a mixed corpus/batch pair band-matches
-        # NOTHING and silently reports zero duplicates, so the stamp is
-        # enforced, not just documented. The check runs over the
-        # DISTINCT stamp values, not head(1): a corpus accidentally
-        # assembled as a UNION of fold- and arrow-signed relations
-        # would pass a first-row probe and still silently match nothing
-        # for the mismatched half. Partial aggregation collapses the
-        # stamp column to ≤|impls| rows per partition, so the probe job
-        # is trivially cheap (and reads from cache when the corpus
-        # relation is persisted, as the streaming wrapper does).
-        if head and has_stamp:
-            # A corpus unioned with allowMissingColumns=True carries
-            # NULL stamps on the unstamped half — those rows get the
-            # unstamped WARNING below, not a TypeError from sorting
-            # str against None.
-            raw = [r[0] for r in csig.select("_sig_impl").distinct()
-                   .limit(3).collect()]
-            impls = sorted(v for v in raw if v is not None)
-            if None in raw:
-                import warnings
-
-                warnings.warn(
-                    "some precomputed corpus signatures carry a NULL "
-                    "_sig_impl stamp (union with an unstamped "
-                    f"relation?) — assuming impl={impl!r} for those "
-                    "rows; re-persist via minhash_signatures() to make "
-                    "the implementation mismatch check effective",
-                    stacklevel=3)
-            if len(impls) > 1:
-                raise ValueError(
-                    f"precomputed corpus signatures mix implementations "
-                    f"{impls} (union of separately-signed relations?) — "
-                    "mixed-impl signatures share no band keys; re-sign "
-                    "the corpus with one impl via minhash_signatures()")
-            if impls and impls[0] != impl:
-                raise ValueError(
-                    f"precomputed corpus signatures were built with "
-                    f"impl={impls[0]!r} but the batch would be signed "
-                    f"with impl={impl!r} — mixed implementations share "
-                    "no band keys and would silently match zero "
-                    f"duplicates; pass impl={impls[0]!r}")
-        if not has_stamp:
-            import warnings
-
-            warnings.warn(
-                "precomputed corpus signatures carry no _sig_impl stamp "
-                f"(pre-round-6 relation?) — assuming impl={impl!r}; "
-                "re-persist via minhash_signatures() to make the "
-                "implementation mismatch check effective",
-                stacklevel=3)
-        # the shingle REPRESENTATION is enforced the same way: hash-
-        # and text-repr signatures derive band keys from different
-        # base hashes and share none, and the exact-Jaccard verify
-        # would compare long arrays against string arrays
+        # corpora signed by the former pure-JVM kernel carry a
+        # _sig_impl stamp other than "arrow"; their signature values
+        # share no band keys with an arrow-signed batch, so probing
+        # them would silently match zero duplicates
+        if "_sig_impl" in csig.columns and csig.where(
+                F.col("_sig_impl") != "arrow").head(1):
+            raise ValueError(
+                "precomputed corpus signatures carry a _sig_impl "
+                "stamp other than 'arrow' — they were built by a "
+                "removed signature kernel and share no band keys with "
+                "the batch; re-sign the corpus via minhash_signatures()")
+        # the shingle REPRESENTATION is enforced: hash- and text-repr
+        # signatures derive band keys from different base hashes and
+        # share none, and the exact-Jaccard verify would compare long
+        # arrays against string arrays
         if head and "_sig_repr" in csig.columns:
             rraw = [r[0] for r in csig.select("_sig_repr").distinct()
                     .limit(3).collect()]
             reprs = sorted(v for v in rraw if v is not None)
             if None in rraw:
-                # mirror the _sig_impl NULL handling: a corpus unioned
-                # with allowMissingColumns=True carries NULL stamps on
-                # the unstamped half — surface it instead of silently
-                # dropping the NULLs before the mix/mismatch checks.
+                # a corpus unioned with allowMissingColumns=True
+                # carries NULL stamps on the unstamped half — surface
+                # it instead of silently dropping the NULLs before the
+                # mix/mismatch checks.
                 import warnings
 
                 warnings.warn(
@@ -654,7 +568,7 @@ def _minhash_dedup_incremental_cached(
     bkeys = bbuckets.select("band", "key").distinct()
     hits = cbuckets.join(F.broadcast(bkeys), ["band", "key"])
     if max_bucket is not None:
-        hits = hits.localCheckpoint(eager=False)
+        hits = stage(hits)
         hot = (hits.groupBy("band", "key").count()
                .filter(F.col("count") > max_bucket)
                .select("band", "key"))
@@ -973,10 +887,8 @@ def winnow_fingerprints(
     families share NO values, so a persisted fingerprint corpus probed
     by a batch built with the other family would silently match
     nothing; :func:`winnow_overlap_incremental` enforces the stamp
-    (same discipline as the MinHash ``_sig_impl``/``_sig_repr``
-    stamps)."""
-    return _winnow_stage(df, text_col, id_col, k, w, token_hash,
-                         stage="none") \
+    (same discipline as the MinHash ``_sig_repr`` stamp)."""
+    return _winnow_arrays(df, text_col, id_col, k, w, token_hash) \
         .select("id", F.explode("_fps").alias("fp"),
                 F.lit(token_hash).alias("_fp_hash"))
 
@@ -1090,16 +1002,13 @@ def _winnow_from_hashes_udf(k: int, w: int):
     return series_pandas_udf(winnow_from_hashes, "array<bigint>")
 
 
-def _winnow_stage(df: DataFrame, text_col: str, id_col: str,
-                  k: int, w: int, token_hash: str,
-                  stage: str) -> DataFrame:
+def _winnow_arrays(df: DataFrame, text_col: str, id_col: str,
+                   k: int, w: int, token_hash: str) -> DataFrame:
     """Per-doc (id, _fps) winnowed-fingerprint arrays, built fully
-    in-row with each intermediate array staged behind a Generate
-    barrier (:func:`_stage_col` — evaluated once per row at every
-    ``stage`` mode), then materialized per ``stage`` (same semantics
-    and rationale as :func:`_span_stage` — the lambdas here defeat
-    exchange-reuse canonicalization, so an un-staged multi-consumer
-    plan re-runs the whole fingerprint pass per consumer)."""
+    in-row with each intermediate array behind a Generate barrier
+    (:func:`_stage_col` — evaluated once per row). Unstaged: the
+    lambdas here defeat exchange-reuse canonicalization, so a
+    multi-consumer caller stages the result itself."""
     from db2pq_spark.operators.skew import ensure_parallelism
 
     base = (
@@ -1140,23 +1049,13 @@ def _winnow_stage(df: DataFrame, text_col: str, id_col: str,
             lambda i: F.array_min(F.slice(F.col("_kh"), i, w)),
         ))
         staged = staged.select("id", wins.alias("_fps"))
-    if stage == "checkpoint":
-        return staged.localCheckpoint(eager=False)
-    if stage == "persist":
-        from pyspark import StorageLevel
-
-        return staged.persist(StorageLevel.DISK_ONLY)
-    if stage == "none":
-        return staged
-    raise ValueError(f"unknown stage {stage!r} — expected "
-                     "'checkpoint', 'persist' or 'none'")
+    return staged
 
 
 def winnow_overlap_pairs(
     df: DataFrame, text_col: str, id_col: str,
     k: int = 5, w: int = 4, min_shared: int = 2,
     max_bucket: int | None = 1000, token_hash: str = "arrow64",
-    stage: str = "checkpoint",
 ) -> DataFrame:
     """Document pairs sharing ≥ ``min_shared`` winnowed fingerprints —
     MOSS-style overlap candidates with a deterministic guarantee (every
@@ -1170,15 +1069,13 @@ def winnow_overlap_pairs(
     are dropped before the self-join; surviving buckets self-join and
     collapse to per-pair shared counts in one aggregate. Never sorts,
     never goes corpus-quadratic. The per-doc fingerprint arrays are
-    staged ONCE (:func:`_winnow_stage`, ``stage`` knob as
-    :func:`_span_stage`): the hot-cap count and both self-join sides
-    all explode bare longs off the materialized relation instead of
-    re-running the fingerprint pass — three consumers, and every
-    lambda in the pass defeats exchange-reuse canonicalization, so the
+    staged ONCE (:func:`..staging.stage`): the hot-cap count and both
+    self-join sides all explode bare longs off the materialized
+    relation instead of re-running the fingerprint pass — the
     un-staged shape really fingerprints the corpus three times (it
     measured ~3× slower at the 100× replica)."""
-    staged = _winnow_stage(df, text_col, id_col, k, w, token_hash,
-                           stage)
+    staged = stage(_winnow_arrays(df, text_col, id_col, k, w,
+                                  token_hash))
     fps = staged.select("id", F.explode("_fps").alias("fp"))
     if max_bucket is not None:
         hot = (fps.groupBy("fp").count()
@@ -1204,7 +1101,7 @@ def winnow_overlap_incremental(
     batch: DataFrame, corpus: DataFrame, text_col: str, id_col: str,
     k: int = 5, w: int = 4, min_shared: int = 2,
     max_bucket: int | None = 1000, token_hash: str = "arrow64",
-    stage: str = "checkpoint", precomputed: bool | None = None,
+    precomputed: bool | None = None,
 ) -> DataFrame:
     """Which NEW documents share ≥ ``min_shared`` winnowed fingerprints
     with an EXISTING corpus — (batch_id, corpus_id, shared_fps). The
@@ -1213,10 +1110,10 @@ def winnow_overlap_incremental(
     every batch/corpus pair sharing a ≥ w+k−1-token run WILL surface
     (modulo the ``max_bucket`` cap), deterministically.
 
-    Scale shape — the corpus never shuffles, and is never checkpointed:
+    Scale shape — the corpus never shuffles, and is never staged:
 
     - the batch (the small side by contract, a daily crawl increment)
-      fingerprints ONCE (materialized per ``stage``) and its distinct
+      fingerprints ONCE (staged) and its distinct
       fingerprint keys BROADCAST as a semi filter over the corpus
       before anything else — a corpus fingerprint absent from the
       batch can neither produce an overlap row nor change the hot-ness
@@ -1249,19 +1146,9 @@ def winnow_overlap_incremental(
     bfp = (winnow_fingerprints(batch, text_col, id_col, k, w,
                                token_hash)
            .select(F.col("id").alias("batch_id"), "fp"))
-    # the batch fingerprint relation has two consumers below (the
-    # distinct-key semi filter and the final pair join) and the
-    # fingerprint pass's lambdas defeat exchange-reuse — materialize it
-    # once so the batch is fingerprinted once, not twice
-    if stage == "checkpoint":
-        bfp = bfp.localCheckpoint(eager=False)
-    elif stage == "persist":
-        from pyspark import StorageLevel
-
-        bfp = bfp.persist(StorageLevel.DISK_ONLY)
-    elif stage != "none":
-        raise ValueError(f"unknown stage {stage!r} — expected "
-                         "'checkpoint', 'persist' or 'none'")
+    # two consumers below: the distinct-key semi filter and the final
+    # pair join
+    bfp = stage(bfp)
     # Deciding "is this a fingerprint relation?" from the column-name
     # SHAPE alone is fragile: a raw-document DataFrame that happens to
     # carry id/fp columns would silently skip tokenization. The stamp
@@ -1317,8 +1204,8 @@ def winnow_overlap_incremental(
         # the raw path needs no staged materialization of the full
         # corpus fingerprint relation — one narrow pass, no checkpoint
         # write of anything corpus-sized
-        cfp = (_winnow_stage(corpus, text_col, id_col, k, w,
-                             token_hash, stage="none")
+        cfp = (_winnow_arrays(corpus, text_col, id_col, k, w,
+                              token_hash)
                .select(F.col("id").alias("corpus_id"),
                        F.explode("_fps").alias("fp")))
     # broadcast the batch's DISTINCT fingerprint keys as a semi filter
@@ -1333,14 +1220,9 @@ def winnow_overlap_incremental(
     hits = cfp.join(F.broadcast(bkeys), "fp")
     if max_bucket is not None:
         # two consumers of the matched relation (the hot count and the
-        # pair join) — materialize the small matched relation, not the
+        # pair join) — stage the small matched relation, not the
         # corpus fingerprints
-        if stage == "checkpoint":
-            hits = hits.localCheckpoint(eager=False)
-        elif stage == "persist":
-            from pyspark import StorageLevel
-
-            hits = hits.persist(StorageLevel.DISK_ONLY)
+        hits = stage(hits)
         hot = (hits.groupBy("fp").count()
                .filter(F.col("count") > max_bucket).select("fp"))
         hits = hits.join(F.broadcast(hot), "fp", "left_anti")
@@ -1440,25 +1322,14 @@ def _span_hashes(df: DataFrame, text_col: str, id_col: str, n: int,
 
 
 def _span_stage(df: DataFrame, text_col: str, id_col: str, n: int,
-                span_hash: str, stage: str,
-                keep_tokens: bool) -> DataFrame:
+                span_hash: str, keep_tokens: bool) -> DataFrame:
     """The shared span-family staging relation: per-doc
     (id[, _toks], _sh) where ``_sh`` is the in-row span-key array
     (:func:`_span_hash_expr`) — one tokenize+hash pass over the
-    corpus, materialized per ``stage`` so every consumer (key
-    counting, occurrence extraction, rebuilds) re-reads it instead of
-    re-running the pass (a lambda inside ``Generate`` defeats
-    exchange-reuse canonicalization, so the un-materialized shape
-    really re-executes per consumer — it was ~2/3 of the span family's
-    runtime at the 100× replica).
-
-    ``stage``: ``"checkpoint"`` (default everywhere) localCheckpoints
-    — fastest, but blocks are executor-local and lineage-free, so a
-    lost executor fails the job (fine single-node / external-shuffle
-    deployments); ``"persist"`` is DISK_ONLY persistence WITH lineage
-    — the cluster-safe choice under executor churn; ``"none"``
-    recomputes per consumer (lowest footprint, ~2 extra corpus
-    passes)."""
+    corpus, staged once so every consumer (key counting, occurrence
+    extraction, rebuilds) re-reads it instead of re-running the pass
+    (the un-staged shape really re-executes per consumer — it was ~2/3
+    of the span family's runtime at the 100× replica)."""
     staged = (df.filter(F.col(text_col).isNotNull()
                         & (F.trim(F.col(text_col)) != ""))
               .select(F.col(id_col).alias("id"),
@@ -1469,24 +1340,13 @@ def _span_stage(df: DataFrame, text_col: str, id_col: str, n: int,
             "id", "_toks",
             F.transform("_toks", lambda t: F.xxhash64(t)).alias("_th"))
     cols = ["id", "_toks"] if keep_tokens else ["id"]
-    staged = staged.select(*cols, _span_hash_expr(n, span_hash)
-                           .alias("_sh"))
-    if stage == "checkpoint":
-        return staged.localCheckpoint(eager=False)
-    if stage == "persist":
-        from pyspark import StorageLevel
-
-        return staged.persist(StorageLevel.DISK_ONLY)
-    if stage == "none":
-        return staged
-    raise ValueError(f"unknown stage {stage!r} — expected "
-                     "'checkpoint', 'persist' or 'none'")
+    return stage(staged.select(*cols, _span_hash_expr(n, span_hash)
+                               .alias("_sh")))
 
 
 def duplicate_spans(
     df: DataFrame, text_col: str, id_col: str,
     n: int = 20, min_count: int = 2, span_hash: str = "xxhash64",
-    stage: str = "checkpoint",
 ) -> DataFrame:
     """Exact-substring duplicate detection, after Lee et al.,
     *Deduplicating Training Data Makes Language Models Better*
@@ -1517,11 +1377,11 @@ def duplicate_spans(
 
     ``span_hash`` picks the span equality key — see :func:`_span_key`
     (``xxhash64`` production default; ``md5`` for engine-replayable
-    oracles). ``stage``: see :func:`_span_stage`."""
+    oracles)."""
     from db2pq_spark.operators.skew import ensure_parallelism
 
     staged = _span_stage(ensure_parallelism(df), text_col, id_col, n,
-                         span_hash, stage, keep_tokens=False)
+                         span_hash, keep_tokens=False)
     per_doc = (staged.where(F.size("_sh") > 0)
                .select("id", F.size("_sh").alias("n_spans")))
     g = staged.select("id", F.explode("_sh").alias("h"))
@@ -1544,7 +1404,6 @@ def duplicate_spans(
 def duplicate_span_positions(
     df: DataFrame, text_col: str, id_col: str,
     n: int = 20, min_count: int = 2, span_hash: str = "xxhash64",
-    stage: str = "checkpoint",
 ) -> DataFrame:
     """Positions of duplicated n-token spans: (id, pos, span_count) for
     every span whose corpus-wide count reaches ``min_count`` — the
@@ -1554,7 +1413,7 @@ def duplicate_span_positions(
     from db2pq_spark.operators.skew import ensure_parallelism
 
     staged = _span_stage(ensure_parallelism(df), text_col, id_col, n,
-                         span_hash, stage, keep_tokens=False)
+                         span_hash, keep_tokens=False)
     g = staged.select("id", F.posexplode("_sh").alias("pos", "h"))
     dup_counts = (
         g.groupBy("h").agg(F.count("*").alias("span_count"))
@@ -1569,7 +1428,7 @@ def duplicate_span_positions(
 def remove_duplicate_spans(
     df: DataFrame, text_col: str, id_col: str,
     n: int = 20, min_count: int = 2, span_hash: str = "xxhash64",
-    stage: str = "checkpoint", keep: str = "none",
+    keep: str = "none",
 ) -> DataFrame:
     """Cut duplicated n-token spans OUT of each document — the removal
     pass that completes the Lee et al. (arXiv:2107.06499)
@@ -1594,7 +1453,7 @@ def remove_duplicate_spans(
 
     - the corpus collapses to a per-doc staging relation
       (id, tokens, span-key array) — built in-row and materialized
-      ONCE (``stage``, below). Every later pass (key counting, start
+      ONCE (:func:`_span_stage`). Every later pass (key counting, start
       extraction, the rebuild join) re-reads this relation instead of
       re-tokenizing and re-hashing the corpus: a lambda inside
       ``Generate`` defeats exchange-reuse canonicalization, so the
@@ -1620,14 +1479,13 @@ def remove_duplicate_spans(
     the suite's worst 100× ratio). Like the detection pass: aggregate,
     don't sort; never pairs, never quadratic.
 
-    ``stage`` picks how the staging relation is materialized — see
-    :func:`_span_stage`. ``span_hash``: see :func:`_span_key`."""
+    ``span_hash``: see :func:`_span_key`."""
     from db2pq_spark.operators.skew import ensure_parallelism
 
     if keep not in ("none", "one"):
         raise ValueError(f"keep={keep!r} — 'none' or 'one'")
     staged = _span_stage(ensure_parallelism(df), text_col, id_col, n,
-                         span_hash, stage, keep_tokens=True)
+                         span_hash, keep_tokens=True)
     base = staged.select("id", "_toks")
     g = staged.select("id", F.posexplode("_sh").alias("pos", "h"))
     # the same count aggregate also picks each key's exemplar when

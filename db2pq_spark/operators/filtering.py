@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from db2pq_spark.operators.dedup import normalize_text
 from db2pq_spark.operators.textstats import stopword_count, tokens
+from db2pq_spark.staging import stage
 
 
 def _pct(x: float, what: str) -> int:
@@ -189,13 +190,10 @@ def _line_repr(normalize: bool, line_key: str) -> str:
 
 
 def _line_stage(df: DataFrame, text_col: str, id_col: str,
-                normalize: bool, line_key: str,
-                stage: str) -> DataFrame:
+                normalize: bool, line_key: str) -> DataFrame:
     """Shared staging relation (id, _lines, _lk): per-doc line array +
-    per-line key array, materialized per ``stage`` (see
-    :func:`..dedup._span_stage` for the checkpoint/persist/none
-    trade) so the count pass and the rebuild pass re-read it instead
-    of re-splitting the corpus."""
+    per-line key array, staged once so the count pass and the rebuild
+    pass re-read it instead of re-splitting the corpus."""
     if line_key not in ("xxhash64", "text"):
         raise ValueError(f"unknown line_key {line_key!r} — expected "
                          "'xxhash64' or 'text'")
@@ -203,21 +201,11 @@ def _line_stage(df: DataFrame, text_col: str, id_col: str,
         F.col(id_col).alias("id"),
         F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
         .alias("_lines"))
-    staged = staged.select(
+    return stage(staged.select(
         "id", "_lines",
         F.transform("_lines",
                     lambda ln: _line_key_col(ln, normalize, line_key))
-        .alias("_lk"))
-    if stage == "checkpoint":
-        return staged.localCheckpoint(eager=False)
-    if stage == "persist":
-        from pyspark import StorageLevel
-
-        return staged.persist(StorageLevel.DISK_ONLY)
-    if stage == "none":
-        return staged
-    raise ValueError(f"unknown stage {stage!r} — expected "
-                     "'checkpoint', 'persist' or 'none'")
+        .alias("_lk")))
 
 
 def remove_repeated_lines(
@@ -227,7 +215,6 @@ def remove_repeated_lines(
     max_occurrences: int = 1,
     normalize: bool = True,
     line_key: str = "xxhash64",
-    stage: str = "checkpoint",
 ) -> DataFrame:
     """Corpus-level repeated-line (boilerplate) removal, after
     CCNet (Wenzek et al., arXiv:1911.00359 §3, paragraph-hash dedup)
@@ -251,9 +238,7 @@ def remove_repeated_lines(
     oracles, same result modulo 64-bit collisions).
 
     Scale: the document text NEVER travels through a shuffle. One
-    staged per-doc pass (id, lines, keys) — materialized per
-    ``stage``, see :func:`..dedup._span_stage` for the
-    checkpoint/persist/none trade — then (1) bare keys explode
+    staged per-doc pass (id, lines, keys) — then (1) bare keys explode
     through a map-side-combined count whose ``> max_occurrences``
     survivors are the boilerplate key set (vocabulary-sized: its
     cardinality is ≤ total_lines/max_occurrences and real corpora
@@ -270,8 +255,7 @@ def remove_repeated_lines(
     if int(max_occurrences) < 1:
         raise ValueError(f"max_occurrences={max_occurrences} must be "
                          ">= 1 (1 = keep only corpus-unique lines)")
-    staged = _line_stage(df, text_col, id_col, normalize, line_key,
-                         stage)
+    staged = _line_stage(df, text_col, id_col, normalize, line_key)
     occ = staged.select("id", F.explode("_lk").alias("_k"))
     boiler = (occ.groupBy("_k").agg(F.count("*").alias("_c"))
               .filter(F.col("_c") > int(max_occurrences))
@@ -355,7 +339,6 @@ def remove_repeated_lines_incremental(
     max_occurrences: int = 1,
     normalize: bool = True,
     line_key: str = "xxhash64",
-    stage: str = "checkpoint",
 ) -> DataFrame:
     """Clean a NEW-CRAWL batch against the standing corpus's
     persisted line-frequency state (:func:`repeated_line_counts`)
@@ -405,8 +388,7 @@ def remove_repeated_lines_incremental(
             "are incompatible and the probe would silently drop "
             "nothing; pass the matching line_key/normalize")
 
-    staged = _line_stage(batch, text_col, id_col, normalize, line_key,
-                         stage)
+    staged = _line_stage(batch, text_col, id_col, normalize, line_key)
     occ = staged.select("id", F.explode("_lk").alias("_k"))
     batch_cnt = occ.groupBy("_k").agg(F.count("*").alias("_bc"))
     # state-side discipline: semi-filter the persisted counts by the

@@ -36,7 +36,7 @@ node, one destination-keyed partial+final SUM, one 1-row dangling
 aggregate broadcast back. The edge relation is the corpus-sized input;
 ranks are node-sized. Nothing node- or edge-sized is ever collected —
 the node count rides as a 1-row broadcast relation. The rank relation
-is ``localCheckpoint``-ed per step (the :mod:`.components` iteration
+is staged eagerly per step (the :mod:`.components` iteration
 discipline — each rank state is referenced three times by the next
 step, so an unchecked lineage re-derives the whole prefix 3^k times),
 and the edge/degree relations once up front. Skewed in-degree (a hub
@@ -49,6 +49,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from db2pq_spark.staging import stage
 
 __all__ = ["pagerank", "host_rank_weights", "extract_host"]
 
@@ -113,13 +115,12 @@ def pagerank(
     else:
         node_rel = nodes.select(F.col(node_col).alias("node")).distinct()
     # NOTE (r13, measured): pre-partitioning the edge relation by
-    # _src buys nothing here — localCheckpoint under AQE erases
-    # outputPartitioning (Scan ExistingRDD reports
-    # UnknownPartitioning), and a persist()-based variant that does
+    # _src buys nothing here — staging under AQE erases
+    # outputPartitioning, and a persist()-based variant that does
     # preserve it measured slower and far noisier at bench scale
-    # (memory pressure) than the plain checkpoint. The per-iteration
+    # (memory pressure) than the plain stage. The per-iteration
     # rank side is node-sized and broadcast-eligible anyway.
-    e = e.localCheckpoint(eager=True)
+    e = stage(e, eager=True)
     # degree attach: no manual hint needed here — outdeg arrives
     # through its own aggregation exchange, so AQE sees its ACTUAL
     # size at runtime and picks the broadcast join itself when it
@@ -129,15 +130,14 @@ def pagerank(
     # before the count below has measured them.
     outdeg = e.groupBy(F.col("_src").alias("node")) \
         .agg(F.count("*").alias("deg"))
-    base = (node_rel.join(outdeg, "node", "left")
-            .select("node",
-                    F.coalesce(F.col("deg"), F.lit(0)).cast("bigint")
-                    .alias("deg"))
-            .localCheckpoint(eager=False))
-    # base is checkpointed LAZILY (r14): the 1-row stats collect below
-    # is sequenced strictly first among its consumers, so it
+    base = stage(node_rel.join(outdeg, "node", "left")
+                 .select("node",
+                         F.coalesce(F.col("deg"), F.lit(0))
+                         .cast("bigint").alias("deg")))
+    # base is staged LAZILY (r14): the 1-row stats collect below is
+    # sequenced strictly first among its consumers, so it
     # materializes the blocks inside its own job — one init job
-    # instead of an eager-checkpoint job plus the collect. N and the
+    # instead of an eager-stage job plus the collect. N and the
     # initial dangling mass (Σ start mass over out-degree-0 nodes)
     # ride the same collect.
     stats = base.agg(
@@ -229,8 +229,8 @@ def pagerank(
         ndang = upd.where(F.col("deg") == 0) \
             .agg(F.coalesce(F.sum("ru"), F.lit(0)).cast("bigint")
                  .alias("dang"))
-        r = (upd.crossJoin(F.broadcast(ndang))
-             .localCheckpoint(eager=True))
+        # eager: cuts the per-step lineage before the next iteration
+        r = stage(upd.crossJoin(F.broadcast(ndang)), eager=True)
     return r.select("node", F.col("ru").alias("rank_units"))
 
 

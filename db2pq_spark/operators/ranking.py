@@ -19,19 +19,17 @@ classic two-stage construction here keeps every step partition-parallel:
 The result is the exact global rank for any total ordering, with no
 single-partition stage.
 
-The staged input is pinned with ``localCheckpoint``: the range
+The staged input is pinned (:func:`..staging.stage`): the range
 sampler's boundaries (and therefore the partition ids the
 driver-collected offsets are keyed by) depend on the execution's RDD
 ids, so a re-execution could land rows in different partitions than
-the offsets assume. Checkpointing materializes one specific
-partitioning that both the sizes pass and the ranked output read —
-re-sampling is structurally impossible, concurrent calls share
-nothing, and the blocks are released by the ContextCleaner when the
-result DataFrame is garbage-collected (no session-lifetime leak). On
+the offsets assume. Staging materializes one specific partitioning
+that both the sizes pass and the ranked output read — re-sampling is
+structurally impossible and concurrent calls share nothing; on
 executor loss the truncated lineage fails the job loudly instead of
-silently recomputing into different partitions. The checkpoint is
-lazy since r14 — the sizes/offsets collect materializes it inside its
-own job (see ``_stage``), one driver barrier fewer per call.
+silently recomputing into different partitions. The stage is lazy
+since r14 — the sizes/offsets collect materializes it inside its own
+job (see ``_stage``), one driver barrier fewer per call.
 
 Small inputs: when the caller can bound the row count (``bounded=``),
 a constant-key single-partition window is exact and skips the shuffle +
@@ -45,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from db2pq_spark.staging import stage
+
 #: ``bounded`` values at or below this take the one-partition fast path —
 #: a single partition of ≤100k skinny rows is cheaper than a range
 #: shuffle + checkpoint + offset fold, and exact either way.
@@ -55,20 +55,18 @@ def _stage(df: DataFrame, order_by: list[Column]) -> DataFrame:
     """Range-partition on the sort key, attach the partition id, and pin
     the result (see module docstring for why pinning is load-bearing).
 
-    r14 (VERDICT r13 item 6 — merge driver barriers): the checkpoint
-    is LAZY. Every caller's next step is a driver-collected fold over
-    the staged relation (the sizes/offsets pass), and that collect
-    materializes the checkpoint blocks as a side effect of its own
-    job — one job instead of an eager-checkpoint job followed by the
-    collect. The pinning guarantee is unchanged: blocks persist from
-    the first (and only) computation, so the ranked output reads the
-    exact partitioning the offsets were keyed by, and executor loss
-    still fails loudly on the truncated lineage."""
-    return (
-        df.repartitionByRange(*order_by)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
-    )
+    r14 (VERDICT r13 item 6 — merge driver barriers): the stage is
+    LAZY. Every caller's next step is a driver-collected fold over the
+    staged relation (the sizes/offsets pass), and that collect
+    materializes the blocks as a side effect of its own job — one job
+    instead of an eager-stage job followed by the collect. The pinning
+    guarantee rests on that ordering: blocks persist from the first
+    (and only) computation, so the ranked output reads the exact
+    partitioning the offsets were keyed by. A caller whose first
+    action is anything but that sequenced collect (e.g. a broadcast
+    build) reopens the re-sampling hazard."""
+    return stage(df.repartitionByRange(*order_by)
+                 .withColumn("_pid", F.spark_partition_id()))
 
 
 def global_rank_with_total(

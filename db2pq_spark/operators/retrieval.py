@@ -62,7 +62,6 @@ def bm25_scores(
     k1: float = 1.2,
     b: float = 0.75,
     round_digits: int = 4,
-    stage: str = "reuse",
 ) -> DataFrame:
     """Score every document containing ≥1 query term against the term
     set; returns ``(doc_id, bm25 double)`` (unscored docs omitted).
@@ -72,16 +71,11 @@ def bm25_scores(
     cross-engine comparison. NULL text counts as an empty document
     (dl = 0) toward N and avgdl.
 
-    ``stage`` controls the compact per-doc term-count relation that
-    stats/tf/df all derive from: ``"reuse"`` (default) leaves it lazy —
-    every consumer contains the identical (lambda-free, so
-    canonicalizable) aggregate subtree and Spark plans ONE corpus
-    scan + ONE shuffle with ReusedExchange for the rest, recomputing
-    only the cheap final aggregate per consumer; ``"checkpoint"``
-    eagerly localCheckpoints it (pays a fixed materialization job —
-    the executor-loss-sensitive single-node fast path when consumers
-    are many); ``"persist"`` is DISK_ONLY with lineage (the
-    executor-churn-safe cluster choice).
+    The compact per-doc term-count relation that stats/tf/df all
+    derive from is not staged: every consumer contains the identical
+    (lambda-free, so canonicalizable) aggregate subtree and Spark
+    plans ONE corpus scan + ONE shuffle with ReusedExchange for the
+    rest, recomputing only the cheap final aggregate per consumer.
     """
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
@@ -123,20 +117,6 @@ def bm25_scores(
     # true (a group's count is ≥ 1 by construction) but not foldable,
     # so each consumer carries the identical counted aggregate.
     grouped = grouped.where(F.col("_cnt") >= 1)
-    if stage == "checkpoint":
-        # eager: the first consumers are the stats/df BROADCAST jobs,
-        # which the scheduler can launch concurrently — with a lazy
-        # checkpoint both would race to compute the corpus pass
-        # (concurrent jobs don't deduplicate an in-flight RDD), paying
-        # the scan twice; eager materializes it exactly once up front
-        grouped = grouped.localCheckpoint(eager=True)
-    elif stage == "persist":
-        from pyspark import StorageLevel
-
-        grouped = grouped.persist(StorageLevel.DISK_ONLY)
-    elif stage != "reuse":
-        raise ValueError(f"unknown stage {stage!r} — expected "
-                         "'reuse', 'checkpoint' or 'persist'")
 
     stats = (grouped.filter(F.col("term").isNull())
              .agg(F.count(F.lit(1)).alias("n_docs"),

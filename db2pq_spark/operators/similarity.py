@@ -24,6 +24,8 @@ from itertools import combinations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from db2pq_spark.staging import stage
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential-fold dot product of two float arrays, accumulated in
@@ -632,17 +634,17 @@ def embedding_neardup_pairs(
 
         n = corpus.count()
         num_planes = max(8, min(16, math.ceil(math.log2(max(n, 2) / 64))))
-    # checkpoint the signature relation: it feeds both sides of the
-    # self-join AND the skew-count — without staging, the interpreted
-    # per-row plane products recompute per branch. The hot-bucket guard
-    # is a grouped count + broadcast anti join (one narrow aggregate)
+    # stage the signature relation: it feeds both sides of the
+    # self-join AND the skew-count, and the interpreted per-row plane
+    # products would recompute per branch. The hot-bucket guard is a
+    # grouped count + broadcast anti join (one narrow aggregate)
     # instead of a bucket-partitioned window, which shuffled the full
     # vec-carrying relation just to annotate counts (measured ~25%
     # faster at sf0.1, identical pairs).
-    sigs = corpus.select(
+    sigs = stage(corpus.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec"),
         lsh_signature(F.col(vec_col), num_planes, dim).alias("bucket"),
-    ).localCheckpoint(eager=False)
+    ))
     hot = (sigs.groupBy("bucket").count()
            .filter(F.col("count") > max_bucket).select("bucket"))
     sigs = sigs.join(F.broadcast(hot), "bucket", "left_anti")

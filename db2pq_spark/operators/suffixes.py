@@ -59,6 +59,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from db2pq_spark.staging import stage
+
 __all__ = ["longest_dup_span", "position_match_lengths",
            "remove_long_dup_spans"]
 
@@ -93,11 +95,10 @@ def _prepare(df: DataFrame, text_col: str, id_col: str,
     from db2pq_spark.operators.skew import ensure_parallelism
 
     # NOTE (r13, measured): pre-hash-partitioning this relation buys
-    # nothing — localCheckpoint under AQE erases outputPartitioning
-    # (Scan ExistingRDD reports UnknownPartitioning), so downstream
-    # id-joins re-exchange regardless; an A/B at sf0.1 showed no win
-    # for repartition("id") (+checkpoint or +persist) over the plain
-    # parallelism spread. Keep the original shape.
+    # nothing — staging under AQE erases outputPartitioning, so
+    # downstream id-joins re-exchange regardless; an A/B at sf0.1
+    # showed no win for repartition("id") (+checkpoint or +persist)
+    # over the plain parallelism spread. Keep the original shape.
     base = (ensure_parallelism(df)
             .filter(F.col(text_col).isNotNull()
                     & (F.trim(F.col(text_col)) != ""))
@@ -107,8 +108,7 @@ def _prepare(df: DataFrame, text_col: str, id_col: str,
                    & (F.element_at("_tk", 1) != "")))
     kk = (F.transform("_tk", lambda t_: F.xxhash64(t_))
           if keys == "hash" else F.col("_tk"))
-    return base.select("id", "_tk", kk.alias("_kk")) \
-        .localCheckpoint(eager=False)
+    return stage(base.select("id", "_tk", kk.alias("_kk")))
 
 
 def _position_mlens_raw(
@@ -166,7 +166,7 @@ def _position_mlens_raw(
     # the boilerplate scale and empty levels emit nothing).
     # The driver-side span bound (longest document ⇒ top level) is a
     # 1-row bounded collect that also materializes the lazy base
-    # checkpoint. Documents beyond 2^(_INROW_LEVELS+k0) tokens fall
+    # stage. Documents beyond 2^(_INROW_LEVELS+k0) tokens fall
     # back to the classic join-loop continuation below — a runaway
     # guard, not a tuning knob.
     mrow = base.agg(F.max(F.size("_kk")).alias("m")).first()
@@ -223,14 +223,15 @@ def _position_mlens_raw(
     # chain (L × n xxhash64 compositions) over the corpus: the
     # dup-key aggregate and the semi-join probe each computed it, and
     # q149's flat0 branch doubled that again (4 Generate subtrees in
-    # the r13 plan). Checkpointing the PACKED per-doc (level, pos,
-    # key) arrays (lazily — it materializes inside the first job that
+    # the r13 plan). Staging the PACKED per-doc (level, pos, key)
+    # arrays (lazily — it materializes inside the first job that
     # needs it) makes the chains compute ONCE, and the downstream
     # explode is a plain column Generate — lambda-free, so the
     # dup-key aggregate + BroadcastExchange canonicalize and REUSE
     # across branches instead of re-aggregating per consumer.
-    packed = cur.select("id", pairs.alias("_p")) \
-        .localCheckpoint(eager=False)
+    # executor storage: the staged arrays hold ~L × corpus key width
+    # until the result is garbage-collected (SCALE.md, staging)
+    packed = stage(cur.select("id", pairs.alias("_p")))
     lvl_all = (packed.select("id", F.explode("_p").alias("_s"))
                .select("id", F.col("_s.level").alias("level"),
                        F.col("_s.pos").alias("pos"),
@@ -245,13 +246,13 @@ def _position_mlens_raw(
         # executed q149 plan carried the aggregate twice). Pin the
         # DUP-KEY relation — key-cardinality-bounded, tiny next to the
         # corpus — so the aggregate runs once and each branch's probe
-        # is just an explode over the packed checkpoint plus a
+        # is just an explode over the packed stage plus a
         # broadcast semi-join. (Pinning the survivor ROWS instead was
         # measured a wash at the 100× replica: level-0 survivors are
-        # nearly every token position, so that checkpoint wrote a
+        # nearly every token position, so that stage wrote a
         # corpus-sized relation to save a corpus-sized recompute.)
         # Single-branch callers (min_len > 1) skip the barrier.
-        dupk = dupk.localCheckpoint(eager=True)
+        dupk = stage(dupk, eager=True)
     all_surv = lvl_all.join(dupk, ["level", "key"], "left_semi")
 
     # r13: level 0 never enters the extension window. Its buckets are
@@ -275,8 +276,8 @@ def _position_mlens_raw(
     # in-row level budget (runaway guard; never taken on real corpora
     # under the default _INROW_LEVELS)
     if top > l_inrow:
-        surv = all_surv.where(F.col("level") == l_inrow) \
-            .select("id", "pos", "key").localCheckpoint(eager=True)
+        surv = stage(all_surv.where(F.col("level") == l_inrow)
+                     .select("id", "pos", "key"), eager=True)
         step = 1 << l_inrow
         for level in range(l_inrow + 1, MAX_LEVELS):
             right = surv.select(
@@ -289,8 +290,8 @@ def _position_mlens_raw(
             dup_keys = (lvl.groupBy("key")
                         .agg(F.count("*").alias("c"))
                         .where(F.col("c") >= 2).select("key"))
-            surv = lvl.join(dup_keys, "key", "left_semi") \
-                .localCheckpoint(eager=True)
+            surv = stage(lvl.join(dup_keys, "key", "left_semi"),
+                         eager=True)
             if surv.isEmpty():
                 break
             all_surv = all_surv.unionByName(surv.select(

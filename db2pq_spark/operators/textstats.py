@@ -36,26 +36,12 @@ def token_count(col: Column | str) -> Column:
     return F.size(tokens(col))
 
 
-def subword_estimate(col: Column | str) -> Column:
-    """BPE-ish token estimate: ceil(chars / 4) — the standard
-    chars-per-token heuristic, exact integer arithmetic."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.ceil(F.length(c) / F.lit(4)).cast("bigint")
-
-
 def punct_ratio(col: Column | str) -> Column:
     """Punctuation characters / total characters (0 for empty)."""
     c = F.col(col) if isinstance(col, str) else col
     total = F.length(c)
     punct = total - F.length(F.regexp_replace(c, r"[\.,;:!\?]", ""))
     return F.when(total > 0, punct / total).otherwise(F.lit(0.0))
-
-
-def digit_ratio(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    total = F.length(c)
-    digits = total - F.length(F.regexp_replace(c, r"[0-9]", ""))
-    return F.when(total > 0, digits / total).otherwise(F.lit(0.0))
 
 
 def stopword_count(col: Column | str, lang: str = "en") -> Column:
@@ -88,30 +74,6 @@ def quality_score(col: Column | str) -> Column:
         + 0.3 * length_ok
         + 0.3 * (1.0 - F.least(punct_ratio(col) * 10.0, F.lit(1.0))),
         6,
-    )
-
-
-def lang_id(col: Column | str) -> Column:
-    """Stopword-vote language ID with CJK short-circuit.
-
-    Decision function (replayed verbatim by the oracle SQL): if the text
-    contains CJK codepoints → ``zh``; otherwise the language with the
-    highest stopword hit count wins, ties broken in the fixed order
-    en > de > fr > es; zero hits everywhere → ``und``."""
-    c_en = stopword_count(col, "en")
-    c_de = stopword_count(col, "de")
-    c_fr = stopword_count(col, "fr")
-    c_es = stopword_count(col, "es")
-    best = F.greatest(c_en, c_de, c_fr, c_es)
-    raw = F.col(col) if isinstance(col, str) else col
-    return (
-        F.when(raw.isNull(), F.lit("und"))  # null counts would otherwise
-        .when(raw.rlike(r"[一-鿿]"), F.lit("zh"))  # fall through to 'es'
-        .when(best.isNull() | (best == 0), F.lit("und"))
-        .when(c_en == best, F.lit("en"))
-        .when(c_de == best, F.lit("de"))
-        .when(c_fr == best, F.lit("fr"))
-        .otherwise(F.lit("es"))
     )
 
 
@@ -422,7 +384,7 @@ def kn_bigram_stats(df: DataFrame, text_col: str,
     :func:`kneser_ney_bigrams`): a state built under one family
     shares no key values with a probe under the other, so the stamp
     lets the scorer REFUSE instead of silently scoring everything as
-    out-of-vocabulary (the ``_lk_repr``/``_sig_impl`` discipline of
+    out-of-vocabulary (the ``_lk_repr``/``_sig_repr`` discipline of
     the incremental dedup families). The stamp is carried BOTH as a
     column value (authoritative — survives unions of mismatched
     states) and as column-level schema metadata (``{"kn_keys": ...}``,

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from db2pq_spark.operators.bpe import word_freqs
+from db2pq_spark.staging import stage
 
 __all__ = ["unigram_seed", "unigram_train", "unigram_segment_words",
            "unigram_segment", "unigram_vocab_state",
@@ -320,7 +321,7 @@ def unigram_train(
     pruned, characters retained at their usage count — 0 scores the
     floor next round). Returns the final ``(piece, cnt)`` relation.
 
-    Each round's vocabulary is ``localCheckpoint``-pinned: the
+    Each round's vocabulary is staged eagerly: the
     per-round plan would otherwise nest ``rounds`` deep through the
     Arrow kernel (the BPE/k-means lineage guard), and both consumers
     of a round's vocab (scores + floor) read the pinned relation."""
@@ -331,16 +332,14 @@ def unigram_train(
 
 def _word_rel(df: DataFrame, text_col: str,
               max_word_len: int) -> DataFrame:
-    """The bounded distinct-word relation, lazily checkpointed (r13):
+    """The bounded distinct-word relation, lazily staged (r13):
     training and segmentation consumers share ONE tokenize+aggregate
     of the corpus instead of re-deriving it. NOTE (r13, measured): a
-    repartition("word") before the checkpoint buys nothing —
-    localCheckpoint under AQE erases outputPartitioning (Scan
-    ExistingRDD reports UnknownPartitioning), so per-round aggregates
-    re-exchange the compact word relation regardless; the extra
-    exchange only added cost."""
-    return _bounded_words(word_freqs(df, text_col), max_word_len) \
-        .localCheckpoint(eager=False)
+    repartition("word") before the stage buys nothing — staging under
+    AQE erases outputPartitioning, so per-round aggregates re-exchange
+    the compact word relation regardless; the extra exchange only
+    added cost."""
+    return stage(_bounded_words(word_freqs(df, text_col), max_word_len))
 
 
 def _unigram_train_wf(wf: DataFrame, rounds: int, max_piece_len: int,
@@ -350,22 +349,22 @@ def _unigram_train_wf(wf: DataFrame, rounds: int, max_piece_len: int,
     :func:`unigram_segment_words`, which previously re-derived the
     word-frequency relation (a second corpus tokenize + aggregate)
     for its own segmentation pass."""
-    vocab = unigram_seed(wf, max_piece_len, min_count, max_word_len) \
-        .localCheckpoint(eager=True)
-    chars = (wf.select("freq", F.explode(F.split("word", ""))
-                       .alias("piece"))
-             .where(F.col("piece") != "")
-             .select("piece").distinct()
-             .localCheckpoint(eager=False))  # r13: once, not per round
+    vocab = stage(unigram_seed(wf, max_piece_len, min_count,
+                               max_word_len), eager=True)
+    chars = stage(wf.select("freq", F.explode(F.split("word", ""))
+                            .alias("piece"))
+                  .where(F.col("piece") != "")
+                  .select("piece").distinct())  # r13: once, not per round
     for _ in range(rounds):
         seg = _viterbi_words(wf, vocab, max_piece_len)
         usage = (seg.select("freq", F.explode("path").alias("piece"))
                  .groupBy("piece").agg(F.sum("freq").alias("cnt")))
-        vocab = (chars.join(usage, "piece", "left")
-                 .select("piece", F.coalesce("cnt", F.lit(0))
-                         .alias("cnt"))
-                 .unionByName(usage.join(chars, "piece", "left_anti"))
-                 ).localCheckpoint(eager=True)
+        vocab = stage(chars.join(usage, "piece", "left")
+                      .select("piece", F.coalesce("cnt", F.lit(0))
+                              .alias("cnt"))
+                      .unionByName(usage.join(chars, "piece",
+                                              "left_anti")),
+                      eager=True)
     return vocab
 
 

@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 from db2pq_spark.operators.unigram import (
     MAX_PIECE_LEN, MAX_WORD_LEN, _scores, _viterbi_words,
     unigram_seed, unigram_seed_sql, unigram_viterbi_sql)
+from db2pq_spark.staging import stage
 
 __all__ = ["unigram_train_soft", "soft_em_round", "prune_vocab",
            "soft_seed_sql", "soft_round_sql", "soft_prune_sql"]
@@ -293,24 +294,23 @@ def unigram_train_soft(
     micro-units (expected count × 10⁶ — fractional usage is the
     point of soft EM; divide by 10⁶ for raw scale).
 
-    Per-round vocabularies are ``localCheckpoint``-pinned (the
-    BPE/k-means/hard-EM lineage guard)."""
+    Per-round vocabularies are staged eagerly (the BPE/k-means/hard-EM
+    lineage guard)."""
     from db2pq_spark.operators.unigram import _word_rel
 
-    # r13: lazily-checkpointed shared word relation (one corpus
+    # r13: lazily-staged shared word relation (one corpus
     # tokenize+aggregate for seed + every EM round) and a once-derived
     # chars relation shared by every round
     wf = _word_rel(df, text_col, max_word_len)
-    vocab = (unigram_seed(wf, max_piece_len, min_count, max_word_len)
-             .select("piece", (F.col("cnt") * 1_000_000)
-                     .cast("bigint").alias("cnt"))
-             .localCheckpoint(eager=True))
-    chars = (wf.select(F.explode(F.split("word", "")).alias("piece"))
-             .where(F.col("piece") != "").distinct()
-             .localCheckpoint(eager=False))
+    vocab = stage(unigram_seed(wf, max_piece_len, min_count,
+                               max_word_len)
+                  .select("piece", (F.col("cnt") * 1_000_000)
+                          .cast("bigint").alias("cnt")), eager=True)
+    chars = stage(wf.select(F.explode(F.split("word", "")).alias("piece"))
+                  .where(F.col("piece") != "").distinct())
     for _ in range(rounds):
-        vocab = soft_em_round(wf, vocab, max_piece_len, chars=chars) \
-            .localCheckpoint(eager=True)
+        vocab = stage(soft_em_round(wf, vocab, max_piece_len,
+                                    chars=chars), eager=True)
     return prune_vocab(vocab, vocab_size, max_piece_len)
 
 

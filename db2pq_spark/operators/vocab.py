@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from db2pq_spark.operators.textstats import tokens
+from db2pq_spark.staging import stage
 
 
 def build_vocab(df: DataFrame, text_col: str,
@@ -137,9 +138,8 @@ def vocab_coverage(df: DataFrame, text_col: str,
     # count relation once so the corpus explode+aggregate runs exactly
     # one job; without this the `total` branch re-scans and
     # re-tokenizes the corpus (measured 2 FileScans and a 15.5× ratio
-    # at the 100× replica; 1 scan / ~8× after). Blocks are
-    # vocab-sized and released by the ContextCleaner with the result.
-    counts = counts.localCheckpoint(eager=True)
+    # at the 100× replica; 1 scan / ~8× after)
+    counts = stage(counts, eager=True)
     order = [F.desc("freq"), F.asc("token")]
     with_cum = with_global_prefix_sum(
         counts, "freq", order, out_col="cum_before", bounded=bounded)

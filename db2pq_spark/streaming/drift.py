@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from db2pq_spark.sinks.parquet_sink import SIDECAR, table_path
+from db2pq_spark.staging import stage
 from db2pq_spark.streaming.rollup import _applied_batch, _applied_checkpoint
 
 __all__ = ["stream_token_drift", "init_token_counts", "TOKENIZER_ID"]
@@ -103,8 +104,10 @@ def stream_token_drift(
     corpus (all ``cnt_a = 0``) and creates the table. Returns the
     started ``StreamingQuery``.
 
-    ``on_batch`` receives a ``localCheckpoint``-ed k-row relation —
-    valid after the fold, across triggers, and after the query stops.
+    ``on_batch`` receives an eagerly staged k-row relation
+    (:func:`..staging.stage`) — materialized before the fold rewrites
+    the standing table it reads, so it stays valid after the fold,
+    across triggers, and after the query stops.
     """
     final = table_path(engine.data_dir, schema, table)
     stamped = _stamped_tokenizer(final)
@@ -139,8 +142,8 @@ def stream_token_drift(
             ca = engine.spark.createDataFrame(
                 [], "tok string, cnt_a long")
         cb = toks.groupBy("tok").agg(F.count("*").alias("cnt_b"))
-        top = token_drift_counts(ca, cb, alpha=alpha, k=k) \
-            .localCheckpoint(eager=True)
+        top = stage(token_drift_counts(ca, cb, alpha=alpha, k=k),
+                    eager=True)
         on_batch(top, batch_id)
         engine.refresh_rollup(
             toks, schema, table, ["tok"], {},

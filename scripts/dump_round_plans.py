@@ -1,8 +1,9 @@
 #!/usr/bin/env python
-"""Dump .explain("formatted") for round-13 optimization targets.
+"""Dump .explain("formatted") for an optimization round's targets.
 
-Writes plans/r14/<qname>_<tag>.txt for every query name given on the
-command line (tag = first arg: "before" or "after"). The plan captured
+Writes plans/<round>/<qname>_<tag>.txt for every query name given on
+the command line (round = first arg, e.g. "r14"; tag = second arg:
+"before" or "after"). The plan captured
 is the BENCH configuration (bench.py _OVERRIDES when present, else the
 registry entry) — the config whose seconds the optimization round is
 judged on. Iterative operators (pagerank, EM trainers, suffix
@@ -10,7 +11,7 @@ doubling) run driver-side loops whose intermediate actions don't show
 in one final explain; for those the final-plan shape plus the loop
 structure in code is the evidence.
 
-Usage: python scripts/dump_r14_plans.py before q149_longest_dup_span ...
+Usage: python scripts/dump_round_plans.py r14 before q149_longest_dup_span ...
 """
 from __future__ import annotations
 
@@ -24,13 +25,13 @@ from db2pq_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    round_dir, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", "r14")
+        os.path.abspath(__file__))), "plans", round_dir)
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(app_name="dump_r14_plans")
+    spark = get_spark(app_name=f"dump_{round_dir}_plans")
 
     import bench
     from db2pq_spark import workload

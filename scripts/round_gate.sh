@@ -16,16 +16,19 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 R="${1:?usage: round_gate.sh <round-number>}"
 
-echo "== 1/4 full oracle sweep (sf0.01) =="
+echo "== 1/5 full oracle sweep (sf0.01) =="
 python scripts/check_oracle.py --json "FULLGATE_r${R}.json"
 
-echo "== 2/4 test suite (2-shard) =="
+echo "== 2/5 test suite (2-shard) =="
 bash scripts/run_tests.sh
 
-echo "== 3/4 PLANS.md regeneration =="
+echo "== 3/5 PLANS.md regeneration =="
 python scripts/dump_plans.py
 
-echo "== 4/4 bench (solo, timed) =="
+echo "== 4/5 benchmark self-test =="
+python3 perfbench/selftest.py
+
+echo "== 5/5 bench (solo, timed) =="
 python bench.py
 
 echo "round_gate: done — commit FULLGATE_r${R}.json, PLANS.md,"

@@ -449,8 +449,6 @@ class TestRemoveRepeatedLines:
             self._run(spark, max_occurrences=0)
         with _pytest.raises(ValueError, match="line_key"):
             self._run(spark, line_key="md5")
-        with _pytest.raises(ValueError, match="stage"):
-            self._run(spark, stage="cache")
 
 
 class TestRemoveRepeatedLinesIncremental:

@@ -214,6 +214,19 @@ class TestBroadcastAutoDegrade:
             spark.conf.unset(
                 "spark.sql.adaptive.autoBroadcastJoinThreshold")
 
+    def test_step_reuses_node_keyed_exchange(self, spark, monkeypatch):
+        # the next dangling sum is aggregated off the SAME node-keyed
+        # exchange the new ranks come from — the edge-sized contribution
+        # join runs once per step only while that exchange is reused
+        from db2pq_spark.operators import graph as G
+        e = spark.createDataFrame(self.EDGES, "src long, dst long")
+        plans = self._step_plans(monkeypatch)
+        G.pagerank(e, iterations=2).collect()
+        steps = [p for p in plans if "div" in p]
+        assert steps, "no step plans captured"
+        for p in steps:
+            assert "ReusedExchange" in p.split("== Initial Plan ==")[0]
+
     def test_under_cap_keeps_broadcast(self, spark, monkeypatch):
         from db2pq_spark.operators import graph as G
         e = spark.createDataFrame(self.EDGES, "src long, dst long")

@@ -134,10 +134,11 @@ class TestIncrementalDedup:
             minhash_dedup_incremental(batch, csig32, "text", "doc_id",
                                       num_hashes=64)
 
-    def test_mismatched_precomputed_signature_impl_raises(self, docs):
-        # arrow and fold signatures share no band keys — a corpus
-        # persisted under fold probed by an arrow batch would silently
-        # report zero duplicates; the _sig_impl stamp must fail loudly
+    def test_legacy_non_arrow_impl_stamp_raises(self, docs):
+        # corpora signed by the former pure-JVM kernel carry a
+        # _sig_impl stamp other than "arrow"; their signatures share no
+        # band keys with an arrow-signed batch — must fail loudly, not
+        # silently report zero duplicates
         from db2pq_spark.operators.dedup import (
             minhash_dedup_incremental,
             minhash_signatures,
@@ -145,55 +146,18 @@ class TestIncrementalDedup:
 
         batch = docs.filter(F.col("doc_id") == 1)
         corpus = docs.filter(F.col("doc_id") != 1)
-        csig_fold = minhash_signatures(corpus, "text", "doc_id",
-                                       impl="fold")
-        assert "_sig_impl" in csig_fold.columns
-        with pytest.raises(ValueError, match="impl='fold'"):
-            minhash_dedup_incremental(batch, csig_fold, "text", "doc_id",
-                                      impl="arrow")
-        # matching impl passes through
-        assert minhash_dedup_incremental(
-            batch, csig_fold, "text", "doc_id", impl="fold",
-            threshold=0.5).count() > 0
-
-    def test_mixed_impl_union_corpus_raises(self, docs):
-        # a corpus accidentally assembled as a UNION of fold- and
-        # arrow-signed halves passes a first-row probe (round-6 guard)
-        # but still band-matches nothing for the mismatched half — the
-        # guard now validates the DISTINCT stamp values
-        from db2pq_spark.operators.dedup import (
-            minhash_dedup_incremental,
-            minhash_signatures,
-        )
-
-        batch = docs.filter(F.col("doc_id") == 1)
-        half_a = minhash_signatures(
-            docs.filter(F.col("doc_id").isin(2, 3)), "text", "doc_id",
-            impl="fold")
-        half_b = minhash_signatures(
-            docs.filter(~F.col("doc_id").isin(1, 2, 3)), "text",
-            "doc_id", impl="arrow")
-        mixed = half_a.unionByName(half_b)
-        with pytest.raises(ValueError, match="mix implementations"):
-            minhash_dedup_incremental(batch, mixed, "text", "doc_id",
-                                      impl="fold")
-
-    def test_unstamped_precomputed_signatures_warn(self, docs):
-        import warnings as _w
-
-        from db2pq_spark.operators.dedup import (
-            minhash_dedup_incremental,
-            minhash_signatures,
-        )
-
-        batch = docs.filter(F.col("doc_id") == 1)
-        corpus = docs.filter(F.col("doc_id") != 1)
-        legacy = minhash_signatures(corpus, "text", "doc_id") \
-            .drop("_sig_impl")  # pre-round-6 persisted relation
-        with _w.catch_warnings(record=True) as caught:
-            _w.simplefilter("always")
+        csig = minhash_signatures(corpus, "text", "doc_id")
+        assert "_sig_impl" not in csig.columns
+        legacy = csig.withColumn(
+            "_sig_impl",
+            F.when(F.col("id") == 2, F.lit("fold")).otherwise("arrow"))
+        with pytest.raises(ValueError, match="_sig_impl"):
             minhash_dedup_incremental(batch, legacy, "text", "doc_id")
-        assert any("_sig_impl" in str(c.message) for c in caught)
+        # an all-"arrow" legacy stamp is the current kernel: passes
+        arrow_stamped = csig.withColumn("_sig_impl", F.lit("arrow"))
+        assert minhash_dedup_incremental(
+            batch, arrow_stamped, "text", "doc_id",
+            threshold=0.5).count() > 0
 
     def test_unstamped_repr_under_hash_raises(self, docs):
         # pre-round-8 relations stored shingle STRINGS; probing them
@@ -226,7 +190,7 @@ class TestIncrementalDedup:
 
     def test_null_repr_stamp_warns(self, docs):
         # a corpus unioned with allowMissingColumns=True carries NULL
-        # _sig_repr on the unstamped half — must warn like _sig_impl
+        # _sig_repr on the unstamped half — must warn
         import warnings as _w
 
         from db2pq_spark.operators.dedup import (
@@ -830,30 +794,6 @@ class TestBm25:
         df = spark.createDataFrame([(1, "a")], "doc_id long, text string")
         with pytest.raises(ValueError):
             bm25_scores(df, "text", "doc_id", [])
-
-    @pytest.mark.parametrize("stage", ["checkpoint", "persist"])
-    def test_stage_variants_match_reuse(self, spark, stage):
-        # the materializing stages must score identically to the
-        # default exchange-reuse plan (they exist for many-consumer /
-        # executor-churn deployments, not for different answers)
-        from db2pq_spark.operators.retrieval import bm25_scores
-
-        corpus = [(1, "a b a"), (2, "a c"), (3, "x y z"), (4, None)]
-        df = spark.createDataFrame(corpus, "doc_id long, text string")
-        want = {(r["doc_id"], r["bm25"]) for r in
-                bm25_scores(df, "text", "doc_id", ["a", "b"]).collect()}
-        got = {(r["doc_id"], r["bm25"]) for r in
-               bm25_scores(df, "text", "doc_id", ["a", "b"],
-                           stage=stage).collect()}
-        assert got == want
-
-    def test_unknown_stage_rejected(self, spark):
-        from db2pq_spark.operators.retrieval import bm25_scores
-
-        df = spark.createDataFrame([(1, "a")], "doc_id long, text string")
-        with pytest.raises(ValueError, match="unknown stage"):
-            bm25_scores(df, "text", "doc_id", ["a"],
-                        stage="cache").collect()
 
 
 class TestRepetition:

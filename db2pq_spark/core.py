@@ -31,6 +31,7 @@ from db2pq_spark.functions.timestamps import normalize_timestamps
 from db2pq_spark.plans.plan import build_plan
 from db2pq_spark.sinks.parquet_sink import (
     get_modified_pq,
+    read_table,
     table_path,
     write_parquet,
 )
@@ -66,11 +67,12 @@ class Engine:
         interrupted promote swap first — see
         :func:`~db2pq_spark.sinks.parquet_sink.recover_parked`; the age
         guard keeps a concurrent reader from touching a live writer's
-        in-flight swap)."""
+        in-flight swap). Reads with the schema the sink recorded, when
+        it recorded one — see :func:`~db2pq_spark.sinks.parquet_sink.read_table`."""
         from db2pq_spark.sinks.parquet_sink import recover_parked
 
         recover_parked(self.data_dir, schema, table, min_age_seconds=10.0)
-        return self.spark.read.parquet(str(table_path(self.data_dir, schema, table)))
+        return read_table(self.spark, table_path(self.data_dir, schema, table))
 
     # -- export flows ------------------------------------------------------
 

@@ -21,7 +21,16 @@ reference's reader at db2pq/files/parquet.py:280-292).
 Freshness metadata for directory tables lives in a ``_last_modified.json``
 sidecar *inside* the table directory: it travels with the atomic
 directory rename (same atomicity domain as the data) and the leading
-underscore keeps Spark's reader from scanning it.
+underscore keeps Spark's reader from scanning it. Its keys:
+
+- ``last_modified`` — the source's freshness comment (or ``null``);
+- ``written_at`` — UTC ISO time of the write;
+- ``spark_schema`` — the written DataFrame's schema as Spark's JSON, on
+  unpartitioned tables only. :func:`read_table` reads with it, so a
+  read submits no schema-inference job (see SCALE.md, "Repository
+  reads");
+- any ``sidecar_extra`` keys the caller adds (the streaming modules'
+  batch ids, checkpoint and tokenizer stamps).
 """
 
 from __future__ import annotations
@@ -32,7 +41,8 @@ import os
 import shutil
 from pathlib import Path
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from db2pq_spark.sync.timestamps import (
     UNKNOWN_MODIFIED,
@@ -135,6 +145,8 @@ def write_parquet(
     if sidecar_extra and single_file:
         raise ValueError("sidecar_extra requires directory mode "
                          "(single files carry footer metadata only)")
+    if sidecar_extra and "spark_schema" in sidecar_extra:
+        raise ValueError("spark_schema is the sink's own sidecar key")
     final = table_path(data_dir, schema, table)
     tmp = temp_path(data_dir, schema, table)
     final.parent.mkdir(parents=True, exist_ok=True)
@@ -160,7 +172,10 @@ def write_parquet(
     if single_file:
         _collapse_to_single_file(tmp, last_modified)
     else:
-        _write_sidecar(tmp, last_modified, sidecar_extra)
+        # a hive-partitioned table's partition-column types come from
+        # re-inferring its directory names, so it records no schema
+        _write_sidecar(tmp, last_modified, sidecar_extra,
+                       None if partition_by else df.schema)
 
     if final.exists():
         if archive:
@@ -196,13 +211,41 @@ def _count_rows(path: Path) -> int:
 
 
 def _write_sidecar(table_dir: Path, last_modified: str | None,
-                   extra: dict | None = None) -> None:
+                   extra: dict | None = None,
+                   spark_schema: StructType | None = None) -> None:
     payload = {
         "last_modified": last_modified,
         "written_at": dt.datetime.now(dt.timezone.utc).isoformat(),
         **(extra or {}),
     }
-    (table_dir / SIDECAR).write_text(json.dumps(payload))
+    if spark_schema is not None:
+        payload["spark_schema"] = spark_schema.jsonValue()
+    # write-then-rename: a partitioned merge rewrites a live table's
+    # sidecar in place, and every read_table parses it
+    tmp = table_dir / (SIDECAR + ".tmp")
+    tmp.write_text(json.dumps(payload))
+    os.replace(tmp, table_dir / SIDECAR)
+
+
+def read_sidecar(table_dir: str | Path) -> dict:
+    """A directory table's sidecar as a dict; ``{}`` when it has none
+    (single files, hand-made or fixture tables)."""
+    try:
+        return json.loads((Path(table_dir) / SIDECAR).read_text())
+    except (FileNotFoundError, NotADirectoryError):
+        return {}
+
+
+def read_table(spark: SparkSession, path: str | Path) -> DataFrame:
+    """Read a repository table. A table whose sidecar recorded its
+    written schema is read with it — Spark then skips the footer
+    schema-inference job it would otherwise run on every read. Every
+    other table (hive-partitioned, single-file, streamed, hand-made, or
+    written before the sink recorded schemas) is read with inference."""
+    recorded = read_sidecar(path).get("spark_schema")
+    if recorded is None:
+        return spark.read.parquet(str(path))
+    return spark.read.schema(StructType.fromJson(recorded)).parquet(str(path))
 
 
 def _collapse_to_single_file(tmp: Path, last_modified: str | None) -> None:
@@ -234,10 +277,7 @@ def get_modified_pq(path: str | Path) -> str | None:
     files (ours or reference-written) → parquet footer metadata."""
     p = Path(path)
     if p.is_dir():
-        sidecar = p / SIDECAR
-        if sidecar.exists():
-            return json.loads(sidecar.read_text()).get("last_modified")
-        return None
+        return read_sidecar(p).get("last_modified")
     if p.is_file():
         import pyarrow.parquet as pq
 

@@ -36,13 +36,12 @@ gate certifies, minus re-reading the corpus.
 
 from __future__ import annotations
 
-import json
 from pathlib import Path
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from db2pq_spark.sinks.parquet_sink import SIDECAR, table_path
+from db2pq_spark.sinks.parquet_sink import read_sidecar, table_path
 from db2pq_spark.staging import stage
 from db2pq_spark.streaming.rollup import _applied_batch, _applied_checkpoint
 
@@ -61,10 +60,7 @@ def _token_rows(df: DataFrame, text_col: str) -> DataFrame:
 
 
 def _stamped_tokenizer(table_dir: Path) -> str | None:
-    sidecar = table_dir / SIDECAR
-    if not sidecar.exists():
-        return None
-    return json.loads(sidecar.read_text()).get("td_tokenizer")
+    return read_sidecar(table_dir).get("td_tokenizer")
 
 
 def init_token_counts(

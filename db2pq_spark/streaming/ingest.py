@@ -17,13 +17,11 @@ the per-batch subdirectory name.
 
 from __future__ import annotations
 
-import datetime as dt
-import json
 from pathlib import Path
 
 from pyspark.sql import DataFrame
 
-from db2pq_spark.sinks.parquet_sink import SIDECAR, table_path
+from db2pq_spark.sinks.parquet_sink import _write_sidecar, table_path
 
 
 def stream_to_pq(
@@ -85,14 +83,8 @@ def stream_to_pq(
         import shutil
 
         shutil.rmtree(tmp, ignore_errors=True)
-        payload = {
-            "last_modified": last_modified,
-            "written_at": dt.datetime.now(dt.timezone.utc).isoformat(),
-            "stream_batch_id": batch_id,
-        }
-        side_tmp = final / (SIDECAR + ".tmp")
-        side_tmp.write_text(json.dumps(payload))
-        side_tmp.replace(final / SIDECAR)
+        # no recorded schema: appended batches are read with inference
+        _write_sidecar(final, last_modified, {"stream_batch_id": batch_id})
 
     writer = stream_df.writeStream.foreachBatch(_sink) \
         .option("checkpointLocation", ckpt)

@@ -18,26 +18,19 @@ That turns foreachBatch's at-least-once into exactly-once.
 
 from __future__ import annotations
 
-import json
 from pathlib import Path
 
 from pyspark.sql import DataFrame
 
-from db2pq_spark.sinks.parquet_sink import SIDECAR, table_path
+from db2pq_spark.sinks.parquet_sink import read_sidecar, table_path
 
 
 def _applied_batch(table_dir: Path) -> int | None:
-    sidecar = table_dir / SIDECAR
-    if not sidecar.exists():
-        return None
-    return json.loads(sidecar.read_text()).get("stream_batch_id")
+    return read_sidecar(table_dir).get("stream_batch_id")
 
 
 def _applied_checkpoint(table_dir: Path) -> str | None:
-    sidecar = table_dir / SIDECAR
-    if not sidecar.exists():
-        return None
-    return json.loads(sidecar.read_text()).get("stream_checkpoint")
+    return read_sidecar(table_dir).get("stream_checkpoint")
 
 
 def stream_rollup(

@@ -14,6 +14,8 @@ import pandas as pd  # noqa: F401 — pandas_udf resolves the postponed
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from db2pq_spark.sinks.parquet_sink import read_table
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 #: name -> (spark_fn, oracle_sql | None). Populated by @query below.
@@ -34,7 +36,9 @@ def query(name: str, oracle: str | None = None):
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load a fixture table. Parquet scan → column pruning + predicate
     pushdown happen in Catalyst; at cluster scale this is the same code
-    path reading a partitioned directory.
+    path reading a partitioned directory. A directory the repository
+    sink wrote is read with the schema it recorded (no inference job);
+    fixtures carry no sidecar and are inferred.
 
     The ``events`` fixture's ``ts`` column has shipped in two physical
     encodings across fixture generations: nanosecond parquet timestamps
@@ -54,7 +58,7 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             return df.withColumn("ts_us", F.expr("ts div 1000"))
         return df.withColumn(
             "ts_us", F.unix_micros(F.col("ts").cast("timestamp_ltz")))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_table(spark, f"{sf_dir}/{name}.parquet")
 
 
 def dsum(col, scale: int = 4, alias: str | None = None):

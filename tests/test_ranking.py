@@ -4,13 +4,16 @@ under skew, ties-adjacent keys, and empty input."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from db2pq_spark.operators import ranking
 from db2pq_spark.operators.ranking import (
     global_rank_with_total,
     ntile_expr,
     with_global_prefix_sum,
 )
+from db2pq_spark.staging import stage
 
 
 class TestGlobalRank:
@@ -35,6 +38,36 @@ class TestGlobalRank:
         ranked, total = global_rank_with_total(df, [F.asc("uid")], "r")
         assert total == 1
         assert ranked.first()["r"] == 1
+
+
+class TestStageFirstConsumer:
+    """``_stage`` is lazy; its pinning guarantee holds only because the
+    sizes/offsets collect is the staged relation's first consumer. So by
+    the time a two-stage call returns — before anyone reads the ranked
+    output — the staged blocks must already be materialized."""
+
+    @pytest.mark.parametrize("call", [
+        lambda df: global_rank_with_total(df, [F.asc("k"), F.asc("uid")])[0],
+        lambda df: with_global_prefix_sum(df, "k", [F.asc("uid")]),
+    ], ids=["rank", "prefix_sum"])
+    def test_staged_blocks_exist_when_call_returns(self, spark, monkeypatch,
+                                                   call):
+        staged = []
+
+        def spy(df, eager=False):
+            staged.append(stage(df, eager=eager))
+            return staged[-1]
+
+        monkeypatch.setattr(ranking, "stage", spy)
+        call(spark.createDataFrame([(i % 7, i) for i in range(500)],
+                                   "k long, uid long"))
+        assert len(staged) == 1, "the two-stage path must stage its input"
+        rdd = staged[0]._jdf.queryExecution().analyzed().rdd()
+        assert rdd.isCheckpointed()
+        sc = spark.sparkContext._jsc.sc()
+        cached = {i.id(): i.numCachedPartitions()
+                  for i in sc.getRDDStorageInfo()}
+        assert cached.get(rdd.id()) == rdd.getNumPartitions()
 
 
 class TestPrefixSum:

@@ -7,11 +7,29 @@ restore / remove, update/skip/refuse/force decisions
 
 from __future__ import annotations
 
+import datetime as dt
+import json
+from decimal import Decimal
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from db2pq_spark.core import Engine
-from db2pq_spark.sinks.parquet_sink import get_modified_pq, table_path, write_parquet
+from db2pq_spark.sinks.parquet_sink import (
+    SIDECAR,
+    get_modified_pq,
+    read_sidecar,
+    table_path,
+    write_parquet,
+)
 from db2pq_spark.sinks.repository import (
     pq_archive,
     pq_last_modified,
@@ -436,3 +454,167 @@ class TestRefreshRollup:
         eng.refresh_rollup(d, "s", "r3", ["k"], {"qty": "sum"})
         with pytest.raises(ValueError, match="must match"):
             eng.refresh_rollup(d, "s", "r3", ["day", "k"], {"qty": "sum"})
+
+
+def _new_jobs(spark, build) -> set[int]:
+    """Ids of the Spark jobs submitted while ``build()`` runs."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    build()
+    return set(tracker.getJobIdsForGroup(None)) - before
+
+
+def _rows(df) -> list:
+    return sorted(df.collect(), key=repr)
+
+
+#: table shapes whose recorded schema must read back exactly as footer
+#: inference returns it: (Spark schema, rows)
+SHAPES = {
+    "flat": ("id long, name string, v double, d date",
+             [(1, "a", 1.5, dt.date(2020, 1, 2)), (2, None, None, None)]),
+    "nested": ("id long, tags array<string>, pt struct<x:int,y:array<int>>,"
+               " attrs map<string,double>, hist array<struct<k:string,n:long>>",
+               [(1, ["a", None], (1, [2, 3]), {"p": 0.5}, [("z", 9)]),
+                (2, None, None, None, [])]),
+    "timestamps": ("id long, ltz timestamp, ntz timestamp_ntz",
+                   [(1, dt.datetime(2024, 3, 1, 12, 30), dt.datetime(2024, 3, 1, 12, 30)),
+                    (2, None, None)]),
+    "decimal": ("id long, amt decimal(18,4), big decimal(38,10)",
+                [(1, Decimal("12.3456"), Decimal("1.0000000001")), (2, None, None)]),
+    "all_null": ("id long, empty string, none_num double",
+                 [(1, None, None), (2, None, None)]),
+    "not_nullable": (StructType([
+        StructField("id", LongType(), False),
+        StructField("xs", ArrayType(DoubleType(), False), False),
+        StructField("pt", StructType([StructField("a", StringType(), False)]), True)]),
+        [(1, [1.0], ("p",)), (2, [], None)]),
+}
+
+
+class TestRecordedSchema:
+    """An unpartitioned sink table records its schema in the sidecar and
+    ``read_pq`` reads with it; the result must be what footer inference
+    (``spark.read.parquet``) returns — same schema JSON, same rows."""
+
+    @staticmethod
+    def _assert_recorded(spark, eng, schema, table):
+        path = table_path(eng.data_dir, schema, table)
+        assert "spark_schema" in read_sidecar(path)
+        got, want = eng.read_pq(schema, table), spark.read.parquet(str(path))
+        assert got.schema.json() == want.schema.json()
+        assert _rows(got) == _rows(want)
+
+    @pytest.mark.parametrize("shape", sorted(SHAPES))
+    def test_shape_round_trips(self, spark, tmp_path, shape):
+        ddl, rows = SHAPES[shape]
+        write_parquet(spark.createDataFrame(rows, ddl), tmp_path, "s", shape)
+        self._assert_recorded(spark, Engine(spark, tmp_path), "s", shape)
+
+    def test_sidecar_extra_kept_beside_schema(self, spark, tmp_path):
+        ddl, rows = SHAPES["flat"]
+        write_parquet(spark.createDataFrame(rows, ddl), tmp_path, "s", "t",
+                      sidecar_extra={"stream_batch_id": 7})
+        assert read_sidecar(table_path(tmp_path, "s", "t"))["stream_batch_id"] == 7
+        self._assert_recorded(spark, Engine(spark, tmp_path), "s", "t")
+
+    def test_sidecar_extra_cannot_set_schema(self, spark, tmp_path):
+        ddl, rows = SHAPES["flat"]
+        with pytest.raises(ValueError, match="spark_schema"):
+            write_parquet(spark.createDataFrame(rows, ddl), tmp_path, "s", "t",
+                          sidecar_extra={"spark_schema": {}})
+
+    def test_after_unpartitioned_merge(self, spark, tmp_path):
+        eng = Engine(spark, tmp_path)
+        eng.df_to_pq(TestMergePq()._base(spark), "s", "t")
+        eng.merge_pq(TestMergePq()._updates(spark), "s", "t", ["id"],
+                     delete_col="is_deleted")
+        self._assert_recorded(spark, eng, "s", "t")
+
+    def test_after_compact(self, spark, tmp_path):
+        eng = Engine(spark, tmp_path)
+        ddl, rows = SHAPES["nested"]
+        eng.df_to_pq(spark.createDataFrame(rows * 50, ddl).repartition(4),
+                     "s", "t")
+        eng.compact("s", "t", target_files=1)
+        self._assert_recorded(spark, eng, "s", "t")
+
+    def test_after_refresh_rollup(self, spark, tmp_path):
+        eng = Engine(spark, tmp_path)
+        delta = spark.createDataFrame([("a", 2, 5.0), ("b", 3, 1.0)],
+                                      "k string, qty long, price double")
+        for _ in range(2):
+            eng.refresh_rollup(delta, "s", "roll", ["k"],
+                               {"qty": "sum", "price": "min"})
+        self._assert_recorded(spark, eng, "s", "roll")
+
+
+class TestInferredSchemaFallback:
+    """Tables whose sidecar holds no recorded schema read exactly as
+    before: ``spark.read.parquet`` with its schema-inference job."""
+
+    @staticmethod
+    def _assert_inferred(spark, eng, schema, table):
+        path = table_path(eng.data_dir, schema, table)
+        assert "spark_schema" not in read_sidecar(path)
+        box = []
+        assert _new_jobs(spark, lambda: box.append(eng.read_pq(schema, table)))
+        want = spark.read.parquet(str(path))
+        assert box[0].schema.json() == want.schema.json()
+        assert _rows(box[0]) == _rows(want)
+
+    def test_partitioned_table(self, spark, tmp_path):
+        df = spark.createDataFrame([(1, 10, "a"), (2, 20, "b")],
+                                   "id long, p int, v string")
+        write_parquet(df, tmp_path, "s", "t", partition_by=["p"])
+        eng = Engine(spark, tmp_path)
+        self._assert_inferred(spark, eng, "s", "t")
+        # the partition column's type comes from the directory names
+        assert dict(eng.read_pq("s", "t").dtypes)["p"] == "int"
+
+    def test_single_file_table(self, spark, tmp_path):
+        eng = Engine(spark, tmp_path, single_file=True)
+        ddl, rows = SHAPES["flat"]
+        eng.df_to_pq(spark.createDataFrame(rows, ddl), "s", "t")
+        self._assert_inferred(spark, eng, "s", "t")
+
+    def test_streamed_table(self, spark, tmp_path):
+        from db2pq_spark.streaming.ingest import stream_to_pq
+
+        ddl, rows = SHAPES["flat"]
+        df = spark.createDataFrame(rows, ddl)
+        write_parquet(df, tmp_path / "repo", "s", "t")
+        src = tmp_path / "src"
+        df.write.parquet(str(src))
+        stream_to_pq(spark.readStream.schema(df.schema).parquet(str(src)),
+                     tmp_path / "repo", "s", "t").awaitTermination()
+        eng = Engine(spark, tmp_path / "repo")
+        self._assert_inferred(spark, eng, "s", "t")
+        assert eng.read_pq("s", "t").count() == 2 * len(rows)
+
+    def test_sidecar_without_schema(self, spark, tmp_path):
+        ddl, rows = SHAPES["flat"]
+        path = write_parquet(spark.createDataFrame(rows, ddl), tmp_path, "s", "t",
+                             last_modified=COMMENT)
+        meta = read_sidecar(path)
+        del meta["spark_schema"]
+        (path / SIDECAR).write_text(json.dumps(meta))
+        self._assert_inferred(spark, Engine(spark, tmp_path), "s", "t")
+        assert get_modified_pq(path) == COMMENT
+
+
+class TestReadSubmitsNoJobs:
+    """Building a read of a sink-written table submits no Spark job —
+    the inference job the recorded schema replaces is the counter this
+    guards (perfbench ``spark.jobs``)."""
+
+    def test_read_pq_and_registry_loader(self, spark, tmp_path, lineitem):
+        from db2pq_spark.workload_base import t
+
+        eng = Engine(spark, tmp_path)
+        path = eng.df_to_pq(lineitem.limit(100), "tpch", "lineitem")
+        assert _new_jobs(spark, lambda: eng.read_pq("tpch", "lineitem")) == set()
+        assert _new_jobs(spark, lambda: t(spark, str(tmp_path / "tpch"),
+                                          "lineitem")) == set()
+        # the counter does see an inferring read of the same table
+        assert _new_jobs(spark, lambda: spark.read.parquet(str(path)))

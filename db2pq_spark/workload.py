@@ -28,12 +28,15 @@ from __future__ import annotations
 from db2pq_spark.workload_base import (  # noqa: F401
     _NORM,
     _TOKENS,
+    PRODUCTION,
     REGISTRY,
     QueryFn,
     _dsum_sql,
     dsum,
+    production,
     query,
     t,
+    timed,
 )
 
 # Query definitions, split by family. IMPORT ORDER IS LOAD-BEARING: it

@@ -33,6 +33,33 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
+#: name -> deployed-configuration variant of a registered query.
+#: Populated by @production below.
+PRODUCTION: dict[str, QueryFn] = {}
+
+
+def production(name: str):
+    """Register the deployed configuration of gate query ``name``: the
+    config the harnesses time (bench.py, scripts/scale_smoke.py) where
+    the gate entry pins an exactness config for its oracle (exhaustive
+    probes, uncapped banding, md5/string keys, exact-decimal trainers).
+    The variant's docstring is its provenance note; its first
+    paragraph is recorded in BENCH_DETAIL.json ``configs``."""
+
+    def deco(fn: QueryFn) -> QueryFn:
+        PRODUCTION[name] = fn
+        return fn
+
+    return deco
+
+
+def timed(name: str) -> QueryFn:
+    """The function a harness times for ``name``: its production
+    variant if one is registered, else the gate entry (KeyError for
+    an unregistered name)."""
+    return PRODUCTION.get(name) or REGISTRY[name][0]
+
+
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load a fixture table. Parquet scan → column pruning + predicate
     pushdown happen in Catalyst; at cluster scale this is the same code

@@ -19,6 +19,7 @@ from db2pq_spark.workload_base import (  # noqa: F401
     QueryFn,
     _dsum_sql,
     dsum,
+    production,
     query,
     t,
 )
@@ -405,6 +406,19 @@ def q107_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@production("q107_incremental_dedup")
+def _q107_production(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental dedup at operator defaults: 16×4 capped banding,
+    hashed-long shingles. The gate pins 32×2 uncapped text shingles so
+    its oracle is an exact all-pairs Jaccard replay."""
+    from db2pq_spark.operators.dedup import minhash_dedup_incremental
+
+    docs = t(spark, sf_dir, "documents")
+    return minhash_dedup_incremental(
+        docs.filter(F.col("doc_id") % 5 == 0),
+        docs.filter(F.col("doc_id") % 5 != 0), "text", "doc_id")
+
+
 @query(
     "q108_incremental_exact_dedup",
     oracle=f"""
@@ -559,6 +573,17 @@ def q102_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return duplicate_spans(t(spark, sf_dir, "documents"), "text", "doc_id",
                            n=3, span_hash="md5")
+
+
+@production("q102_duplicate_spans")
+def _q102_production(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Operator default span keys: xxhash64 (8-byte longs, ~4× less
+    shuffle width than the md5 hex strings the gate pins so DuckDB can
+    replay the keys)."""
+    from db2pq_spark.operators.dedup import duplicate_spans
+
+    return duplicate_spans(t(spark, sf_dir, "documents"), "text",
+                           "doc_id", n=3)
 
 
 @query(
@@ -817,6 +842,19 @@ def q110_quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("qscale", 9).alias("scale_r"),
     ).select("vec_id", F.col("dim").cast("int").alias("dim"),
              F.col("code").cast("int").alias("code"), "scale_r")
+
+
+@production("q110_quantize_embeddings")
+def _q110_production(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The production output shape: (vec_id, qvec array<tinyint>,
+    qscale). The gate posexplodes every code to scalars because the
+    driver's canon cannot sort array cells; at sf0.1 that times an
+    |vecs|×dim row transfer, not the operator (pure narrow codegen)."""
+    from db2pq_spark.operators.quantize import quantize_embeddings
+
+    return quantize_embeddings(t(spark, sf_dir, "embeddings"),
+                               "embedding").select("vec_id", "qvec",
+                                                   "qscale")
 
 
 def _q111_oracle() -> str:
@@ -1141,6 +1179,16 @@ def q116_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         n=3, min_count=2, span_hash="md5")
 
 
+@production("q116_span_removal")
+def _q116_production(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Operator default keys: xxhash64 with the in-row array_except
+    cut (the q102 split: the gate pins md5)."""
+    from db2pq_spark.operators.dedup import remove_duplicate_spans
+
+    return remove_duplicate_spans(t(spark, sf_dir, "documents"), "text",
+                                  "doc_id", n=3, min_count=2)
+
+
 #: q117: two Lloyd iterations, k=4, round scale 9 — each CTE pair
 #: (d/a = exact-decimal distances + argmin assignment, m/c = decimal
 #: mean update, f = empty-cluster fallback) replays one Spark round
@@ -1280,6 +1328,18 @@ def q117_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@production("q117_kmeans")
+def _q117_production(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """impl="arrow": BLAS assignment with the vectors carried through
+    the Arrow batch, zero joins. The gate runs the exact-decimal config
+    so its oracle replays both iterations bit-for-bit."""
+    from db2pq_spark.operators.clustering import kmeans_fit
+
+    assigned, _ = kmeans_fit(t(spark, sf_dir, "embeddings"), "embedding",
+                             "vec_id", k=4, iterations=2, impl="arrow")
+    return assigned.groupBy("cluster").count()
+
+
 def _q118_sql() -> str:
     from db2pq_spark.operators.sampling import split_assign_sql
 
@@ -1349,6 +1409,26 @@ def q118_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@production("q118_split_leakage")
+def _q118_production(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Leakage audit at minhash_dedup's production defaults (16×4
+    banding, cap 1000, Arrow kernel). The gate pins 32×2 uncapped
+    banding so its oracle is exact all-pairs Jaccard."""
+    from db2pq_spark.operators.dedup import minhash_dedup
+    from db2pq_spark.operators.sampling import split_assign
+
+    docs = t(spark, sf_dir, "documents")
+    pairs = minhash_dedup(docs, "text", "doc_id")
+    sp = split_assign(docs, "doc_id", {"train": 0.8, "test": 0.2}) \
+        .select("doc_id", "split")
+    return (pairs
+            .join(sp.withColumnsRenamed(
+                {"doc_id": "id1", "split": "split1"}), "id1")
+            .join(sp.withColumnsRenamed(
+                {"doc_id": "id2", "split": "split2"}), "id2")
+            .where(F.col("split1") != F.col("split2")))
+
+
 #: q119: winnowing with k=4-token grams, window w=3, pairs sharing >= 2
 #: fingerprints — the oracle recomputes the identical md5_60 k-gram
 #: hashes, window minima, and fingerprint self-join
@@ -1400,6 +1480,18 @@ def q119_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return winnow_overlap_pairs(
         t(spark, sf_dir, "documents"), "text", "doc_id",
         k=4, w=3, min_shared=2, max_bucket=None, token_hash="md5_60")
+
+
+@production("q119_winnow_overlap")
+def _q119_production(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Operator defaults: 5-token grams, window 4, hot-fingerprint cap
+    1000, arrow64 long fingerprints from the Arrow numpy kernel. The
+    gate pins k=4/w=3 uncapped md5_60 so its oracle replays every
+    pair."""
+    from db2pq_spark.operators.dedup import winnow_overlap_pairs
+
+    return winnow_overlap_pairs(t(spark, sf_dir, "documents"), "text",
+                                "doc_id", min_shared=2)
 
 
 def _q120_round_sql(r: int, vin: str, vout: str) -> str:
@@ -1553,6 +1645,17 @@ def q121_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "n_bigrams", "sum_surprisal"))
 
 
+@production("q121_kneser_ney")
+def _q121_production(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """keys="hash" (xxhash64 long bigram keys, ~4× narrower shuffles)
+    with the Zipf-asserted stats broadcast. The gate keys by the bigram
+    strings so DuckDB replays every statistic exactly."""
+    from db2pq_spark.operators.textstats import kneser_ney_bigrams
+
+    return kneser_ney_bigrams(t(spark, sf_dir, "documents"), "text",
+                              "doc_id", keys="hash", broadcast_stats=True)
+
+
 _Q122_SQL = f"""
     WITH wf AS (
       SELECT w AS word, COUNT(*) AS freq FROM (
@@ -1646,6 +1749,20 @@ def q123_winnow_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(F.col("doc_id") % 5 != 0),
         "text", "doc_id", k=4, w=3, min_shared=2, max_bucket=None,
         token_hash="md5_60")
+
+
+@production("q123_winnow_incremental")
+def _q123_production(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental winnowing at operator defaults: arrow64
+    fingerprints, k=5/w=4, cap 1000. The gate pins md5_60 k=4/w=3
+    uncapped so DuckDB replays the fingerprints."""
+    from db2pq_spark.operators.dedup import winnow_overlap_incremental
+
+    docs = t(spark, sf_dir, "documents")
+    return winnow_overlap_incremental(
+        docs.filter(F.col("doc_id") % 5 == 0),
+        docs.filter(F.col("doc_id") % 5 != 0),
+        "text", "doc_id", min_shared=2)
 
 
 _Q124_SQL = f"""
@@ -1779,6 +1896,17 @@ def q125_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "id", "n_feats", "sum_logw", "gumbel_key")
 
 
+@production("q125_dsir_sample")
+def _q125_production(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """keys="xxhash64": one 64-bit feature-bucket hash per bigram, no
+    hex-string build. The gate pins keys="md5" so DuckDB replays
+    buckets and ranking bit-for-bit."""
+    from db2pq_spark.operators.importance import dsir_sample
+
+    return dsir_sample(t(spark, sf_dir, "documents"), "text", "doc_id",
+                       F.col("source") == "src1", k=200, keys="xxhash64")
+
+
 _Q126_SQL = """
     WITH e AS (
       SELECT vec_id, embedding,
@@ -1830,6 +1958,16 @@ def q126_embedding_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = t(spark, sf_dir, "embeddings")
     return embedding_moments(emb, "embedding", impl="exact")
+
+
+@production("q126_embedding_moments")
+def _q126_production(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """impl="arrow": one BLAS XᵀX partial per Arrow batch, d² fewer
+    rows than the gate's exact explode-pairs decimal path."""
+    from db2pq_spark.operators.pca import embedding_moments
+
+    return embedding_moments(t(spark, sf_dir, "embeddings"), "embedding",
+                             impl="arrow")
 
 
 _Q127_SQL = f"""
@@ -2153,6 +2291,27 @@ def q131_edit_confirm(spark: SparkSession, sf_dir: str) -> DataFrame:
                         min_sim=0.75, max_len=160)
 
 
+@production("q131_edit_confirm")
+def _q131_production(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-phase fuzzy dedup as deployed: the MinHash-LSH recall stage
+    (operator defaults) feeds the Levenshtein confirm with
+    confirmed_only=True. The gate blocks candidates by (source, length
+    bucket) so its oracle replays the pair set; that blocking is
+    quadratic within a block.
+
+    A deleting pipeline consumes confirmed pairs only, which licenses
+    the length-gap prune and the banded Levenshtein;
+    tests/test_filtering.py pins that the confirmed rows equal the
+    audit path's."""
+    from db2pq_spark.operators.dedup import minhash_dedup
+    from db2pq_spark.operators.filtering import edit_confirm
+
+    docs = t(spark, sf_dir, "documents")
+    pairs = minhash_dedup(docs, "text", "doc_id").select("id1", "id2")
+    return edit_confirm(docs, pairs, "text", "doc_id", min_sim=0.75,
+                        max_len=160, confirmed_only=True)
+
+
 _Q132_SQL = """
     WITH pos AS (
       SELECT doc_id, text,
@@ -2191,6 +2350,18 @@ def q132_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
                          "doc_id")
             .withColumnRenamed("id", "doc_id")
             .select("doc_id", "n_chars", "sum_clog2c"))
+
+
+@production("q132_char_entropy")
+def _q132_production(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """impl="arrow": one mapInPandas histogram pass, no per-character
+    explode, no shuffle. Bit-identical to the gate's expression form,
+    whose explode and two-level aggregate the oracle replays at ~300×
+    the row volume."""
+    from db2pq_spark.operators.filtering import char_entropy
+
+    return char_entropy(t(spark, sf_dir, "documents"), "text", "doc_id",
+                        impl="arrow").select("id", "n_chars", "sum_clog2c")
 
 
 _Q133_SQL = """
@@ -2642,6 +2813,17 @@ def q140_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (perplexity_buckets(t(spark, sf_dir, "documents"),
                                "text", "doc_id", n_buckets=3)
             .withColumnRenamed("rank", "rnk"))
+
+
+@production("q140_ccnet_buckets")
+def _q140_production(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The q121 production LM: keys="hash" with broadcast_stats=True.
+    The gate pins keys="exact" so DuckDB replays rank and tier
+    bit-for-bit."""
+    from db2pq_spark.operators.quality import perplexity_buckets
+
+    return perplexity_buckets(t(spark, sf_dir, "documents"), "text",
+                              "doc_id", keys="hash", broadcast_stats=True)
 
 
 _Q141_SQL = f"""
@@ -3124,6 +3306,18 @@ def q147_gopher_repetition(spark: SparkSession,
             .withColumnRenamed("pass", "keep"))
 
 
+@production("q147_gopher_repetition")
+def _q147_production(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """keys="arrow": xxhash64 gram keys over slices of the per-token
+    hash array, gram strings never built; bit-identical values by the
+    (count, length) tie discipline. The gate pins keys="exact" so
+    DuckDB replays the gram keys."""
+    from db2pq_spark.operators.repetition import gopher_repetition
+
+    return gopher_repetition(t(spark, sf_dir, "documents"), "text",
+                             "doc_id", keys="arrow")
+
+
 def _q148_oracle() -> str:
     from db2pq_spark.operators.unigram_soft import (
         soft_prune_sql, soft_round_sql, soft_seed_sql)
@@ -3227,6 +3421,17 @@ def q149_longest_dup_span(spark: SparkSession, sf_dir: str) -> DataFrame:
                             "doc_id", keys="exact")
 
 
+@production("q149_longest_dup_span")
+def _q149_production(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """keys="hash": xxhash64-composed doubling keys, gram strings never
+    built. The gate pins keys="exact" against the independent
+    substring-enumeration oracle."""
+    from db2pq_spark.operators.suffixes import longest_dup_span
+
+    return longest_dup_span(t(spark, sf_dir, "documents"), "text",
+                            "doc_id", keys="hash")
+
+
 _Q150_SQL = f"""
     WITH tkf AS (
       SELECT doc_id, ws, len(ws) AS n FROM (
@@ -3314,6 +3519,16 @@ def q150_longest_span_removal(spark: SparkSession,
                                  keys="exact")
 
 
+@production("q150_longest_span_removal")
+def _q150_production(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """keys="hash" (xxhash64-composed level keys), min_len 8. The gate
+    pins keys="exact"."""
+    from db2pq_spark.operators.suffixes import remove_long_dup_spans
+
+    return remove_long_dup_spans(t(spark, sf_dir, "documents"), "text",
+                                 "doc_id", min_len=8, keys="hash")
+
+
 def _q151_oracle() -> str:
     from db2pq_spark.operators.pq import (
         pq_adc_sql, pq_encode_sql, pq_subspace_sql)
@@ -3366,6 +3581,19 @@ def q151_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("query_id").cast("bigint").alias("query_id"),
                 F.col("vec_id").cast("bigint").alias("vec_id"),
                 "adc_d2", "rank")
+
+
+@production("q151_pq_adc_topk")
+def _q151_production(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deployed IVF-PQ: Arrow trainers and encoder, 8×16 codebooks,
+    8-cell coarse quantizer with 4 probes. The gate pins the tiny 2×4
+    exact-decimal config its CTE-replay oracle can afford."""
+    from db2pq_spark.operators.pq import ivf_pq_topk
+
+    emb = t(spark, sf_dir, "embeddings")
+    return ivf_pq_topk(emb, emb.where(F.col("vec_id") < 20),
+                       k_top=10, m=8, k_codes=16, n_clusters=8,
+                       n_probe=4, impl="arrow")
 
 
 _Q152_SQL = """
@@ -3454,6 +3682,21 @@ def q153_logreg_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
                         "text", "doc_id", n_buckets=64)
 
 
+@production("q153_logreg_quality")
+def _q153_production(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """keys="xxhash64" feature buckets (no hex-string md5 build) in a
+    4096-dim hashed space, the fastText-scale width. The gate pins
+    md5/64 so DuckDB replays the buckets."""
+    from db2pq_spark.operators.logreg import (
+        logreg_score, logreg_train, logreg_weights_df)
+
+    docs = t(spark, sf_dir, "documents")
+    w = logreg_train(docs, "text", "doc_id", F.col("source") == "src0",
+                     n_buckets=4096, epochs=3, keys="xxhash64")
+    return logreg_score(docs, logreg_weights_df(spark, w), "text",
+                        "doc_id", n_buckets=4096, keys="xxhash64")
+
+
 def _q154_oracle() -> str:
     from db2pq_spark.operators.logreg import logreg_sql
     from db2pq_spark.operators.sampling import hash_bucket_sql
@@ -3494,6 +3737,22 @@ def q154_logreg_score_increment(spark: SparkSession,
     return logreg_score(docs.where(F.col("doc_id") % 7 == 0),
                         logreg_weights_df(spark, w),
                         "text", "doc_id", n_buckets=64)
+
+
+@production("q154_logreg_score_increment")
+def _q154_production(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The q153 production features (xxhash64/4096): weights trained on
+    the standing corpus, the batch scored under the broadcast."""
+    from db2pq_spark.operators.logreg import (
+        logreg_score, logreg_train, logreg_weights_df)
+
+    docs = t(spark, sf_dir, "documents")
+    w = logreg_train(docs.where(F.col("doc_id") % 7 != 0), "text",
+                     "doc_id", F.col("source") == "src0",
+                     n_buckets=4096, epochs=3, keys="xxhash64")
+    return logreg_score(docs.where(F.col("doc_id") % 7 == 0),
+                        logreg_weights_df(spark, w), "text", "doc_id",
+                        n_buckets=4096, keys="xxhash64")
 
 
 def _q155_oracle(iterations: int = 5) -> str:
@@ -3646,6 +3905,17 @@ def q156_prototype_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "d2", "proto_rank")
 
 
+@production("q156_prototype_prune")
+def _q156_production(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """impl="arrow" (BLAS) assignment, k=8. The gate pins the
+    exact-decimal k=4 config its CTE oracle replays."""
+    from db2pq_spark.operators.clustering import prototype_prune
+
+    return prototype_prune(t(spark, sf_dir, "embeddings"), "embedding",
+                           "vec_id", k=8, iterations=2, drop=(1, 4),
+                           impl="arrow")
+
+
 def _q157_oracle() -> str:
     from db2pq_spark.operators.pq import (
         pq_adc_sql, pq_encode_sql, pq_subspace_sql)
@@ -3702,6 +3972,22 @@ def q157_pq_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("query_id").cast("bigint").alias("query_id"),
                 F.col("vec_id").cast("bigint").alias("vec_id"),
                 "adc_d2", "rank")
+
+
+@production("q157_pq_increment")
+def _q157_production(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The q151 production geometry for train-once/query-increments:
+    Arrow trainer and encoder, 8×16 codebooks, standing/batch split."""
+    from db2pq_spark.operators.pq import pq_adc_topk, pq_encode, pq_train
+
+    emb = t(spark, sf_dir, "embeddings")
+    standing = emb.where(F.col("vec_id") % 5 != 0)
+    newq = emb.where((F.col("vec_id") % 5 == 0) & (F.col("vec_id") < 100))
+    books = pq_train(standing, "embedding", "vec_id", m=8, k=16,
+                     iterations=2, dim=64, impl="arrow")
+    codes = pq_encode(standing, books, "embedding", "vec_id", impl="arrow")
+    return pq_adc_topk(codes, newq, books, k_top=10,
+                       vec_col="embedding", id_col="vec_id")
 
 
 def _q158_oracle(depth: int = 3, width: int = 256) -> str:
@@ -3779,6 +4065,28 @@ def q158_cms_heavy_hitters(spark: SparkSession,
                     .alias("overcount_ok")))
 
 
+@production("q158_cms_heavy_hitters")
+def _q158_production(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Production sketch geometry: xxhash64 row hashes, d=4, w=65536.
+    The gate pins d=3/w=256/md5 so DuckDB replays every cell."""
+    from db2pq_spark.operators.cms import cms_build, cms_merge, cms_probe
+    from db2pq_spark.operators.textstats import tokens as _tk
+
+    docs = t(spark, sf_dir, "documents")
+    d, w = 4, 65536
+    merged = cms_merge(
+        cms_build(docs.where(F.col("doc_id") % 5 != 0), "text",
+                  depth=d, width=w, keys="xxhash64"),
+        cms_build(docs.where(F.col("doc_id") % 5 == 0), "text",
+                  depth=d, width=w, keys="xxhash64"),
+        depth=d, width=w, keys="xxhash64")
+    exact = (docs.select(F.explode(_tk("text")).alias("tok"))
+             .groupBy("tok").agg(F.count("*").alias("exact_cnt"))
+             .orderBy(F.desc("exact_cnt"), F.asc("tok")).limit(20))
+    return exact.join(cms_probe(merged, exact, "tok", depth=d, width=w,
+                                keys="xxhash64"), "tok")
+
+
 def _q159_oracle() -> str:
     from db2pq_spark.operators.logreg import logreg_sql
     from db2pq_spark.operators.sampling import hash_bucket_sql
@@ -3843,6 +4151,15 @@ def q159_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(F.col("doc_id").alias("id"),
                     (F.col("source") == "src0").alias("_y")), "id")
     return roc_auc(joined, "margin_units", F.col("_y"))
+
+
+@production("q159_classifier_auc")
+def _q159_production(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ROC-AUC over the q153 production classifier (xxhash64/4096)."""
+    from db2pq_spark.operators.evalmetrics import roc_auc
+
+    return roc_auc(_production_labelled(spark, sf_dir), "margin_units",
+                   F.col("_y"))
 
 
 _Q160_SQL = f"""
@@ -4035,6 +4352,24 @@ def q162_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(F.col("doc_id").alias("id"),
                     (F.col("source") == "src0").alias("_y")), "id")
     return calibration_buckets(joined, "prob6", F.col("_y"))
+
+
+def _production_labelled(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """q153's production scores joined to the src0 label (q159/q162)."""
+    docs = t(spark, sf_dir, "documents")
+    return _q153_production(spark, sf_dir).join(
+        docs.select(F.col("doc_id").alias("id"),
+                    (F.col("source") == "src0").alias("_y")), "id")
+
+
+@production("q162_calibration")
+def _q162_production(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Calibration buckets over the q153 production classifier
+    (xxhash64/4096)."""
+    from db2pq_spark.operators.evalmetrics import calibration_buckets
+
+    return calibration_buckets(_production_labelled(spark, sf_dir),
+                               "prob6", F.col("_y"))
 
 
 _Q163_SQL = f"""
@@ -4252,6 +4587,16 @@ def q165_keep_one_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     return remove_duplicate_spans(
         t(spark, sf_dir, "documents"), "text", "doc_id",
         n=3, min_count=2, span_hash="md5", keep="one")
+
+
+@production("q165_keep_one_removal")
+def _q165_production(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Operator default keys: xxhash64, canonical-occurrence exemplar
+    spared. The gate pins md5 so DuckDB replays the exemplar choice."""
+    from db2pq_spark.operators.dedup import remove_duplicate_spans
+
+    return remove_duplicate_spans(t(spark, sf_dir, "documents"), "text",
+                                  "doc_id", n=3, min_count=2, keep="one")
 
 
 def _q166_oracle(iterations: int = 5) -> str:

@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Build (once) a persistent N× key-shifted replica of sf0.1 for perf
-iteration — the same replication logic scale_smoke.py uses (imported,
-not copied), minus the delete-at-exit, so q64/q116-style plan work can
-measure repeatedly against an identical dataset.
+iteration — scale_smoke.py's ``build_replica`` (imported, not copied),
+minus the delete-at-exit, so q64/q116-style plan work can measure
+repeatedly against an identical dataset.
 
 Usage: SMOKE_COPIES=100 python scripts/build_replica.py /tmp/sf10x100
 """
@@ -12,7 +12,6 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -23,20 +22,8 @@ def main() -> None:
     from db2pq_spark.session import get_spark
 
     spark = get_spark(app_name="build_replica")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    os.makedirs(out_dir, exist_ok=True)
     t0 = time.perf_counter()
-    for tbl in ("lineitem", "orders", "customer", "supplier", "part",
-                "nation", "region", "documents", "embeddings", "events"):
-        if os.path.exists(f"{out_dir}/{tbl}.parquet/_SUCCESS"):
-            continue
-        if tbl in sm.KEY_SHIFTS:
-            sm.replicate(spark, tbl, out_dir, 100_000_000)
-        else:
-            spark.read.parquet(f"{sm.SF_DIR}/{tbl}.parquet") \
-                .write.mode("overwrite").parquet(f"{out_dir}/{tbl}.parquet")
-        print(f"  {tbl} done at {time.perf_counter() - t0:.0f}s",
-              flush=True)
+    sm.build_replica(spark, out_dir)
     print(f"replica at {out_dir} built in {time.perf_counter() - t0:.0f}s")
 
 

@@ -4,9 +4,9 @@
 Writes plans/<round>/<qname>_<tag>.txt for every query name given on
 the command line (round = first arg, e.g. "r14"; tag = second arg:
 "before" or "after"). The plan captured
-is the BENCH configuration (bench.py _OVERRIDES when present, else the
-registry entry) — the config whose seconds the optimization round is
-judged on. Iterative operators (pagerank, EM trainers, suffix
+is the BENCH configuration (``workload.timed``: the query's production
+variant when one is registered, else the gate entry) — the config
+whose seconds the optimization round is judged on. Iterative operators (pagerank, EM trainers, suffix
 doubling) run driver-side loops whose intermediate actions don't show
 in one final explain; for those the final-plan shape plus the loop
 structure in code is the evidence.
@@ -33,11 +33,10 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name=f"dump_{round_dir}_plans")
 
-    import bench
     from db2pq_spark import workload
 
     for name in names:
-        fn = bench._OVERRIDES.get(name) or workload.REGISTRY[name][0]
+        fn = workload.timed(name)
         df = fn(spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")

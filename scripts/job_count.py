@@ -7,7 +7,8 @@ invocation per query family for isolation-sensitive timing (this
 script is about job COUNTS, which are load-independent).
 
 Usage: python scripts/job_count.py q155_pagerank [q157_pq_increment ...]
-       (bench-override configs, same as bench.py)
+       (each query's production variant where one is registered —
+        workload.timed, the config bench.py times)
 """
 
 from __future__ import annotations
@@ -19,7 +20,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
 
-import bench  # noqa: E402  (the _OVERRIDES production configs)
 from db2pq_spark import workload  # noqa: E402
 from db2pq_spark.session import get_spark  # noqa: E402
 
@@ -31,7 +31,7 @@ def main() -> None:
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
     st = spark.sparkContext.statusTracker()
     for name in names:
-        qfn = bench._OVERRIDES.get(name) or workload.REGISTRY[name][0]
+        qfn = workload.timed(name)
         # one warm pass (codegen/page cache), then the counted pass
         for counted in (False, True):
             before = len(st.getJobIdsForGroup(None))

@@ -25,7 +25,9 @@ Dedup/ANN entries run the PRODUCTION operator configurations (16×4
 capped MinHash banding, default SimHash chunking, 8×4 multi-probe LSH)
 — the registry's gate entries pin exactness configs for their oracles,
 which do strictly more work; scale behavior of the deployed defaults is
-what this smoke certifies (same override pattern as bench.py).
+what this smoke certifies. Each query resolves through
+``workload.timed`` (its ``@production`` variant where one is
+registered), the same lookup bench.py uses.
 
 Round-10 measurement isolation: queries run in a FRESH WORKER PROCESS
 per query family (one JVM each), because a single long session ages —
@@ -35,6 +37,8 @@ q127 runs 13.0/28.7/17.8 s) on queries with zero code change, measured
 late in a 44-query shared session under rising load. Each sidecar entry
 now records the 1-min loadavg at measurement start and the worker pid,
 so a contaminated number is self-diagnosing instead of crying wolf.
+Workers launch through bench.py's ``run_family`` and release staged
+blocks between runs with bench.py's ``cleanup`` (JVM GC plus settle).
 
 Usage: python scripts/scale_smoke.py            (~6 min on local[32])
        SMOKE_COPIES=100 python scripts/scale_smoke.py   (~60 M rows)
@@ -50,7 +54,10 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
+
+import bench  # noqa: E402  (the shared fresh-worker plumbing)
 
 SF_DIR = "/root/testdata/sf0.1"
 COPIES = int(os.environ.get("SMOKE_COPIES", "10"))
@@ -104,7 +111,7 @@ FAMILIES = [
     # one availableNow trigger over the (filtered) documents stream,
     # standing counts seeded then folded through refresh_rollup
     ("stream_drift", ["q167_stream_token_drift"]),
-    # dedup / ANN families at production configs (overrides below)
+    # dedup / ANN families at production configs (workload.timed)
     ("minhash", ["q118_split_leakage", "q36_minhash_dedup",
                  "q37_simhash_dedup", "q107_incremental_dedup"]),
     ("winnow_bpe", ["q120_bpe_merges", "q123_winnow_incremental",
@@ -180,309 +187,6 @@ QUERIES = [q for _, qs in FAMILIES for q in qs]
 _MONTH_NS = 31 * 24 * 3600 * 1_000_000_000
 
 
-def _overrides():
-    """Production-config shapes for the approximate operators — the
-    registry gate entries run exactness configs (exhaustive probes,
-    uncapped 32×2 banding) whose extra work is an oracle surcharge,
-    not deployed behavior. Mirrors bench.py's override pattern."""
-    from pyspark.sql import functions as F
-
-    from db2pq_spark.operators.dedup import minhash_dedup, simhash_dedup
-    from db2pq_spark.operators.similarity import lsh_bucket_topk
-
-    def q36(spark, sf_dir):
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return minhash_dedup(docs, "text", "doc_id")  # 16×4, cap 1000
-
-    def q37(spark, sf_dir):
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return simhash_dedup(docs, "text", "doc_id")  # xxhash64, 4 chunks
-
-    def q38(spark, sf_dir):
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        return lsh_bucket_topk(emb, emb.filter(F.col("vec_id") < 10), k=5)
-
-    def q117(spark, sf_dir):
-        from db2pq_spark.operators.clustering import kmeans_fit
-
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        assigned, _ = kmeans_fit(emb, "embedding", "vec_id",
-                                 k=4, iterations=2, impl="arrow")
-        return assigned.groupBy("cluster").count()
-
-    def q102(spark, sf_dir):
-        from db2pq_spark.operators.dedup import duplicate_spans
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return duplicate_spans(docs, "text", "doc_id", n=3)  # xxhash64
-
-    def q116(spark, sf_dir):
-        from db2pq_spark.operators.dedup import remove_duplicate_spans
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return remove_duplicate_spans(docs, "text", "doc_id",
-                                      n=3, min_count=2)  # xxhash64
-
-    def q165(spark, sf_dir):
-        from db2pq_spark.operators.dedup import remove_duplicate_spans
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return remove_duplicate_spans(docs, "text", "doc_id",
-                                      n=3, min_count=2,
-                                      keep="one")  # xxhash64
-
-    def q119(spark, sf_dir):
-        from db2pq_spark.operators.dedup import winnow_overlap_pairs
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return winnow_overlap_pairs(docs, "text", "doc_id",
-                                    min_shared=2)  # k=5/w=4/cap 1000
-
-    def q118(spark, sf_dir):
-        from db2pq_spark.operators.dedup import minhash_dedup
-        from db2pq_spark.operators.sampling import split_assign
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        pairs = minhash_dedup(docs, "text", "doc_id")  # 16x4, cap 1000
-        sp = split_assign(docs, "doc_id",
-                          {"train": 0.8, "test": 0.2}) \
-            .select("doc_id", "split")
-        return (pairs
-                .join(sp.withColumnsRenamed(
-                    {"doc_id": "id1", "split": "split1"}), "id1")
-                .join(sp.withColumnsRenamed(
-                    {"doc_id": "id2", "split": "split2"}), "id2")
-                .where(F.col("split1") != F.col("split2")))
-
-    def q107(spark, sf_dir):
-        from db2pq_spark.operators.dedup import minhash_dedup_incremental
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return minhash_dedup_incremental(
-            docs.filter(F.col("doc_id") % 5 == 0),
-            docs.filter(F.col("doc_id") % 5 != 0),
-            "text", "doc_id")  # production 16x4/cap-1000/hash shingles
-
-    def q123(spark, sf_dir):
-        from db2pq_spark.operators.dedup import winnow_overlap_incremental
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return winnow_overlap_incremental(
-            docs.filter(F.col("doc_id") % 5 == 0),
-            docs.filter(F.col("doc_id") % 5 != 0),
-            "text", "doc_id", min_shared=2)  # arrow64 k=5/w=4/cap
-
-    def q121(spark, sf_dir):
-        from db2pq_spark.operators.textstats import kneser_ney_bigrams
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return kneser_ney_bigrams(docs, "text", "doc_id", keys="hash",
-                                  broadcast_stats=True)
-
-    def q140(spark, sf_dir):
-        from db2pq_spark.operators.quality import perplexity_buckets
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        # production LM configuration (the q121 override's keys=hash +
-        # broadcast_stats); the gate entry pins keys="exact" so DuckDB
-        # replays rank and tier bit-for-bit
-        return perplexity_buckets(docs, "text", "doc_id",
-                                  keys="hash", broadcast_stats=True)
-
-    def q125(spark, sf_dir):
-        from db2pq_spark.operators.importance import dsir_sample
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return dsir_sample(docs, "text", "doc_id",
-                           F.col("source") == "src1", k=200,
-                           keys="xxhash64")
-
-    def q126(spark, sf_dir):
-        from db2pq_spark.operators.pca import embedding_moments
-
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        return embedding_moments(emb, "embedding", impl="arrow")
-
-    def q132(spark, sf_dir):
-        from db2pq_spark.operators.filtering import char_entropy
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        # production histogram kernel (bit-identical to the gate's
-        # per-char-explode expression form the oracle replays)
-        return char_entropy(docs, "text", "doc_id", impl="arrow") \
-            .select("id", "n_chars", "sum_clog2c")
-
-    def q147(spark, sf_dir):
-        from db2pq_spark.operators.repetition import gopher_repetition
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        # production keys: xxhash64 over token-hash slices — gram
-        # strings never built (bit-identical values; the gate entry
-        # pins keys='exact' so DuckDB replays the gram keys)
-        return gopher_repetition(docs, "text", "doc_id", keys="arrow")
-
-    def q131(spark, sf_dir):
-        from db2pq_spark.operators.dedup import minhash_dedup
-        from db2pq_spark.operators.filtering import edit_confirm
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        # production two-phase fuzzy dedup: LSH recall stage feeding
-        # the Levenshtein confirm (the gate's blocked self-join is an
-        # oracle-replay surcharge, quadratic within a block).
-        # confirmed_only: a deleting pipeline consumes confirmed pairs
-        # only, which licenses the length-gap prune + banded
-        # levenshtein (output identity with the audit path is pinned
-        # by tests/test_filtering.py)
-        pairs = minhash_dedup(docs, "text", "doc_id") \
-            .select("id1", "id2")
-        return edit_confirm(docs, pairs, "text", "doc_id",
-                            min_sim=0.75, max_len=160,
-                            confirmed_only=True)
-
-    def q149(spark, sf_dir):
-        from db2pq_spark.operators.suffixes import longest_dup_span
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        # production: xxhash64-composed level keys (gram strings never
-        # built; the gate pins keys='exact' for its independent oracle)
-        return longest_dup_span(docs, "text", "doc_id", keys="hash")
-
-    def q150(spark, sf_dir):
-        from db2pq_spark.operators.suffixes import remove_long_dup_spans
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return remove_long_dup_spans(docs, "text", "doc_id",
-                                     min_len=8, keys="hash")
-
-    def q151(spark, sf_dir):
-        from db2pq_spark.operators.pq import ivf_pq_topk
-
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        # production IVF-PQ: arrow trainers/encoder, 8x16 codebooks,
-        # 8-cell coarse quantizer, 4-probe (the gate pins the 2x4
-        # exact-decimal config its CTE-replay oracle affords)
-        return ivf_pq_topk(emb, emb.where(F.col("vec_id") < 20),
-                           k_top=10, m=8, k_codes=16, n_clusters=8,
-                           n_probe=4, impl="arrow")
-
-    def q153(spark, sf_dir):
-        from db2pq_spark.operators.logreg import (
-            logreg_score, logreg_train, logreg_weights_df)
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        # production: xxhash64 buckets, 4096-dim hashed feature space
-        # (the gate pins md5/64 so DuckDB replays the buckets)
-        w = logreg_train(docs, "text", "doc_id",
-                         F.col("source") == "src0", n_buckets=4096,
-                         epochs=3, keys="xxhash64")
-        return logreg_score(docs, logreg_weights_df(spark, w),
-                            "text", "doc_id", n_buckets=4096,
-                            keys="xxhash64")
-
-    def q154(spark, sf_dir):
-        from db2pq_spark.operators.logreg import (
-            logreg_score, logreg_train, logreg_weights_df)
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        w = logreg_train(docs.where(F.col("doc_id") % 7 != 0),
-                         "text", "doc_id", F.col("source") == "src0",
-                         n_buckets=4096, epochs=3, keys="xxhash64")
-        return logreg_score(docs.where(F.col("doc_id") % 7 == 0),
-                            logreg_weights_df(spark, w), "text",
-                            "doc_id", n_buckets=4096, keys="xxhash64")
-
-    def q156(spark, sf_dir):
-        from db2pq_spark.operators.clustering import prototype_prune
-
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        # production trainer: arrow (BLAS) assignment, k=8
-        return prototype_prune(emb, "embedding", "vec_id", k=8,
-                               iterations=2, drop=(1, 4), impl="arrow")
-
-    def q157(spark, sf_dir):
-        from db2pq_spark.operators.pq import (
-            pq_adc_topk, pq_encode, pq_train)
-
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        # production increment: arrow trainer/encoder, 8x16 codebooks
-        # (the q151 production geometry), standing/batch split
-        standing = emb.where(F.col("vec_id") % 5 != 0)
-        newq = emb.where((F.col("vec_id") % 5 == 0)
-                         & (F.col("vec_id") < 100))
-        books = pq_train(standing, "embedding", "vec_id", m=8, k=16,
-                         iterations=2, dim=64, impl="arrow")
-        codes = pq_encode(standing, books, "embedding", "vec_id",
-                          impl="arrow")
-        return pq_adc_topk(codes, newq, books, k_top=10,
-                           vec_col="embedding", id_col="vec_id")
-
-    def q158(spark, sf_dir):
-        from db2pq_spark.operators.cms import (
-            cms_build, cms_merge, cms_probe)
-        from db2pq_spark.operators.textstats import tokens as _tk
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        # production sketch geometry: xxhash64 rows, d=4, w=65536
-        d, w = 4, 65536
-        merged = cms_merge(
-            cms_build(docs.where(F.col("doc_id") % 5 != 0), "text",
-                      depth=d, width=w, keys="xxhash64"),
-            cms_build(docs.where(F.col("doc_id") % 5 == 0), "text",
-                      depth=d, width=w, keys="xxhash64"),
-            depth=d, width=w, keys="xxhash64")
-        exact = (docs.select(F.explode(_tk("text")).alias("tok"))
-                 .groupBy("tok").agg(F.count("*").alias("exact_cnt"))
-                 .orderBy(F.desc("exact_cnt"), F.asc("tok"))
-                 .limit(20))
-        return exact.join(
-            cms_probe(merged, exact, "tok", depth=d, width=w,
-                      keys="xxhash64"), "tok")
-
-    def q159(spark, sf_dir):
-        from db2pq_spark.operators.evalmetrics import roc_auc
-
-        scored = q153(spark, sf_dir)
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        joined = scored.join(
-            docs.select(F.col("doc_id").alias("id"),
-                        (F.col("source") == "src0").alias("_y")),
-            "id")
-        return roc_auc(joined, "margin_units", F.col("_y"))
-
-    def q162(spark, sf_dir):
-        from db2pq_spark.operators.evalmetrics import calibration_buckets
-
-        scored = q153(spark, sf_dir)
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        joined = scored.join(
-            docs.select(F.col("doc_id").alias("id"),
-                        (F.col("source") == "src0").alias("_y")),
-            "id")
-        return calibration_buckets(joined, "prob6", F.col("_y"))
-
-    return {"q36_minhash_dedup": q36, "q37_simhash_dedup": q37,
-            "q38_lsh_similarity": q38, "q117_kmeans": q117,
-            "q102_duplicate_spans": q102, "q116_span_removal": q116,
-            "q119_winnow_overlap": q119, "q118_split_leakage": q118,
-            "q121_kneser_ney": q121, "q140_ccnet_buckets": q140,
-            "q107_incremental_dedup": q107,
-            "q123_winnow_incremental": q123,
-            "q125_dsir_sample": q125, "q126_embedding_moments": q126,
-            "q131_edit_confirm": q131, "q132_char_entropy": q132,
-            "q147_gopher_repetition": q147,
-            "q149_longest_dup_span": q149,
-            "q150_longest_span_removal": q150,
-            "q165_keep_one_removal": q165,
-            "q151_pq_adc_topk": q151,
-            "q153_logreg_quality": q153,
-            "q154_logreg_score_increment": q154,
-            "q156_prototype_prune": q156,
-            "q157_pq_increment": q157,
-            "q158_cms_heavy_hitters": q158,
-            "q159_classifier_auc": q159,
-            "q162_calibration": q162}
-
-
 def replicate(spark, table: str, out_dir: str, offset: int) -> None:
     from pyspark.sql import functions as F
 
@@ -523,6 +227,29 @@ def replicate(spark, table: str, out_dir: str, offset: int) -> None:
     out.write.mode("overwrite").parquet(f"{out_dir}/{table}.parquet")
 
 
+def build_replica(spark, out_dir: str) -> None:
+    """Write the COPIES× replica of every fixture table under
+    ``out_dir``. A table whose ``_SUCCESS`` marker is already there is
+    kept, so a prebuilt replica is reused (scripts/build_replica.py)."""
+    # events carries ns timestamps (read as epoch-nanos longs, as in
+    # workload.t)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    os.makedirs(out_dir, exist_ok=True)
+    t0 = time.perf_counter()
+    for tbl in ("lineitem", "orders", "customer", "supplier", "part",
+                "nation", "region", "documents", "embeddings", "events"):
+        if os.path.exists(f"{out_dir}/{tbl}.parquet/_SUCCESS"):
+            continue
+        if tbl in KEY_SHIFTS:
+            replicate(spark, tbl, out_dir, 100_000_000)
+        else:
+            # dimensions/fixtures stay as-is (broadcast sides)
+            spark.read.parquet(f"{SF_DIR}/{tbl}.parquet") \
+                .write.mode("overwrite").parquet(f"{out_dir}/{tbl}.parquet")
+        print(f"  {tbl} done at {time.perf_counter() - t0:.0f}s",
+              flush=True)
+
+
 def _worker_main() -> None:
     """Measure ONE query family at ONE scale in this fresh process,
     then exit — the session never ages past ~7 queries × 4 runs.
@@ -541,19 +268,7 @@ def _worker_main() -> None:
     # events carries ns timestamps (read as epoch-nanos longs, as in
     # workload.t)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    overrides = _overrides()
     out: dict[str, dict] = {}
-
-    def cleanup():
-        # between EVERY run: operators that stage intermediates
-        # (minhash, span/winnow, bm25) build NEW cache/checkpoint
-        # blocks per invocation; stacked generations pressure storage
-        # memory enough to inflate the runs being measured (clearCache
-        # covers CacheManager entries; the gc pass lets the
-        # ContextCleaner release localCheckpoint blocks)
-        spark.catalog.clearCache()
-        import gc
-        gc.collect()
 
     # min of N steady runs: single-shot steady timings on this box
     # swing several-× run-to-run (GC pauses, page-cache misses on a
@@ -582,14 +297,14 @@ def _worker_main() -> None:
         return round(time.perf_counter() - t0, 3)
 
     for name in names:
-        fn = overrides.get(name) or workload.REGISTRY[name][0]
+        fn = workload.timed(name)
         load = round(os.getloadavg()[0], 2)
         run_once(fn)                         # warm (codegen)
-        cleanup()
+        bench.cleanup(spark)
         times = []
         for _ in range(RUNS):
             times.append(run_once(fn))
-            cleanup()
+            bench.cleanup(spark)
         # extend while still DESCENDING: a min that sits on the last
         # run means the page-cache warm-up never converged (q136
         # recorded 33.0 -> 27.5 -> 22.1 and stopped — the 17.2× "weak"
@@ -599,7 +314,7 @@ def _worker_main() -> None:
                and (times[-1] == min(times)
                     or max(times[-3:]) > 1.5 * min(times[-3:]))):
             times.append(run_once(fn))
-            cleanup()
+            bench.cleanup(spark)
         out[name] = {"runs": times, "load": load,
                      "worker_pid": os.getpid()}
     with open(os.environ["SMOKE_WORKER_OUT"], "w") as fh:
@@ -608,26 +323,12 @@ def _worker_main() -> None:
 
 
 def _run_family(names: list[str], sf_dir: str) -> dict[str, dict]:
-    """Launch a fresh worker process for (family, scale); return its
-    partial results."""
-    import json
-    import subprocess
-
-    with tempfile.NamedTemporaryFile(suffix=".json", delete=False) as fh:
-        out_path = fh.name
-    env = dict(os.environ,
-               SMOKE_WORKER_QUERIES=",".join(names),
-               SMOKE_WORKER_SF=sf_dir,
-               SMOKE_WORKER_OUT=out_path)
-    proc = subprocess.run([sys.executable, os.path.abspath(__file__)],
-                          env=env, capture_output=True, text=True)
-    if proc.returncode != 0:
-        sys.stderr.write(proc.stdout[-2000:] + proc.stderr[-4000:])
-        raise RuntimeError(f"smoke worker for {names} failed "
-                           f"(rc={proc.returncode})")
-    with open(out_path) as fh:
-        res = json.load(fh)
-    os.unlink(out_path)
+    """Measure one (family, scale) in a fresh worker; a crashed worker
+    fails the smoke."""
+    res = bench.run_family(__file__, "SMOKE_WORKER", names, sf_dir)
+    failed = {n: r["err"] for n, r in res.items() if "err" in r}
+    if failed:
+        raise RuntimeError(f"smoke worker for {names} failed: {failed}")
     return res
 
 
@@ -645,25 +346,14 @@ def main() -> None:
     # -- replica build (own session, stopped before any measurement) --
     spark = get_spark(app_name="scale_smoke_build",
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # SMOKE_REPLICA_DIR: reuse a replica prebuilt by
-    # scripts/build_replica.py (same replicate() code) — skips the
+    # scripts/build_replica.py (same build_replica() code) — skips the
     # ~10 min build and keeps it for later perf iteration
     prebuilt = os.environ.get("SMOKE_REPLICA_DIR")
     big = prebuilt or tempfile.mkdtemp(prefix="sf1_replica_")
-    offset = 100_000_000
 
     t0 = time.perf_counter()
-    for tbl in ("lineitem", "orders", "customer", "supplier", "part",
-                "nation", "region", "documents", "embeddings", "events"):
-        if prebuilt and os.path.exists(f"{big}/{tbl}.parquet/_SUCCESS"):
-            continue
-        if tbl in KEY_SHIFTS:
-            replicate(spark, tbl, big, offset)
-        else:
-            # dimensions/fixtures stay as-is (broadcast sides)
-            spark.read.parquet(f"{SF_DIR}/{tbl}.parquet") \
-                .write.mode("overwrite").parquet(f"{big}/{tbl}.parquet")
+    build_replica(spark, big)
     build_s = time.perf_counter() - t0
     rows_small = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
     rows_big = spark.read.parquet(f"{big}/lineitem.parquet").count()

@@ -22,6 +22,16 @@ shuffle-on-a-blocking-key (band hash, simhash chunk, lang) so candidate
 generation never goes quadratic on the corpus; pathologically hot
 buckets are capped (``max_bucket``) before the pair join — the standard
 guard against skew blowing up a single reducer.
+
+Construction rule (here and in :mod:`.filtering`): projections are SQL
+text, one ``selectExpr``/``where``/``F.expr`` call each. Every ``F.*``
+builder, Column operator and Python lambda is a py4j round trip
+(~0.25 ms), and building ``minhash_dedup`` from them (~1000 trips) took
+as long as running it on a corpus shard. The text parses to the same
+expressions, so plans do not change; to keep it so, identifiers go
+through :func:`_q`, integers through ``int()``, structs are written
+``struct(e AS name)`` and range checks as two comparisons (Spark 4.1
+turns SQL ``BETWEEN`` into a common expression with its own Project).
 """
 
 from __future__ import annotations
@@ -34,10 +44,26 @@ from pyspark.sql import functions as F
 from db2pq_spark.staging import stage
 
 
+def _q(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def normalize_sql(col: str) -> str:
+    """SQL text of the canonical text form of column ``col``:
+    lowercase, trimmed, whitespace runs collapsed to one space."""
+    return rf"regexp_replace(trim(lower({_q(col)})), '\\s+', ' ')"
+
+
 def normalize_text(col: Column | str) -> Column:
-    """Canonical text form: lowercase, whitespace collapsed."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(F.trim(F.lower(c)), r"\s+", " ")
+    """:func:`normalize_sql` as a Column (or applied to a Column)."""
+    if isinstance(col, str):
+        return F.expr(normalize_sql(col))
+    return F.regexp_replace(F.trim(F.lower(col)), r"\s+", " ")
+
+
+def _content_hash_sql(text_col: str) -> str:
+    return f"md5(encode({normalize_sql(text_col)}, 'UTF-8')) AS content_hash"
 
 
 def exact_dedup(
@@ -49,11 +75,11 @@ def exact_dedup(
     keep_id = min id, n_dups). One shuffle on the hash; partial
     aggregation happens map-side so only one row per (partition, hash)
     crosses the wire."""
-    h = F.md5(F.encode(normalize_text(text_col), "UTF-8")).alias("content_hash")
     return (
-        df.select(h, F.col(id_col))
+        df.selectExpr(_content_hash_sql(text_col), _q(id_col))
         .groupBy("content_hash")
-        .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("n_dups"))
+        .agg(F.expr(f"min({_q(id_col)}) AS keep_id"),
+             F.expr("count(*) AS n_dups"))
     )
 
 
@@ -70,12 +96,11 @@ def exact_dedup_incremental(
     document regardless of corpus bloat. At 100 TB you persist the
     corpus hash set once and pass it as ``corpus`` (any relation with
     a ``content_hash`` column is accepted verbatim)."""
-    h = F.md5(F.encode(normalize_text(text_col), "UTF-8"))
     if "content_hash" in corpus.columns:
         chashes = corpus.select("content_hash")
     else:
-        chashes = corpus.select(h.alias("content_hash"))
-    b = batch.select(F.col(id_col).alias("id"), h.alias("content_hash"))
+        chashes = corpus.selectExpr(_content_hash_sql(text_col))
+    b = batch.selectExpr(f"{_q(id_col)} AS id", _content_hash_sql(text_col))
     # corpus-side discipline: semi-filter the corpus scan by the
     # BROADCAST batch hash set (output <= matched corpus rows), then
     # broadcast the matched hashes back over the batch — the corpus
@@ -84,37 +109,47 @@ def exact_dedup_incremental(
         chashes.join(F.broadcast(b.select("content_hash").distinct()),
                      "content_hash", "left_semi")
         .distinct()
-        .withColumn("_dup", F.lit(True))
+        .selectExpr("content_hash", "true AS _dup")
     )
     return (
         b.join(F.broadcast(matched), "content_hash", "left")
-        .select("id", "content_hash",
-                F.coalesce(F.col("_dup"), F.lit(False)).alias("is_duplicate"))
+        .selectExpr("id", "content_hash",
+                    "coalesce(_dup, false) AS is_duplicate")
     )
 
 
-def word_shingles(col: Column | str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of normalized text (pure Catalyst
-    higher-order functions — no UDF).
+def word_shingles(col: str, n: int = 3) -> Column:
+    """Distinct word n-gram shingles of the normalized text of column
+    ``col`` (pure Catalyst higher-order functions — no UDF).
 
-    PERF: pass a column that already holds the token array (or at least
-    a bare column reference), not a computed expression — higher-order
-    lambdas evaluate interpreted with no common-subexpression
-    elimination, so an embedded ``split(regexp_replace(...))`` would
-    re-run once per shingle. :func:`with_shingles` is the fast path."""
-    c = F.col(col) if isinstance(col, str) else col
-    return _shingles_from_tokens(F.split(normalize_text(c), " "), n)
+    PERF: higher-order lambdas evaluate interpreted with no
+    common-subexpression elimination, so the embedded
+    ``split(regexp_replace(...))`` re-runs once per shingle.
+    :func:`with_shingles` is the fast path."""
+    return F.expr(_shingles_sql(f"split({normalize_sql(col)}, ' ')", n))
 
 
-def _shingles_from_tokens(tokens: Column, n: int) -> Column:
-    k = F.size(tokens)
-    grams = F.transform(
-        F.sequence(F.lit(0), k - n),
-        lambda i: F.concat_ws(" ", F.slice(tokens, i + 1, n)),
-    )
-    return F.array_distinct(
-        F.when(k >= n, grams).otherwise(F.array(F.concat_ws(" ", tokens)))
-    )
+def _shingles_sql(toks: str, n: int) -> str:
+    """SQL text of the distinct word ``n``-gram shingles of the token
+    array ``toks``; a document shorter than ``n`` tokens is one shingle,
+    its whole text."""
+    n = int(n)
+    grams = (f"transform(sequence(0, size({toks}) - {n}), "
+             f"i -> concat_ws(' ', slice({toks}, i + 1, {n})))")
+    return (f"array_distinct(CASE WHEN size({toks}) >= {n} THEN {grams} "
+            f"ELSE array(concat_ws(' ', {toks})) END)")
+
+
+def _doc_tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, _toks): the normalized token arrays near-dup candidate
+    generation shingles. NULL and empty/whitespace-only texts would all
+    collapse to the same degenerate shingle set and pair with each
+    other as "perfect duplicates" — near-dup semantics are meaningless
+    for them, so they are excluded (exact_dedup still groups them,
+    which IS meaningful)."""
+    return (df.selectExpr(f"{_q(id_col)} AS id",
+                          f"split({normalize_sql(text_col)}, ' ') AS _toks")
+            .where("size(_toks) > 0 AND _toks[0] != ''"))
 
 
 def with_shingles(
@@ -124,19 +159,8 @@ def with_shingles(
     projection stage, so the shingle lambda sees a column attribute and
     the regex/split runs exactly once per row (CollapseProject keeps the
     stages apart because the token array is referenced repeatedly)."""
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        F.split(normalize_text(text_col), " ").alias("_toks"),
-    )
-    # NULL and empty/whitespace-only texts would all collapse to the
-    # same degenerate shingle set and pair with each other as "perfect
-    # duplicates" — near-dup semantics are meaningless for them, so they
-    # are excluded from candidate generation (exact_dedup still groups
-    # them, which IS meaningful).
-    toks = toks.filter(F.size("_toks") > 0).filter(F.col("_toks")[0] != "")
-    return toks.select(
-        "id", _shingles_from_tokens(F.col("_toks"), n).alias("shingles")
-    )
+    return _doc_tokens(df, text_col, id_col).selectExpr(
+        "id", f"{_shingles_sql('_toks', n)} AS shingles")
 
 
 def with_shingle_hashes(
@@ -151,20 +175,15 @@ def with_shingle_hashes(
     shingle everywhere set semantics are needed (64-bit collisions
     are negligible for dedup — the gate-exactness configurations pin
     the text representation instead)."""
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        F.split(normalize_text(text_col), " ").alias("_toks"),
+    n = int(n)
+    grams = (f"transform(sequence(1, size(_th) - {n} + 1), "
+             f"i -> xxhash64(slice(_th, i, {n})))")
+    return (
+        _doc_tokens(df, text_col, id_col)
+        .selectExpr("id", "transform(_toks, t -> xxhash64(t)) AS _th")
+        .selectExpr("id", f"array_distinct(CASE WHEN size(_th) >= {n} "
+                    f"THEN {grams} ELSE array(xxhash64(_th)) END) AS shingles")
     )
-    toks = toks.filter(F.size("_toks") > 0).filter(F.col("_toks")[0] != "")
-    th = F.transform("_toks", lambda t: F.xxhash64(t))
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size("_th") - n + 1),
-        lambda i: F.xxhash64(F.slice(F.col("_th"), i, n)),
-    )
-    sh = F.when(F.size("_th") >= n, grams) \
-        .otherwise(F.array(F.xxhash64(F.col("_th"))))
-    return (toks.select("id", th.alias("_th"))
-            .select("id", F.array_distinct(sh).alias("shingles")))
 
 
 def _minhash_from_hashes_udf(num_hashes: int):
@@ -263,10 +282,10 @@ def minhash_signatures(
     arithmetic at C speed (~3× faster signature materialization at
     sf0.1). ``impl`` accepts only ``"arrow"``.
 
-    The input is pre-spread to the session's parallelism when the scan
-    plans fewer partitions than cores (one small file ⇒ one partition ⇒
-    the whole shingle+signature kernel on one core; see
-    :func:`..skew.ensure_parallelism` — a no-op at any real scale)."""
+    An exchange-free input planning fewer partitions than cores is
+    spread first (:func:`..skew.ensure_parallelism`); one behind a
+    shuffle or a broadcast join is not — each Python task's fixed
+    start-up cost (SCALE.md) outweighs spreading a small shard."""
     from db2pq_spark.operators.skew import ensure_parallelism
 
     if impl != "arrow":
@@ -274,17 +293,17 @@ def minhash_signatures(
     if shingle_repr == "hash":
         base = with_shingle_hashes(ensure_parallelism(df), text_col,
                                    id_col, shingle_n)
-        hs = F.col("shingles")  # already 64-bit hashes
+        hs = "shingles"  # already 64-bit hashes
     elif shingle_repr == "text":
         base = with_shingles(ensure_parallelism(df), text_col, id_col,
                              shingle_n)
-        hs = F.transform("shingles", lambda s: F.xxhash64(s))
+        hs = F.expr("transform(shingles, s -> xxhash64(s))")
     else:
         raise ValueError(f"unknown shingle_repr {shingle_repr!r} — "
                          "'hash' or 'text'")
     sig = _minhash_from_hashes_udf(num_hashes)(hs).alias("sig")
     return base.select("id", "shingles", sig,
-                       F.lit(shingle_repr).alias("_sig_repr"))
+                       F.expr(f"'{shingle_repr}' AS _sig_repr"))
 
 
 def _bucket_pairs(
@@ -300,27 +319,18 @@ def _bucket_pairs(
     shuffles are the groupBy and the final distinct — the two-sided
     exploded join this replaces shuffled the membership table twice and
     joined it."""
-    size_ok = F.size("ids") >= 2
+    size_ok = "size(ids) >= 2"
     if max_bucket is not None:
-        size_ok = size_ok & (F.size("ids") <= max_bucket)
-    grouped = (
-        buckets.groupBy(*bucket_cols)
-        .agg(F.collect_set("id").alias("ids"))
-        .filter(size_ok)
-        .select(F.array_sort("ids").alias("ids"))
-    )
-    k = F.size("ids")
-    pairs = F.flatten(F.transform(
-        F.sequence(F.lit(1), k - 1),
-        lambda i: F.transform(
-            F.slice("ids", i + 1, k - i),
-            lambda y: F.struct(
-                F.element_at("ids", i).alias("id1"), y.alias("id2")),
-        ),
-    ))
+        size_ok += f" AND size(ids) <= {int(max_bucket)}"
+    pairs = ("flatten(transform(sequence(1, size(ids) - 1), i -> "
+             "transform(slice(ids, i + 1, size(ids) - i), "
+             "y -> struct(element_at(ids, i) AS id1, y AS id2))))")
     return (
-        grouped.select(F.explode(pairs).alias("p"))
-        .select("p.id1", "p.id2")
+        buckets.groupBy(*bucket_cols).agg(F.expr("collect_set(id) AS ids"))
+        .where(size_ok)
+        .selectExpr("array_sort(ids) AS ids")
+        .selectExpr(f"explode({pairs}) AS p")
+        .selectExpr("p.id1", "p.id2")
         .distinct()
     )
 
@@ -334,13 +344,14 @@ def _band_key_entries(bands: int, rows_per_band: int) -> Column:
     ``bands`` (32 unrolled xxhash64(slice) branches cost real one-time
     janino compilation; the per-row slice work is identical either
     way, verified key-for-key)."""
-    return F.explode(F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.struct(
-            b.alias("band"),
-            F.xxhash64(F.slice("sig", b * rows_per_band + 1,
-                               rows_per_band)).alias("key")),
-    )).alias("bk")
+    r = int(rows_per_band)
+    return F.expr(
+        f"explode(transform(sequence(0, {int(bands) - 1}), b -> struct("
+        f"b AS band, xxhash64(slice(sig, b * {r} + 1, {r})) AS key))) AS bk")
+
+
+#: exact Jaccard similarity of two array columns, as SQL text
+_JACCARD = "size(array_intersect({0}, {1})) / size(array_union({0}, {1})) AS jaccard"
 
 
 def minhash_dedup(
@@ -363,27 +374,19 @@ def minhash_dedup(
     long sets per ``shingle_repr`` — see :func:`minhash_signatures`).
     Buckets larger than ``max_bucket`` are dropped (skew guard — a
     degenerate band key would otherwise create a quadratic reducer)."""
-    rows_per_band = num_hashes // bands
     sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n,
                               impl=impl, shingle_repr=shingle_repr)
     # three consumers: the bucket self-join and both verify sides
     sigs = stage(sigs)
-
-    band_entries = _band_key_entries(bands, rows_per_band)
-    buckets = sigs.select("id", band_entries).select("id", "bk.band", "bk.key")
+    buckets = (sigs.select("id", _band_key_entries(bands, num_hashes // bands))
+               .selectExpr("id", "bk.band", "bk.key"))
     cand = _bucket_pairs(buckets, ["band", "key"], max_bucket)
-
-    sh = sigs.select("id", "shingles")
-    verified = (
-        cand.join(sh.withColumnsRenamed({"id": "id1", "shingles": "sh1"}), "id1")
-        .join(sh.withColumnsRenamed({"id": "id2", "shingles": "sh2"}), "id2")
-        .withColumn("inter", F.size(F.array_intersect("sh1", "sh2")))
-        .withColumn("union_", F.size(F.array_union("sh1", "sh2")))
-        .withColumn("jaccard", F.col("inter") / F.col("union_"))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id1", "id2", "jaccard")
+    return (
+        cand.join(sigs.selectExpr("id AS id1", "shingles AS sh1"), "id1")
+        .join(sigs.selectExpr("id AS id2", "shingles AS sh2"), "id2")
+        .selectExpr("id1", "id2", _JACCARD.format("sh1", "sh2"))
+        .where(f"jaccard >= {float(threshold)!r}D")
     )
-    return verified
 
 
 def minhash_dedup_incremental(
@@ -551,10 +554,10 @@ def _minhash_dedup_incremental_cached(
                                   shingle_repr=shingle_repr)
 
     entries = _band_key_entries(bands, rows_per_band)
-    cbuckets = (csig.select(F.col("id").alias("corpus_id"), entries)
-                .select("corpus_id", "bk.band", "bk.key"))
+    cbuckets = (csig.select(F.expr("id AS corpus_id"), entries)
+                .selectExpr("corpus_id", "bk.band", "bk.key"))
     bbuckets = (bsig.select("batch_id", entries)
-                .select("batch_id", "bk.band", "bk.key"))
+                .selectExpr("batch_id", "bk.band", "bk.key"))
 
     # broadcast the batch's DISTINCT (band, key) pairs as a semi filter
     # FIRST: a corpus bucket with no batch member can neither produce a
@@ -570,14 +573,14 @@ def _minhash_dedup_incremental_cached(
     if max_bucket is not None:
         hits = stage(hits)
         hot = (hits.groupBy("band", "key").count()
-               .filter(F.col("count") > max_bucket)
+               .where(f"`count` > {int(max_bucket)}")
                .select("band", "key"))
         hits = hits.join(F.broadcast(hot), ["band", "key"],
                          "left_anti")
 
     cand = (
         hits.join(F.broadcast(bbuckets), ["band", "key"])
-        .filter(F.col("corpus_id") != F.col("batch_id"))
+        .where("corpus_id != batch_id")
         .select("batch_id", "corpus_id")
         .distinct()
         # cand feeds two verify branches (shingle-prune + pair join);
@@ -591,28 +594,24 @@ def _minhash_dedup_incremental_cached(
     # the broadcast candidate ids BEFORE shingling — only the
     # threshold-bounded candidate minority is ever re-shingled, the
     # corpus-wide relation is never shingled twice and never shuffles
-    cand_ids = cand.select(F.col("corpus_id").alias("id")).distinct()
+    cand_ids = cand.selectExpr("corpus_id AS id").distinct()
     if csig is corpus:  # precomputed signatures: shingles already stored
         pruned = csig.join(F.broadcast(cand_ids), "id", "left_semi")
         csh_rel = pruned.select("id", "shingles")
     else:
         pruned_docs = corpus.join(
-            F.broadcast(cand_ids.withColumnRenamed("id", id_col)),
+            F.broadcast(cand_ids.selectExpr(f"id AS {_q(id_col)}")),
             id_col, "left_semi")
         mk_sh = (with_shingle_hashes if shingle_repr == "hash"
                  else with_shingles)
         csh_rel = mk_sh(pruned_docs, text_col, id_col, shingle_n)
     cand_b = cand.join(
-        bsig.select("batch_id", F.col("shingles").alias("bsh")), "batch_id")
-    csh = csh_rel.select(F.col("id").alias("corpus_id"),
-                         F.col("shingles").alias("csh"))
-    inter = F.size(F.array_intersect("bsh", "csh"))
-    union_ = F.size(F.array_union("bsh", "csh"))
+        bsig.selectExpr("batch_id", "shingles AS bsh"), "batch_id")
+    csh = csh_rel.selectExpr("id AS corpus_id", "shingles AS csh")
     out = (
         csh.join(F.broadcast(cand_b), "corpus_id")
-        .withColumn("jaccard", inter / union_)
-        .filter(F.col("jaccard") >= threshold)
-        .select("batch_id", "corpus_id", "jaccard")
+        .selectExpr("batch_id", "corpus_id", _JACCARD.format("bsh", "csh"))
+        .where(f"jaccard >= {float(threshold)!r}D")
     )
     return out, [bsig, cand]
 
@@ -795,27 +794,21 @@ def ngram_jaccard_pairs(
     bounds the join; suitable as a verifier behind LSH or on moderate
     block sizes. Fully SQL-expressible (the DuckDB oracle replays it
     exactly with list_intersect/list_distinct)."""
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        *( [F.col(block_col).alias("block")] if block_col else [F.lit(1).alias("block")] ),
-        F.split(normalize_text(text_col), " ").alias("_toks"),
-    )
     # same degenerate-document policy as minhash/simhash: NULL and
     # empty/whitespace-only texts are excluded (they'd all pair with
     # each other at jaccard 1.0)
-    toks = toks.filter(F.size("_toks") > 0).filter(F.col("_toks")[0] != "")
-    sh = toks.select(
-        "id", "block", _shingles_from_tokens(F.col("_toks"), n).alias("grams")
-    )
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = F.size(F.array_intersect(F.col("a.grams"), F.col("b.grams")))
-    union_ = F.size(F.col("a.grams")) + F.size(F.col("b.grams")) - inter
+    sh = (df.selectExpr(f"{_q(id_col)} AS id",
+                        f"{_q(block_col) if block_col else 1} AS block",
+                        f"split({normalize_sql(text_col)}, ' ') AS _toks")
+          .where("size(_toks) > 0 AND _toks[0] != ''")
+          .selectExpr("id", "block", f"{_shingles_sql('_toks', n)} AS grams"))
+    inter = "size(array_intersect(a.grams, b.grams))"
     return (
-        a.join(b, (F.col("a.block") == F.col("b.block"))
-               & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"),
-                (inter / union_).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+        sh.alias("a").join(sh.alias("b"),
+                           F.expr("a.block = b.block AND a.id < b.id"))
+        .selectExpr("a.id AS id1", "b.id AS id2", f"{inter} / "
+                    f"(size(a.grams) + size(b.grams) - {inter}) AS jaccard")
+        .where(f"jaccard >= {float(threshold)!r}D")
     )
 
 

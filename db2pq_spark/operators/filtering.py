@@ -36,13 +36,14 @@ the corpus and nothing visits the driver.
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from db2pq_spark.operators.dedup import normalize_text
-from db2pq_spark.operators.textstats import stopword_count, tokens
+from db2pq_spark.operators.dedup import _q, normalize_sql, normalize_text
+from db2pq_spark.operators.textstats import STOPWORDS
 from db2pq_spark.staging import stage
 
 
@@ -89,37 +90,34 @@ def gopher_rules(
     but linear, no shuffle, no UDF)."""
     sym_pct = _pct(max_symbol_ratio, "max_symbol_ratio")
     alpha_pct = _pct(min_alpha_frac, "min_alpha_frac")
-    raw = F.col(text_col)
-    norm = normalize_text(text_col)
-    toks = tokens(text_col)
-    n_words = F.size(toks).cast("bigint")
-    word_chars = (F.length(norm) - (n_words - F.lit(1))).cast("bigint")
-    n_alpha = F.size(
-        F.filter(toks, lambda x: x.rlike("[a-z]"))).cast("bigint")
+    norm = normalize_sql(text_col)
+    toks = f"split({norm}, ' ')"
+    stop = ", ".join(f"'{w}'" for w in STOPWORDS["en"])
+    n_words = f"CAST(size({toks}) AS BIGINT)"
+    word_chars = f"CAST(length({norm}) - ({n_words} - 1) AS BIGINT)"
+    n_alpha = f"CAST(size(filter({toks}, x -> x RLIKE '[a-z]')) AS BIGINT)"
     # Gopher's symbol rule counts '#' and ellipsis occurrences; a
     # non-overlapping regex scan is identical in Java regex and RE2.
-    n_symbols = F.regexp_count(raw, F.lit(r"#|\.\.\.")).cast("bigint")
-    stop_hits = stopword_count(text_col).cast("bigint")
-    r_wc = n_words.between(min_words, max_words)
-    r_mwl = (word_chars >= F.lit(min_mean_word_len) * n_words) & \
-            (word_chars <= F.lit(max_mean_word_len) * n_words)
-    r_sym = (n_symbols * 100) <= (F.lit(sym_pct) * n_words)
-    r_alpha = (n_alpha * 100) >= (F.lit(alpha_pct) * n_words)
-    r_stop = stop_hits >= F.lit(int(min_stopwords))
-    return df.select(
-        F.col(id_col).alias("id"),
-        n_words.alias("n_words"),
-        word_chars.alias("word_chars"),
-        n_alpha.alias("n_alpha_words"),
-        n_symbols.alias("n_symbols"),
-        stop_hits.alias("stop_hits"),
-        r_wc.alias("r_word_count"),
-        r_mwl.alias("r_mean_word_len"),
-        r_sym.alias("r_symbol_ratio"),
-        r_alpha.alias("r_alpha_frac"),
-        r_stop.alias("r_stopwords"),
-        (r_wc & r_mwl & r_sym & r_alpha & r_stop).alias("passes"),
-    )
+    n_symbols = rf"CAST(regexp_count({_q(text_col)}, '#|\\.\\.\\.') AS BIGINT)"
+    stop_hits = f"CAST(size(filter({toks}, x -> x IN ({stop}))) AS BIGINT)"
+    cols = {
+        "n_words": n_words, "word_chars": word_chars, "n_alpha_words": n_alpha,
+        "n_symbols": n_symbols, "stop_hits": stop_hits,
+        "r_word_count": f"({n_words} >= {int(min_words)}) AND "
+                        f"({n_words} <= {int(max_words)})",
+        "r_mean_word_len": f"({word_chars} >= {int(min_mean_word_len)} * {n_words}) AND "
+                           f"({word_chars} <= {int(max_mean_word_len)} * {n_words})",
+        "r_symbol_ratio": f"({n_symbols} * 100) <= ({sym_pct} * {n_words})",
+        "r_alpha_frac": f"({n_alpha} * 100) >= ({alpha_pct} * {n_words})",
+        "r_stopwords": f"{stop_hits} >= {int(min_stopwords)}",
+    }
+    # nested, not a flat "a AND b AND ...": the parser balances a flat
+    # chain, and the flags conjoin left to right
+    passes = reduce(lambda acc, e: f"({acc}) AND ({e})",
+                    [e for k, e in cols.items() if k.startswith("r_")])
+    return df.selectExpr(f"{_q(id_col)} AS id",
+                         *(f"{e} AS {k}" for k, e in cols.items()),
+                         f"{passes} AS passes")
 
 
 def line_filter(

@@ -17,26 +17,7 @@ reducer. Two remedies, composable:
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, functions as F
-
-#: shuffle-exchange plan nodes. ShuffleExchangeExec renders as
-#: "Exchange hashpartitioning(...)" / "Exchange roundrobinpartitioning
-#: (...)" / "Exchange rangepartitioning(...)" / "Exchange
-#: SinglePartition"; under AQE a materialized one shows as
-#: "ShuffleQueryStage". A bare "Exchange" substring test would also
-#: match BroadcastExchange — see :func:`ensure_parallelism`.
-_SHUFFLE_RE = re.compile(
-    r"\bExchange (?:hashpartitioning|rangepartitioning"
-    r"|roundrobinpartitioning|SinglePartition)|ShuffleQueryStage")
-
-#: inputs at or below this logical-stats size are unconditionally
-#: round-robin spread when their plan contains a (broadcast) exchange —
-#: small enough that the extra shuffle is trivially cheap, and the
-#: partition count cannot be probed via ``.rdd`` without materializing
-#: the broadcast stage (see below)
-_SMALL_INPUT_BYTES = 64 * 1024 * 1024
 
 
 def ensure_parallelism(
@@ -54,36 +35,19 @@ def ensure_parallelism(
     scan splits ⇒ few bytes), so the one round-robin shuffle is
     trivially cheap next to the kernel it parallelizes.
 
-    Three plan classes (checked on the pre-execution plan string,
-    SHUFFLE exchanges matched specifically — a bare "Exchange"
-    substring would also hit BroadcastExchange and skip e.g. a small
-    scan joined to a broadcast dimension, leaving the downstream kernel
-    on one core):
-
-    - has a shuffle exchange: already partitioned by
-      ``spark.sql.shuffle.partitions`` — return as-is;
-    - exchange-free (plain scans/narrow ops): probe the real partition
-      count via ``.rdd`` (safe — builds the RDD without running
-      anything) and spread only if under-partitioned;
-    - broadcast-exchange-only: ``.rdd`` would MATERIALIZE the broadcast
-      stage as a real job under AQE, so instead of probing, spread
-      whenever the optimizer's logical size estimate is small
-      (≤ ``_SMALL_INPUT_BYTES``) — exactly the regime where
-      under-partitioning is plausible and a round-robin shuffle is
-      cheap; larger inputs keep their scan partitioning."""
-    sc = df.sparkSession.sparkContext
-    target = min_partitions or sc.defaultParallelism
-    qe = df._jdf.queryExecution()
-    plan = qe.executedPlan().toString()
-    if _SHUFFLE_RE.search(plan):
-        return df
-    if "Exchange" in plan:  # broadcast-only: can't probe via .rdd
-        try:
-            size = int(qe.optimizedPlan().stats().sizeInBytes().toString())
-        except Exception:  # stats API drift: keep the old safe bail
-            return df
-        if size <= _SMALL_INPUT_BYTES:
-            return df.repartition(target)
+    Only an exchange-free plan (plain scans and narrow ops) is spread,
+    and only when its real partition count — probed via ``.rdd``,
+    which builds the RDD without running anything — is below the
+    target. A plan with any exchange is returned as-is: behind a
+    shuffle it already has ``spark.sql.shuffle.partitions``
+    partitions, and behind a broadcast join ``.rdd`` would materialize
+    the broadcast stage as a real job under AQE. Leaving a small
+    broadcast-joined input on its scan partitions is deliberate: each
+    Python-worker task pays a ~230 ms fixed start-up cost (SCALE.md,
+    "Fixed costs worth knowing"), so spreading a 400-document shard
+    made its MinHash kernel slower, not faster."""
+    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    if "Exchange" in df._jdf.queryExecution().executedPlan().toString():
         return df
     if df.rdd.getNumPartitions() >= target:
         return df

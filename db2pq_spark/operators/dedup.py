@@ -55,11 +55,14 @@ def normalize_sql(col: str) -> str:
     return rf"regexp_replace(trim(lower({_q(col)})), '\\s+', ' ')"
 
 
-def normalize_text(col: Column | str) -> Column:
-    """:func:`normalize_sql` as a Column (or applied to a Column)."""
-    if isinstance(col, str):
-        return F.expr(normalize_sql(col))
-    return F.regexp_replace(F.trim(F.lower(col)), r"\s+", " ")
+def normalize_text(col: str) -> Column:
+    """:func:`normalize_sql` as a Column."""
+    return F.expr(normalize_sql(col))
+
+
+def tokens_sql(col: str) -> str:
+    """SQL text of the whitespace tokens of :func:`normalize_sql`."""
+    return f"split({normalize_sql(col)}, ' ')"
 
 
 def _content_hash_sql(text_col: str) -> str:
@@ -126,29 +129,33 @@ def word_shingles(col: str, n: int = 3) -> Column:
     common-subexpression elimination, so the embedded
     ``split(regexp_replace(...))`` re-runs once per shingle.
     :func:`with_shingles` is the fast path."""
-    return F.expr(_shingles_sql(f"split({normalize_sql(col)}, ' ')", n))
+    var = "j" if col.lower() == "i" else "i"
+    return F.expr(_shingles_sql(tokens_sql(col), n, var))
 
 
-def _shingles_sql(toks: str, n: int) -> str:
+def _shingles_sql(toks: str, n: int, var: str = "i") -> str:
     """SQL text of the distinct word ``n``-gram shingles of the token
     array ``toks``; a document shorter than ``n`` tokens is one shingle,
-    its whole text."""
+    its whole text. ``var``, the lambda variable, must not name a
+    column ``toks`` mentions (it would shadow it)."""
     n = int(n)
     grams = (f"transform(sequence(0, size({toks}) - {n}), "
-             f"i -> concat_ws(' ', slice({toks}, i + 1, {n})))")
+             f"{var} -> concat_ws(' ', slice({toks}, {var} + 1, {n})))")
     return (f"array_distinct(CASE WHEN size({toks}) >= {n} THEN {grams} "
             f"ELSE array(concat_ws(' ', {toks})) END)")
 
 
-def _doc_tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, _toks): the normalized token arrays near-dup candidate
-    generation shingles. NULL and empty/whitespace-only texts would all
+def _doc_tokens(df: DataFrame, text_col: str, id_col: str,
+                *extra: str) -> DataFrame:
+    """(id, *extra, _toks): the normalized token arrays near-dup
+    candidate generation shingles, with any ``extra`` SQL projections
+    carried along. NULL and empty/whitespace-only texts would all
     collapse to the same degenerate shingle set and pair with each
     other as "perfect duplicates" — near-dup semantics are meaningless
     for them, so they are excluded (exact_dedup still groups them,
     which IS meaningful)."""
-    return (df.selectExpr(f"{_q(id_col)} AS id",
-                          f"split({normalize_sql(text_col)}, ' ') AS _toks")
+    return (df.selectExpr(f"{_q(id_col)} AS id", *extra,
+                          f"{tokens_sql(text_col)} AS _toks")
             .where("size(_toks) > 0 AND _toks[0] != ''"))
 
 
@@ -696,7 +703,7 @@ def simhash(df: DataFrame, text_col: str, id_col: str,
     df = ensure_parallelism(df)
     df = df.filter(F.col(text_col).isNotNull()
                    & (F.trim(F.col(text_col)) != ""))  # degenerate docs out
-    toks = F.split(normalize_text(text_col), " ")
+    toks = F.expr(tokens_sql(text_col))
     hashes = F.transform(toks, lambda t_: _token_hash(t_, token_hash))
     if impl == "arrow":
         kern = _simhash_from_hashes_udf()
@@ -794,13 +801,8 @@ def ngram_jaccard_pairs(
     bounds the join; suitable as a verifier behind LSH or on moderate
     block sizes. Fully SQL-expressible (the DuckDB oracle replays it
     exactly with list_intersect/list_distinct)."""
-    # same degenerate-document policy as minhash/simhash: NULL and
-    # empty/whitespace-only texts are excluded (they'd all pair with
-    # each other at jaccard 1.0)
-    sh = (df.selectExpr(f"{_q(id_col)} AS id",
-                        f"{_q(block_col) if block_col else 1} AS block",
-                        f"split({normalize_sql(text_col)}, ' ') AS _toks")
-          .where("size(_toks) > 0 AND _toks[0] != ''")
+    block = f"{_q(block_col) if block_col else 1} AS block"
+    sh = (_doc_tokens(df, text_col, id_col, block)
           .selectExpr("id", "block", f"{_shingles_sql('_toks', n)} AS grams"))
     inter = "size(array_intersect(a.grams, b.grams))"
     return (
@@ -1009,7 +1011,7 @@ def _winnow_arrays(df: DataFrame, text_col: str, id_col: str,
         .filter(F.col(text_col).isNotNull()
                 & (F.trim(F.col(text_col)) != ""))
         .select(F.col(id_col).alias("id"),
-                F.split(normalize_text(text_col), " ").alias("_toks"))
+                F.expr(f"{tokens_sql(text_col)} AS _toks"))
         .where(F.size("_toks") >= k)
     )
     if token_hash == "arrow64":
@@ -1290,7 +1292,7 @@ def _span_hashes(df: DataFrame, text_col: str, id_col: str, n: int,
     token."""
     from db2pq_spark.operators.skew import ensure_parallelism
 
-    toks = F.split(normalize_text(text_col), " ")
+    toks = F.expr(tokens_sql(text_col))
     base = (ensure_parallelism(df)
             .select(F.col(id_col), toks.alias("_toks"))
             .where(F.size("_toks") >= n))
@@ -1326,8 +1328,7 @@ def _span_stage(df: DataFrame, text_col: str, id_col: str, n: int,
     staged = (df.filter(F.col(text_col).isNotNull()
                         & (F.trim(F.col(text_col)) != ""))
               .select(F.col(id_col).alias("id"),
-                      F.split(normalize_text(text_col), " ")
-                      .alias("_toks")))
+                      F.expr(f"{tokens_sql(text_col)} AS _toks")))
     if span_hash == "xxhash64":
         staged = staged.select(
             "id", "_toks",

@@ -42,8 +42,10 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from db2pq_spark.operators.dedup import _q, normalize_sql, normalize_text
-from db2pq_spark.operators.textstats import STOPWORDS
+from db2pq_spark.operators.dedup import (
+    _q, normalize_sql, normalize_text, tokens_sql,
+)
+from db2pq_spark.operators.textstats import stopword_count_sql
 from db2pq_spark.staging import stage
 
 
@@ -90,26 +92,31 @@ def gopher_rules(
     but linear, no shuffle, no UDF)."""
     sym_pct = _pct(max_symbol_ratio, "max_symbol_ratio")
     alpha_pct = _pct(min_alpha_frac, "min_alpha_frac")
+    bounds = (min_words, max_words, min_mean_word_len, max_mean_word_len,
+              min_stopwords)
+    if any(b != int(b) for b in bounds):  # truncating would move flags
+        raise ValueError("word-count, word-length and stopword bounds "
+                         f"must be whole numbers, got {bounds}")
+    lo_words, hi_words, lo_len, hi_len, min_stop = map(int, bounds)
     norm = normalize_sql(text_col)
-    toks = f"split({norm}, ' ')"
-    stop = ", ".join(f"'{w}'" for w in STOPWORDS["en"])
+    toks = tokens_sql(text_col)
     n_words = f"CAST(size({toks}) AS BIGINT)"
     word_chars = f"CAST(length({norm}) - ({n_words} - 1) AS BIGINT)"
     n_alpha = f"CAST(size(filter({toks}, x -> x RLIKE '[a-z]')) AS BIGINT)"
     # Gopher's symbol rule counts '#' and ellipsis occurrences; a
     # non-overlapping regex scan is identical in Java regex and RE2.
     n_symbols = rf"CAST(regexp_count({_q(text_col)}, '#|\\.\\.\\.') AS BIGINT)"
-    stop_hits = f"CAST(size(filter({toks}, x -> x IN ({stop}))) AS BIGINT)"
+    stop_hits = f"CAST({stopword_count_sql(text_col)} AS BIGINT)"
     cols = {
         "n_words": n_words, "word_chars": word_chars, "n_alpha_words": n_alpha,
         "n_symbols": n_symbols, "stop_hits": stop_hits,
-        "r_word_count": f"({n_words} >= {int(min_words)}) AND "
-                        f"({n_words} <= {int(max_words)})",
-        "r_mean_word_len": f"({word_chars} >= {int(min_mean_word_len)} * {n_words}) AND "
-                           f"({word_chars} <= {int(max_mean_word_len)} * {n_words})",
+        "r_word_count": f"({n_words} >= {lo_words}) AND "
+                        f"({n_words} <= {hi_words})",
+        "r_mean_word_len": f"({word_chars} >= {lo_len} * {n_words}) AND "
+                           f"({word_chars} <= {hi_len} * {n_words})",
         "r_symbol_ratio": f"({n_symbols} * 100) <= ({sym_pct} * {n_words})",
         "r_alpha_frac": f"({n_alpha} * 100) >= ({alpha_pct} * {n_words})",
-        "r_stopwords": f"{stop_hits} >= {int(min_stopwords)}",
+        "r_stopwords": f"{stop_hits} >= {min_stop}",
     }
     # nested, not a flat "a AND b AND ...": the parser balances a flat
     # chain, and the flags conjoin left to right

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from db2pq_spark.operators.dedup import normalize_text
+from db2pq_spark.operators.dedup import normalize_text, tokens_sql
 
 # Tiny per-language stopword inventories for the n-gram/stopword
 # language heuristic. Deliberately small and ASCII-comparable so the
@@ -27,11 +27,11 @@ STOPWORDS = {
 }
 
 
-def tokens(col: Column | str) -> Column:
-    return F.split(normalize_text(col), " ")
+def tokens(col: str) -> Column:
+    return F.expr(tokens_sql(col))
 
 
-def token_count(col: Column | str) -> Column:
+def token_count(col: str) -> Column:
     """Whitespace token count."""
     return F.size(tokens(col))
 
@@ -44,17 +44,22 @@ def punct_ratio(col: Column | str) -> Column:
     return F.when(total > 0, punct / total).otherwise(F.lit(0.0))
 
 
-def stopword_count(col: Column | str, lang: str = "en") -> Column:
-    words = STOPWORDS[lang]
-    return F.size(F.filter(tokens(col), lambda x: x.isin(*words)))
+def stopword_count_sql(col: str, lang: str = "en") -> str:
+    """SQL text of the number of ``lang`` stopword tokens in ``col``."""
+    words = ", ".join(f"'{w}'" for w in STOPWORDS[lang])
+    return f"size(filter({tokens_sql(col)}, x -> x IN ({words})))"
 
 
-def stopword_ratio(col: Column | str, lang: str = "en") -> Column:
+def stopword_count(col: str, lang: str = "en") -> Column:
+    return F.expr(stopword_count_sql(col, lang))
+
+
+def stopword_ratio(col: str, lang: str = "en") -> Column:
     n = token_count(col)
     return F.when(n > 0, stopword_count(col, lang) / n).otherwise(F.lit(0.0))
 
 
-def mean_token_len(col: Column | str) -> Column:
+def mean_token_len(col: str) -> Column:
     """Mean token length — exact rational (total chars of tokens /
     token count) so engines agree bit-for-bit."""
     toks = tokens(col)
@@ -63,12 +68,11 @@ def mean_token_len(col: Column | str) -> Column:
     return F.when(F.size(toks) > 0, total / F.size(toks)).otherwise(F.lit(0.0))
 
 
-def quality_score(col: Column | str) -> Column:
+def quality_score(col: str) -> Column:
     """Composite document-quality heuristic in [0, 1]:
     rewards stopword presence and moderate length, penalizes
     punctuation/digit noise. Deterministic double arithmetic."""
-    length_ok = (F.length(F.col(col) if isinstance(col, str) else col)
-                 .between(100, 10_000)).cast("double")
+    length_ok = F.length(F.col(col)).between(100, 10_000).cast("double")
     return F.round(
         0.4 * stopword_ratio(col) * 5.0  # typical en ratio ~0.2 → saturate
         + 0.3 * length_ok
@@ -101,7 +105,7 @@ def wordpiece_count(col: Column | str) -> Column:
     return F.regexp_count(c, F.lit(r"\w+|[^\w\s]")).cast("bigint")
 
 
-def fingerprint(col: Column | str) -> Column:
+def fingerprint(col: str) -> Column:
     """Deterministic document fingerprint: md5 of the normalized text.
     (Engine code paths that don't need cross-engine parity can use
     ``xxhash64`` for speed; md5 keeps the oracle exact.)"""

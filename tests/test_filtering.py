@@ -62,6 +62,10 @@ class TestGopherRules:
         df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
         with pytest.raises(ValueError, match="multiple of 0.01"):
             gopher_rules(df, "text", "doc_id", max_symbol_ratio=0.123)
+        # a fractional count bound is rejected, not truncated
+        with pytest.raises(ValueError, match="whole numbers"):
+            gopher_rules(df, "text", "doc_id", min_mean_word_len=3.5)
+        gopher_rules(df, "text", "doc_id", min_words=50.0)  # whole: fine
 
 
 class TestLineFilter:

@@ -63,6 +63,11 @@ class TestMinhash:
         [row] = df.select(word_shingles("text", 3).alias("s")).collect()
         assert row["s"] == ["hi there"]
 
+    def test_shingles_of_a_column_named_like_the_lambda_variable(self, spark):
+        df = spark.createDataFrame([(1, "a b c d")], "id long, i string")
+        [row] = df.select(word_shingles("i", 3).alias("s")).collect()
+        assert row["s"] == ["a b c", "b c d"]
+
 
 class TestIncrementalDedup:
     def test_batch_probes_corpus(self, docs):

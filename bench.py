@@ -25,7 +25,7 @@ valid; per-query loadavg, steady-run spread and worker pid land in
 BENCH_DETAIL.json so a contaminated number is self-diagnosing.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default all cores).
+     SPARK_GRAFT_CPUS (default the usable cores, session.usable_cores).
 """
 
 from __future__ import annotations
@@ -409,20 +409,13 @@ def main() -> None:
     # only the LAST 2000 chars of stdout, so this line may be truncated
     # there — the committed file is the durable copy. Reduced-core
     # scaling runs write a CPU-suffixed file so they stop clobbering
-    # the committed full-core record (VERDICT r13 item 7). The usable
-    # cores are the process's affinity mask (taskset/cgroup cpusets
-    # shrink it; os.cpu_count() reports host cores regardless),
-    # further capped by SPARK_GRAFT_CPUS when set.
+    # the committed full-core record (VERDICT r13 item 7); the core
+    # count is the one the session was sized from.
     print(json.dumps(detail))
+    from db2pq_spark.session import usable_cores
+
     host_cores = os.cpu_count() or 1
-    try:
-        cores = len(os.sched_getaffinity(0))
-    except AttributeError:  # platform without an affinity API
-        cores = host_cores
-    try:
-        cores = min(cores, int(os.environ.get("SPARK_GRAFT_CPUS", cores)))
-    except ValueError:
-        pass
+    cores = usable_cores()
     detail_name = (f"BENCH_DETAIL_c{cores}.json" if cores < host_cores
                    else "BENCH_DETAIL.json")
     try:

@@ -25,7 +25,7 @@ relation; each merge round then runs
 
 Determinism contract:
 
-- words: whitespace tokens of the shared ``normalize_text``;
+- words: the shared ``doc_tokens``;
 - winning pair per round: highest summed word frequency, ties broken
   by the lexicographically smallest "left right" pair string;
 - merge application: greedy leftmost non-overlapping, identical in
@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from db2pq_spark.operators.dedup import normalize_text
+from db2pq_spark.operators.dedup import doc_tokens
 from db2pq_spark.staging import stage
 
 __all__ = ["word_freqs", "bpe_train", "bpe_apply_merge"]
@@ -53,12 +53,8 @@ def word_freqs(df: DataFrame, text_col: str) -> DataFrame:
     from db2pq_spark.operators.skew import ensure_parallelism
 
     return (
-        ensure_parallelism(df)
-        .filter(F.col(text_col).isNotNull()
-                & (F.trim(F.col(text_col)) != ""))
-        .select(F.explode(F.split(normalize_text(text_col), " "))
-                .alias("word"))
-        .where(F.col("word") != "")
+        doc_tokens(ensure_parallelism(df), text_col, None)
+        .select(F.explode("_toks").alias("word"))
         .groupBy("word").agg(F.count("*").alias("freq"))
     )
 
@@ -172,19 +168,11 @@ def bpe_segment(
     doc. One corpus explode, one doc-keyed shuffle; the per-word
     segmentation is computed once per DISTINCT word, not once per
     occurrence."""
-    from db2pq_spark.operators.dedup import normalize_text
     from db2pq_spark.operators.skew import ensure_parallelism
 
     _, vocab = bpe_train(df, text_col, merges=merges)
-    toks = (
-        ensure_parallelism(df)
-        .filter(F.col(text_col).isNotNull()
-                & (F.trim(F.col(text_col)) != ""))
-        .select(F.col(id_col).alias("id"),
-                F.explode(F.split(normalize_text(text_col), " "))
-                .alias("word"))
-        .where(F.col("word") != "")
-    )
+    toks = (doc_tokens(ensure_parallelism(df), text_col, id_col)
+            .select("id", F.explode("_toks").alias("word")))
     return (
         toks.join(vocab.select("word", F.size("sym").alias("_ns")),
                   "word")

@@ -32,6 +32,19 @@ expressions, so plans do not change; to keep it so, identifiers go
 through :func:`_q`, integers through ``int()``, structs are written
 ``struct(e AS name)`` and range checks as two comparisons (Spark 4.1
 turns SQL ``BETWEEN`` into a common expression with its own Project).
+
+Tokenization rule (here and in every tokenizing operator): a text is
+lowercased, its whitespace runs collapsed to one space, then trimmed
+(:func:`normalize_sql`); its tokens are that form split on the space
+(:func:`tokens_sql`); and a document has tokens iff its raw text holds
+a non-whitespace character (:func:`doc_tokens`). Collapsing before
+trimming matters: Spark's ``trim`` strips only spaces, so the other
+order leaves an edge tab/CR/LF behind as an empty token. Under this
+rule no document's tokens contain ``''``, so no site needs an
+empty-token guard, and :func:`doc_tokens` filters on the raw text so
+the tokenization runs once per row (a filter on the token array is
+pushed below the tokenizing projection with the expression
+substituted, which evaluates it a second time).
 """
 
 from __future__ import annotations
@@ -49,10 +62,15 @@ def _q(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def normalize_expr(e: str) -> str:
+    """SQL text of the canonical text form of SQL expression ``e``:
+    lowercase, whitespace runs collapsed to one space, trimmed."""
+    return rf"trim(regexp_replace(lower({e}), '\\s+', ' '))"
+
+
 def normalize_sql(col: str) -> str:
-    """SQL text of the canonical text form of column ``col``:
-    lowercase, trimmed, whitespace runs collapsed to one space."""
-    return rf"regexp_replace(trim(lower({_q(col)})), '\\s+', ' ')"
+    """:func:`normalize_expr` of column ``col``."""
+    return normalize_expr(_q(col))
 
 
 def normalize_text(col: str) -> Column:
@@ -145,28 +163,27 @@ def _shingles_sql(toks: str, n: int, var: str = "i") -> str:
             f"ELSE array(concat_ws(' ', {toks})) END)")
 
 
-def _doc_tokens(df: DataFrame, text_col: str, id_col: str,
-                *extra: str) -> DataFrame:
-    """(id, *extra, _toks): the normalized token arrays near-dup
-    candidate generation shingles, with any ``extra`` SQL projections
-    carried along. NULL and empty/whitespace-only texts would all
-    collapse to the same degenerate shingle set and pair with each
-    other as "perfect duplicates" — near-dup semantics are meaningless
-    for them, so they are excluded (exact_dedup still groups them,
-    which IS meaningful)."""
-    return (df.selectExpr(f"{_q(id_col)} AS id", *extra,
-                          f"{tokens_sql(text_col)} AS _toks")
-            .where("size(_toks) > 0 AND _toks[0] != ''"))
+def doc_tokens(df: DataFrame, text_col: str, id_col: str | None,
+               *extra: str) -> DataFrame:
+    """(id, *extra, _toks): the tokens (:func:`tokens_sql`) of every
+    document that has any, with any ``extra`` SQL projections carried
+    along (``id_col=None`` projects no id). NULL and whitespace-only
+    texts have none and are dropped: they would all collapse to one
+    degenerate token set and pair with each other as "perfect
+    duplicates" (exact_dedup still groups them, which IS meaningful).
+    The test runs on the raw text, so the tokenization runs once per
+    row; no returned token is ``''``."""
+    ident = [f"{_q(id_col)} AS id"] if id_col is not None else []
+    return (df.where(rf"{_q(text_col)} RLIKE '\\S'")
+            .selectExpr(*ident, *extra, f"{tokens_sql(text_col)} AS _toks"))
 
 
 def with_shingles(
     df: DataFrame, text_col: str, id_col: str, n: int = 3,
 ) -> DataFrame:
-    """(id, shingles) with the tokenization materialized in its own
-    projection stage, so the shingle lambda sees a column attribute and
-    the regex/split runs exactly once per row (CollapseProject keeps the
-    stages apart because the token array is referenced repeatedly)."""
-    return _doc_tokens(df, text_col, id_col).selectExpr(
+    """(id, shingles) of every document :func:`doc_tokens` keeps, the
+    shingle lambda reading the projected token array."""
+    return doc_tokens(df, text_col, id_col).selectExpr(
         "id", f"{_shingles_sql('_toks', n)} AS shingles")
 
 
@@ -186,7 +203,7 @@ def with_shingle_hashes(
     grams = (f"transform(sequence(1, size(_th) - {n} + 1), "
              f"i -> xxhash64(slice(_th, i, {n})))")
     return (
-        _doc_tokens(df, text_col, id_col)
+        doc_tokens(df, text_col, id_col)
         .selectExpr("id", "transform(_toks, t -> xxhash64(t)) AS _th")
         .selectExpr("id", f"array_distinct(CASE WHEN size(_th) >= {n} "
                     f"THEN {grams} ELSE array(xxhash64(_th)) END) AS shingles")
@@ -700,15 +717,11 @@ def simhash(df: DataFrame, text_col: str, id_col: str,
 
     if impl not in ("arrow", "expr"):
         raise ValueError(f"unknown impl {impl!r} — 'arrow' or 'expr'")
-    df = ensure_parallelism(df)
-    df = df.filter(F.col(text_col).isNotNull()
-                   & (F.trim(F.col(text_col)) != ""))  # degenerate docs out
-    toks = F.expr(tokens_sql(text_col))
-    hashes = F.transform(toks, lambda t_: _token_hash(t_, token_hash))
+    base = doc_tokens(ensure_parallelism(df), text_col, id_col)
+    hashes = F.transform("_toks", lambda t_: _token_hash(t_, token_hash))
     if impl == "arrow":
         kern = _simhash_from_hashes_udf()
-        return df.select(F.col(id_col).alias("id"),
-                         kern(hashes).alias("simhash"))
+        return base.select("id", kern(hashes).alias("simhash"))
     masks = F.array(*[F.lit(m) for m in _BIT_MASKS])
     votes = F.aggregate(
         hashes,
@@ -730,7 +743,7 @@ def simhash(df: DataFrame, text_col: str, id_col: str,
         F.lit(0).cast("long"),
     )
     return (
-        df.select(F.col(id_col).alias("id"), votes.alias("_votes"))
+        base.select("id", votes.alias("_votes"))
         .select("id", packed.alias("simhash"))
     )
 
@@ -802,7 +815,7 @@ def ngram_jaccard_pairs(
     block sizes. Fully SQL-expressible (the DuckDB oracle replays it
     exactly with list_intersect/list_distinct)."""
     block = f"{_q(block_col) if block_col else 1} AS block"
-    sh = (_doc_tokens(df, text_col, id_col, block)
+    sh = (doc_tokens(df, text_col, id_col, block)
           .selectExpr("id", "block", f"{_shingles_sql('_toks', n)} AS grams"))
     inter = "size(array_intersect(a.grams, b.grams))"
     return (
@@ -1006,14 +1019,8 @@ def _winnow_arrays(df: DataFrame, text_col: str, id_col: str,
     multi-consumer caller stages the result itself."""
     from db2pq_spark.operators.skew import ensure_parallelism
 
-    base = (
-        ensure_parallelism(df)
-        .filter(F.col(text_col).isNotNull()
-                & (F.trim(F.col(text_col)) != ""))
-        .select(F.col(id_col).alias("id"),
-                F.expr(f"{tokens_sql(text_col)} AS _toks"))
-        .where(F.size("_toks") >= k)
-    )
+    base = (doc_tokens(ensure_parallelism(df), text_col, id_col)
+            .where(F.size("_toks") >= k))
     if token_hash == "arrow64":
         # production default: per-token xxhash64 stays JVM-side (one
         # hash per token), then ONE Arrow kernel replaces the two
@@ -1292,17 +1299,14 @@ def _span_hashes(df: DataFrame, text_col: str, id_col: str, n: int,
     token."""
     from db2pq_spark.operators.skew import ensure_parallelism
 
-    toks = F.expr(tokens_sql(text_col))
-    base = (ensure_parallelism(df)
-            .select(F.col(id_col), toks.alias("_toks"))
+    base = (doc_tokens(ensure_parallelism(df), text_col, id_col)
             .where(F.size("_toks") >= n))
     if span_hash == "xxhash64":
         return (
-            base.select(id_col,
+            base.select("id",
                         F.transform("_toks", lambda t: F.xxhash64(t))
                         .alias("_th"))
-            .select(F.col(id_col),
-                    F.posexplode(_span_hash_expr(n, span_hash))
+            .select("id", F.posexplode(_span_hash_expr(n, span_hash))
                     .alias("pos", "h"))
         )
     spans = F.transform(
@@ -1310,8 +1314,8 @@ def _span_hashes(df: DataFrame, text_col: str, id_col: str, n: int,
         lambda i: F.concat_ws(" ", F.slice(F.col("_toks"), i, n)),
     )
     return (
-        base.select(F.col(id_col), F.posexplode(spans).alias("pos", "_span"))
-        .select(F.col(id_col), "pos",
+        base.select("id", F.posexplode(spans).alias("pos", "_span"))
+        .select("id", "pos",
                 _span_key(F.col("_span"), span_hash).alias("h"))
     )
 
@@ -1325,10 +1329,7 @@ def _span_stage(df: DataFrame, text_col: str, id_col: str, n: int,
     extraction, rebuilds) re-reads it instead of re-running the pass
     (the un-staged shape really re-executes per consumer — it was ~2/3
     of the span family's runtime at the 100× replica)."""
-    staged = (df.filter(F.col(text_col).isNotNull()
-                        & (F.trim(F.col(text_col)) != ""))
-              .select(F.col(id_col).alias("id"),
-                      F.expr(f"{tokens_sql(text_col)} AS _toks")))
+    staged = doc_tokens(df, text_col, id_col)
     if span_hash == "xxhash64":
         staged = staged.select(
             "id", "_toks",
@@ -1553,14 +1554,14 @@ def contamination_stats(
         .select("h").distinct()
     hits = (
         tspans.join(bspans, "h", "left_semi")
-        .groupBy(id_col)
+        .groupBy("id")
         .agg(F.count("*").alias("contaminated_spans"))
     )
-    totals = tspans.groupBy(id_col).agg(F.count("*").alias("n_spans"))
+    totals = tspans.groupBy("id").agg(F.count("*").alias("n_spans"))
     return (
-        totals.join(hits, id_col, "left")
+        totals.join(hits, "id", "left")
         .select(
-            F.col(id_col), "n_spans",
+            F.col("id").alias(id_col), "n_spans",
             F.coalesce("contaminated_spans", F.lit(0)).cast("bigint")
              .alias("contaminated_spans"),
             (F.coalesce("contaminated_spans", F.lit(0)) > 0)

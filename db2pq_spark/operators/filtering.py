@@ -39,11 +39,11 @@ from __future__ import annotations
 from functools import reduce
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, Window as W
+from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from db2pq_spark.operators.dedup import (
-    _q, normalize_sql, normalize_text, tokens_sql,
+    _q, normalize_expr, normalize_sql, normalize_text, tokens_sql,
 )
 from db2pq_spark.operators.textstats import stopword_count_sql
 from db2pq_spark.staging import stage
@@ -155,43 +155,53 @@ def line_filter(
     scan-side projection."""
     import re as _re
 
-    lines = F.split(F.col(text_col), "\n")
-    block_re = "|".join(_re.escape(b.lower()) for b in blocklist)
-
-    def _keep(ln: Column) -> Column:
-        ln_norm = F.regexp_replace(F.trim(ln), r"\s+", " ")
-        cond = F.size(F.split(ln_norm, " ")) >= F.lit(int(min_words))
-        if block_re:
-            cond = cond & ~F.lower(ln).rlike(block_re)
-        if require_terminal_punct:
-            cond = cond & F.trim(ln).rlike(r"[.!?]$")
-        return cond
-
-    kept = F.filter(lines, _keep)
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.size(lines).cast("bigint").alias("n_lines"),
-        F.size(kept).cast("bigint").alias("n_kept"),
-        F.array_join(kept, "\n").alias("text_kept"),
-        (F.size(kept) >= F.lit(int(keep_min_lines))).alias("kept_doc"),
+    lines = _lines_sql(_q(text_col))
+    norm = normalize_expr("ln")
+    keep = [f"size(split({norm}, ' ')) >= {int(min_words)}"]
+    if blocklist:
+        block_re = "|".join(_re.escape(b.lower()) for b in blocklist)
+        keep.append(f"NOT lower(ln) RLIKE {_str_sql(block_re)}")
+    if require_terminal_punct:
+        keep.append(f"{norm} RLIKE '[.!?]$'")
+    kept = f"filter({lines}, ln -> {' AND '.join(keep)})"
+    return df.selectExpr(
+        f"{_q(id_col)} AS id",
+        f"CAST(size({lines}) AS BIGINT) AS n_lines",
+        f"CAST(size({kept}) AS BIGINT) AS n_kept",
+        f"array_join({kept}, '\\n') AS text_kept",
+        f"size({kept}) >= {int(keep_min_lines)} AS kept_doc",
     )
 
 
-def _line_key_col(ln: Column, normalize: bool, line_key: str) -> Column:
-    """The corpus-wide line equality key: normalized (lower + trim +
-    whitespace-collapse) when ``normalize``, then either the xxhash64
-    of it (8-byte production key) or the string itself (oracle-
-    replayable)."""
-    if normalize:
-        ln = F.lower(F.regexp_replace(F.trim(ln), r"\s+", " "))
-    return F.xxhash64(ln) if line_key == "xxhash64" else ln
+def _str_sql(s: str) -> str:
+    """``s`` as a SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _lines_sql(text: str) -> str:
+    """SQL text of the ``\\n``-separated lines of expression ``text``."""
+    return f"split({text}, '\\n')"
+
+
+def _line_keys_sql(lines: str, normalize: bool, line_key: str) -> str:
+    """SQL text of the corpus-wide equality key of every line in the
+    array ``lines``: the line's :func:`normalize_expr` form when
+    ``normalize``, then either its xxhash64 (8-byte production key) or
+    the string itself (oracle-replayable)."""
+    k = normalize_expr("ln") if normalize else "ln"
+    if line_key == "xxhash64":
+        k = f"xxhash64({k})"
+    return f"transform({lines}, ln -> {k})"
 
 
 def _line_repr(normalize: bool, line_key: str) -> str:
     """The ``_lk_repr`` stamp value persisted line-count state carries
     — key family and normalization are both baked into the key, so a
-    mismatch on either means the probe would match zero lines."""
-    return f"{line_key}|norm={int(bool(normalize))}"
+    mismatch on either means the probe would match zero lines.
+    ``norm=2`` is the collapse-then-trim form; state stamped
+    ``norm=1`` (trim, then collapse) keys lines with edge tabs or CRs
+    differently and must be rebuilt."""
+    return f"{line_key}|norm={2 if normalize else 0}"
 
 
 def _line_stage(df: DataFrame, text_col: str, id_col: str,
@@ -202,15 +212,11 @@ def _line_stage(df: DataFrame, text_col: str, id_col: str,
     if line_key not in ("xxhash64", "text"):
         raise ValueError(f"unknown line_key {line_key!r} — expected "
                          "'xxhash64' or 'text'")
-    staged = df.select(
-        F.col(id_col).alias("id"),
-        F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
-        .alias("_lines"))
-    return stage(staged.select(
+    lines = _lines_sql(f"coalesce({_q(text_col)}, '')")
+    staged = df.selectExpr(f"{_q(id_col)} AS id", f"{lines} AS _lines")
+    return stage(staged.selectExpr(
         "id", "_lines",
-        F.transform("_lines",
-                    lambda ln: _line_key_col(ln, normalize, line_key))
-        .alias("_lk")))
+        f"{_line_keys_sql('_lines', normalize, line_key)} AS _lk"))
 
 
 def remove_repeated_lines(
@@ -235,7 +241,7 @@ def remove_repeated_lines(
     ``n_kept = 0, text_kept = ''``). Null text counts as empty.
     Line order is preserved; the ORIGINAL line text is reassembled
     even when matching ran on the normalized form
-    (``lower + trim + whitespace-collapse``, ``normalize=True``).
+    (:func:`.dedup.normalize_expr`, ``normalize=True``).
 
     ``line_key`` picks the corpus-wide equality key: ``"xxhash64"``
     (production default — 8-byte keys through the count shuffle) or
@@ -325,10 +331,9 @@ def repeated_line_counts(
     if line_key not in ("xxhash64", "text"):
         raise ValueError(f"unknown line_key {line_key!r} — expected "
                          "'xxhash64' or 'text'")
-    lines = F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
-    keys = F.transform(
-        lines, lambda ln: _line_key_col(ln, normalize, line_key))
-    return (df.select(F.explode(keys).alias("line_hash"))
+    lines = _lines_sql(f"coalesce({_q(text_col)}, '')")
+    keys = _line_keys_sql(lines, normalize, line_key)
+    return (df.selectExpr(f"explode({keys}) AS line_hash")
             .groupBy("line_hash")
             .agg(F.count("*").alias("n_occ"))
             .select("line_hash", "n_occ",

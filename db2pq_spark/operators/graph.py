@@ -63,9 +63,7 @@ _UNIT = 1_000_000
 #: (node, deg, ru) ≈ 5 GB leaves headroom for wide node keys), so the
 #: hints are dropped and the planner's sort-merge is the honest
 #: strategy. Checked against the MEASURED node count (base.count(), a
-#: job the operator runs anyway), not the caller's word — r13 trusted
-#: the ``broadcast_ranks`` flag alone and a page-level caller could
-#: OOM the driver (VERDICT r13 item 8).
+#: job the operator runs anyway).
 _BROADCAST_NODE_CAP = 200_000_000
 
 
@@ -73,7 +71,7 @@ def pagerank(
     edges: DataFrame, src: str = "src", dst: str = "dst",
     iterations: int = 5, damping: tuple[int, int] = (17, 20),
     nodes: DataFrame | None = None, node_col: str = "node",
-    validate_nodes: bool = True, broadcast_ranks: bool = True,
+    validate_nodes: bool = True,
 ) -> DataFrame:
     """(node, rank_units) after ``iterations`` damped power steps.
 
@@ -87,23 +85,21 @@ def pagerank(
     callers whose construction guarantees it). ``damping`` is an
     exact rational num/den.
 
-    ``broadcast_ranks`` (default on) broadcast-hints the node-sized
-    relations where they meet the edge relation — the per-iteration
-    rank⋈edges contribution join and the validation anti-join — so
-    the corpus-sized edge relation is NEVER shuffled: without the
-    hint the checkpointed rank side reports unknown statistics and
-    the planner sort-merges, re-exchanging the edges EVERY iteration
-    (measured: the static plan carried one ``Exchange
-    hashpartitioning(_src)`` of the edge relation per step). Rank
-    state is node-sized by construction (the crawl-scale design
-    point: ~10⁷ hosts vs ~10¹⁰ pages). Since r14 the hint also
-    degrades AUTOMATICALLY when the measured node count exceeds
+    The node-sized relations are broadcast-hinted where they meet the
+    edge relation — the per-iteration rank⋈edges contribution join
+    and the validation anti-join — so the corpus-sized edge relation
+    is NEVER shuffled: without the hint the checkpointed rank side
+    reports unknown statistics and the planner sort-merges,
+    re-exchanging the edges EVERY iteration (measured: the static
+    plan carried one ``Exchange hashpartitioning(_src)`` of the edge
+    relation per step). Rank state is node-sized by construction (the
+    crawl-scale design point: ~10⁷ hosts vs ~10¹⁰ pages). The hints
+    are dropped when the measured node count exceeds
     ``_BROADCAST_NODE_CAP`` (the ≈512 M-row / 8 GB broadcast cap with
     headroom), so an over-cap graph falls back to the planner's
-    shuffle strategies instead of OOMing the driver; the flag remains
-    for callers who want sort-merge below the cap. (The degree attach
-    needs no hint: its build side arrives through an aggregation
-    exchange, so AQE sizes it from runtime statistics.)"""
+    shuffle strategies instead of OOMing the driver. (The degree
+    attach needs no hint: its build side arrives through an
+    aggregation exchange, so AQE sizes it from runtime statistics.)"""
     num, den = (int(damping[0]), int(damping[1]))
     if not 0 < num <= den:
         raise ValueError(f"damping {damping} must satisfy 0 < num <= den")
@@ -147,11 +143,9 @@ def pagerank(
     n_nodes, dang0 = int(stats["n"]), int(stats["dang0"])
     if n_nodes == 0:
         raise ValueError("pagerank: empty graph")
-    # r14 (VERDICT r13 item 8): the broadcast-rank hints degrade
-    # automatically once the MEASURED node count exceeds the cap —
-    # an over-cap graph falls back to sort-merge instead of trusting
-    # the caller to have read the docstring before OOMing the driver.
-    bcast = bool(broadcast_ranks) and n_nodes <= _BROADCAST_NODE_CAP
+    # the broadcast-rank hints degrade once the MEASURED node count
+    # exceeds the cap: an over-cap graph falls back to sort-merge
+    bcast = n_nodes <= _BROADCAST_NODE_CAP
     if nodes is not None and validate_nodes:
         # an explicit universe that misses edge endpoints would
         # silently leak mass: contributions into absent destinations

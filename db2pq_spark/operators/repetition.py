@@ -161,7 +161,7 @@ def _gopher_arrow(
     batch: grams group by exact slice CONTENT over the per-token
     hash array (a batch-wide rank-doubling chain, see
     :func:`_gopher_batch` — no second-level gram hash,
-    so strictly fewer collisions than the xxhash64-slice keys), top
+    so strictly fewer collisions than xxhash64 gram keys), top
     attribution maximizes (count, char-length) with the value-
     invariant tie discipline, and coverage is a vectorized running-
     max interval union over the (already s-sorted) occurrence list.
@@ -171,16 +171,11 @@ def _gopher_arrow(
     in, 10 int64 columns out)."""
     from pyspark.sql.types import (LongType, StructField, StructType)
 
-    from db2pq_spark.operators.dedup import normalize_text
+    from db2pq_spark.operators.dedup import doc_tokens
 
     top_ns, dup_ns = sorted(top_max_pct), sorted(dup_max_pct)
     all_ns = sorted(set(top_ns) | set(dup_ns))
-    base = (df.filter(F.col(text_col).isNotNull()
-                      & (F.trim(F.col(text_col)) != ""))
-            .select(F.col(id_col).alias("id"),
-                    F.split(normalize_text(text_col), " ").alias("_toks"))
-            .where((F.size("_toks") > 0)
-                   & (F.element_at("_toks", 1) != ""))
+    base = (doc_tokens(df, text_col, id_col)
             .select("id",
                     F.transform("_toks", lambda t_: F.length(t_))
                     .alias("_lens"),
@@ -328,7 +323,7 @@ def gopher_repetition(
       stream (intra-gram separator spaces count; count ties prefer
       the LONGEST gram — the conservative flag — so ``chars`` is
       determined by (count, length) alone and any residual tie is
-      value-invariant, which is what makes the hash and exact key
+      value-invariant, which is what makes the arrow and exact key
       configurations bit-identical);
     - ``dup{n}_chars`` (n = 5..10): characters COVERED by n-grams
       occurring 2+ times — the union of the occurrences' character
@@ -351,17 +346,7 @@ def gopher_repetition(
     measured 22.7× at the 100× replica; the kernel 5.7×), grams
     grouped by exact slice content over the per-token hashes —
     bit-identical to ``"exact"`` wherever the token relabeling is
-    collision-free (pinned by test). ``"hash"`` is the
-    relational hashed-key configuration (the q102 span-key
-    discipline): gram
-    keys are ``xxhash64`` over SLICES of the per-token hash array —
-    gram strings are never constructed at all (for n = 10 the string
-    build + shuffle were ~50× the token volume in bytes; measured
-    12.4 s → ~3 s at sf0.1), a 64-bit collision merges two grams'
-    statistics — a negligible perturbation of a filtering signal,
-    same stance as the xxhash64 span/winnow keys; the (count, length)
-    tie discipline makes the two configurations otherwise
-    bit-identical (pinned by test).
+    collision-free (pinned by test).
 
     Scale: gram enumeration is IN-ROW (one flatten/transform over the
     token array — 9 gram sizes ≈ 9× token volume, linear; char
@@ -375,9 +360,8 @@ def gopher_repetition(
                        else top_max_pct)
     dup_max_pct = dict(GOPHER_DUP_NGRAM_MAX_PCT if dup_max_pct is None
                        else dup_max_pct)
-    if keys not in ("exact", "hash", "arrow"):
-        raise ValueError(f"unknown keys {keys!r} — "
-                         "'exact', 'hash' or 'arrow'")
+    if keys not in ("exact", "arrow"):
+        raise ValueError(f"unknown keys {keys!r} — 'exact' or 'arrow'")
     top_ns, dup_ns = sorted(top_max_pct), sorted(dup_max_pct)
     if keys == "arrow":
         out = _gopher_arrow(df, text_col, id_col, top_max_pct,
@@ -395,14 +379,9 @@ def gopher_repetition(
         for c in checks[1:]:
             passed = passed & c
         return out.select("*", passed.alias("pass"))
-    from db2pq_spark.operators.dedup import normalize_text
+    from db2pq_spark.operators.dedup import doc_tokens
 
-    base = (df.filter(F.col(text_col).isNotNull()
-                      & (F.trim(F.col(text_col)) != ""))
-            .select(F.col(id_col).alias("id"),
-                    F.split(normalize_text(text_col), " ").alias("_toks"))
-            .where((F.size("_toks") > 0)
-                   & (F.element_at("_toks", 1) != "")))
+    base = doc_tokens(df, text_col, id_col)
     # char offsets in the single-space-joined stream: offs[j] = start
     # of token j (1-based), PLUS one sentinel offs[m+1] = total + 1 —
     # so every gram's char length is offs[j+n] - offs[j] - 1, pure
@@ -427,11 +406,6 @@ def gopher_repetition(
     base = base.select(
         "id", "_toks", offs.alias("_offs"),
         F.length(F.concat_ws(" ", "_toks")).alias("n_chars"))
-    if keys == "hash":
-        base = base.select(
-            "id", "_offs", "n_chars",
-            F.transform("_toks", lambda t_: F.xxhash64(t_))
-             .alias("_th"))
     # every (n, char interval, key) in ONE in-row flatten — the char
     # interval is resolved against the offsets array BEFORE the
     # explode, so the m-element offsets array never rides the m-row
@@ -450,17 +424,15 @@ def gopher_repetition(
             # branch entry eagerly enough to throw on a raw overrun
             e = F.element_at(
                 "_offs", F.least(j + n, F.size("_offs"))) - 1
-            key = (F.xxhash64(F.slice("_th", j, n)) if keys == "hash"
-                   else F.concat_ws(" ", F.slice("_toks", j, n)))
+            key = F.concat_ws(" ", F.slice("_toks", j, n))
             return F.struct(F.lit(n).alias("n"), s.alias("s"),
                             e.alias("e"), key.alias("key"))
 
-        src = "_th" if keys == "hash" else "_toks"
         arr = F.transform(
             F.sequence(F.lit(1),
-                       F.greatest(F.size(src) - n + 1, F.lit(1))),
+                       F.greatest(F.size("_toks") - n + 1, F.lit(1))),
             entry)
-        return F.when(F.size(src) >= n, arr) \
+        return F.when(F.size("_toks") >= n, arr) \
             .otherwise(F.slice(arr, 1, 0))
 
     gram_arr = F.flatten(F.array(*[_grams_for(n) for n in all_ns]))

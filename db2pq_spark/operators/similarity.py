@@ -252,15 +252,15 @@ def _lsh_sigs_udf(num_planes: int, num_tables: int, planes_flat):
     """Arrow-vectorized LSH signatures: embedding → one bucket key per
     table, computed as a single NumPy matmul against the stacked
     ``num_tables × num_planes`` Rademacher plane matrix (the same
-    cached plane family the expression path derives per-row). The two
-    implementations compute the same mathematical dot products, but
-    BLAS sums in a different floating-point ORDER than the sequential
-    expression fold, so a dot product near zero can round to opposite
-    signs and flip that bit's bucket key — bucket contents may differ
-    slightly between impls (fine for an approximate operator whose
+    cached plane family :func:`lsh_signature` derives per-row). The
+    two compute the same mathematical dot products, but BLAS sums in a
+    different floating-point ORDER than the sequential expression
+    fold, so a dot product near zero can round to opposite signs and
+    flip that bit's bucket key — bucket keys may differ slightly from
+    :func:`lsh_signature`'s (fine for an approximate operator whose
     candidates are exactly re-ranked, but don't compare bucket keys
-    across impls, and re-measure recall when switching). Spark
-    evaluates the expression path's nested lambdas interpreted —
+    across the two). Spark evaluates an expression fold's nested
+    lambdas interpreted —
     dim × planes × tables multiply-adds plus as many xxhash64 calls
     per row — which dominates the whole ANN pipeline; the kernel does
     the identical arithmetic at BLAS speed."""
@@ -356,7 +356,6 @@ def lsh_bucket_topk(
     num_tables: int = 4,
     probe_radius: int | None = None,
     target_recall: float = 0.9,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Approximate top-k: ``num_tables`` independent LSH tables of
     ``num_planes`` hyperplanes each; candidates = corpus vectors sharing
@@ -380,68 +379,18 @@ def lsh_bucket_topk(
     the candidate join shuffles on (table, bucket) — cardinality
     ~corpus × tables, never quadratic.
 
-    ``impl="arrow"`` (default) computes all table signatures in one
-    Arrow-batched NumPy matmul (see :func:`_lsh_sigs_udf` — the
-    expression path's nested lambdas evaluate interpreted and dominate
-    the pipeline); ``impl="expr"`` keeps the pure-JVM expression for
-    Python-worker-free deployments. Same plane family either way."""
+    All table signatures come from one Arrow-batched NumPy matmul (see
+    :func:`_lsh_sigs_udf` — an expression path's nested lambdas
+    evaluate interpreted and dominate the pipeline); the planes are
+    :func:`rademacher_planes`, the family :func:`lsh_signature` uses."""
     if probe_radius is None:
         probe_radius = derive_probe_radius(
             target_recall, num_planes, num_tables)
-    # All table signatures in ONE array expression (the table index is
-    # a lambda variable, so the analyzed tree is table-count-independent
-    # — a per-table expression list costs real driver analysis time),
-    # then posexplode → (table, bucket). NOT a withColumn-per-table
-    # loop: each withColumn re-analyzes the whole growing plan.
-    def sig_array(vec: Column) -> Column:
-        def sig_for(tbl: Column) -> Column:
-            def sign(p: Column) -> Column:
-                hplane = F.transform(
-                    F.sequence(F.lit(0), F.lit(dim - 1)),
-                    lambda d: F.when(
-                        F.xxhash64(d, p + tbl * F.lit(100_003))
-                         .bitwiseAND(F.lit(1)) == 1,
-                        F.lit(1.0),
-                    ).otherwise(F.lit(-1.0)),
-                )
-                dot_ = F.aggregate(
-                    F.zip_with(vec, hplane,
-                               lambda x, h: x.cast("double") * h),
-                    F.lit(0.0), lambda acc, x: acc + x,
-                )
-                return (dot_ > 0).cast("long")
-
-            bits = F.transform(
-                F.sequence(F.lit(0), F.lit(num_planes - 1)), sign)
-            return F.aggregate(
-                bits, F.lit(0).cast("long"), lambda acc, b: acc * 2 + b)
-
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(num_tables - 1)), sig_for)
-
-    if impl == "arrow":
-        try:
-            import numpy  # noqa: F401
-            import pandas  # noqa: F401
-            import pyarrow  # noqa: F401
-        except ImportError as e:
-            import warnings
-
-            warnings.warn(
-                f"impl='arrow' needs numpy/pandas/pyarrow ({e}); "
-                "falling back to the pure-JVM expression path "
-                "(bucket contents may differ slightly — FP summation "
-                "order, see docstring)", stacklevel=2)
-            impl = "expr"
-    if impl == "arrow":
-        planes_flat = []
-        for tbl in range(num_tables):
-            planes_flat += rademacher_planes(
-                corpus.sparkSession, num_planes, dim, seed=tbl)
-        sig_udf = _lsh_sigs_udf(num_planes, num_tables, planes_flat)
-        sig_array = sig_udf  # same call shape: vec column -> array<long>
-    elif impl != "expr":
-        raise ValueError(f"unknown lsh impl {impl!r}")
+    planes_flat = []
+    for tbl in range(num_tables):
+        planes_flat += rademacher_planes(
+            corpus.sparkSession, num_planes, dim, seed=tbl)
+    sig_array = _lsh_sigs_udf(num_planes, num_tables, planes_flat)
 
     # spread an under-partitioned corpus scan across cores before the
     # signature kernel (no-op at scale — one small file plans as one

@@ -91,7 +91,7 @@ def _prepare(df: DataFrame, text_col: str, id_col: str,
     equality-equivalent, which is all the LCP argument needs)."""
     if keys not in ("exact", "hash"):
         raise ValueError(f"unknown keys {keys!r} — 'exact' or 'hash'")
-    from db2pq_spark.operators.dedup import normalize_text
+    from db2pq_spark.operators.dedup import doc_tokens
     from db2pq_spark.operators.skew import ensure_parallelism
 
     # NOTE (r13, measured): pre-hash-partitioning this relation buys
@@ -99,16 +99,11 @@ def _prepare(df: DataFrame, text_col: str, id_col: str,
     # downstream id-joins re-exchange regardless; an A/B at sf0.1
     # showed no win for repartition("id") (+checkpoint or +persist)
     # over the plain parallelism spread. Keep the original shape.
-    base = (ensure_parallelism(df)
-            .filter(F.col(text_col).isNotNull()
-                    & (F.trim(F.col(text_col)) != ""))
-            .select(F.col(id_col).alias("id"),
-                    F.split(normalize_text(text_col), " ").alias("_tk"))
-            .where((F.size("_tk") > 0)
-                   & (F.element_at("_tk", 1) != "")))
-    kk = (F.transform("_tk", lambda t_: F.xxhash64(t_))
-          if keys == "hash" else F.col("_tk"))
-    return stage(base.select("id", "_tk", kk.alias("_kk")))
+    base = doc_tokens(ensure_parallelism(df), text_col, id_col)
+    kk = (F.transform("_toks", lambda t_: F.xxhash64(t_))
+          if keys == "hash" else F.col("_toks"))
+    return stage(base.select("id", F.col("_toks").alias("_tk"),
+                             kk.alias("_kk")))
 
 
 def _position_mlens_raw(

@@ -26,9 +26,9 @@ the word-frequency relation, never the corpus. Per EM round:
 
 Determinism contract (mirrored exactly in the oracle SQL):
 
-- words: whitespace tokens of the shared ``normalize_text``; words
-  longer than ``max_word_len`` are excluded from training and pass
-  through segmentation as a single opaque piece;
+- words: the shared ``doc_tokens``; words longer than
+  ``max_word_len`` are excluded from training and pass through
+  segmentation as a single opaque piece;
 - piece scores: ``round(-log2(cnt / total), 6)`` per piece, held as
   micro-bit BIGINTs (decimal-exact ×10^6 — the q140 integer ordering
   key), so DP sums are integer arithmetic and replay in any engine;
@@ -398,17 +398,13 @@ def unigram_segment(
     order. Oversized words (> ``max_word_len``) pass through as one
     opaque piece. The corpus pays one tokenize + one (word) join
     against the distinct-word segmentation relation."""
-    from db2pq_spark.operators.dedup import normalize_text
+    from db2pq_spark.operators.dedup import doc_tokens
 
     seg = unigram_segment_words(df, text_col, rounds, max_piece_len,
                                 min_count, max_word_len) \
         .select("word", "n_pieces", "pieces")
-    toks = (df.filter(F.col(text_col).isNotNull()
-                      & (F.trim(F.col(text_col)) != ""))
-            .select(F.col(id_col).alias("id"),
-                    F.posexplode(F.split(normalize_text(text_col),
-                                         " ")).alias("pos", "word"))
-            .where(F.col("word") != ""))
+    toks = doc_tokens(df, text_col, id_col).select(
+        "id", F.posexplode("_toks").alias("pos", "word"))
     joined = toks.join(seg, "word", "left").select(
         "id", "pos",
         F.coalesce("pieces", F.col("word")).alias("pieces"),
@@ -622,7 +618,7 @@ def unigram_segment_batch(
     Validation is job-free: the ``_ug_conf`` column metadata is
     checked at plan time; the authoritative per-row guard is folded
     into the count column the scoring plan reads anyway."""
-    from db2pq_spark.operators.dedup import normalize_text
+    from db2pq_spark.operators.dedup import doc_tokens
 
     conf = f"l{max_piece_len}/w{max_word_len}"
     if "_ug_conf" not in vocab.columns:
@@ -644,12 +640,8 @@ def unigram_segment_batch(
              F.lit(f" but the probe asked for {conf!r} — rebuild the "
                    "state or pass matching max_piece_len/max_word_len"))))
          .alias("cnt"))
-    toks = (batch.filter(F.col(text_col).isNotNull()
-                         & (F.trim(F.col(text_col)) != ""))
-            .select(F.col(id_col).alias("id"),
-                    F.posexplode(F.split(normalize_text(text_col),
-                                         " ")).alias("pos", "word"))
-            .where(F.col("word") != ""))
+    toks = doc_tokens(batch, text_col, id_col).select(
+        "id", F.posexplode("_toks").alias("pos", "word"))
     words = (toks.where(F.length("word") <= max_word_len)
              .select("word").distinct()
              .select("word", F.lit(1).alias("freq")))

@@ -173,14 +173,10 @@ def wordpiece_segment(
     (same one-tokenize / one-word-keyed-join corpus cost; ``n_unk``
     counts the words that degraded, the standard tokenizer-coverage
     health metric)."""
-    from db2pq_spark.operators.dedup import normalize_text
+    from db2pq_spark.operators.dedup import doc_tokens
 
-    toks = (df.filter(F.col(text_col).isNotNull()
-                      & (F.trim(F.col(text_col)) != ""))
-            .select(F.col(id_col).alias("id"),
-                    F.posexplode(F.split(normalize_text(text_col),
-                                         " ")).alias("pos", "word"))
-            .where(F.col("word") != ""))
+    toks = doc_tokens(df, text_col, id_col).select(
+        "id", F.posexplode("_toks").alias("pos", "word"))
     words = toks.select("word").distinct() \
         .select("word", F.lit(1).alias("freq"))
     seg = wordpiece_segment_words(words, vocab, max_piece_len,

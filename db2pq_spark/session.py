@@ -1,7 +1,7 @@
 """SparkSession factory tuned for this engine.
 
 Local-mode defaults are sized from the environment (cores via
-``SPARK_GRAFT_CPUS``); on a real cluster every knob here is still the
+:func:`usable_cores`); on a real cluster every knob here is still the
 right baseline: AQE on (runtime re-planning, skew-join splitting,
 partition coalescing), UTC session timezone (the reference normalizes all
 timestamps to UTC — db2pq/files/parquet.py:122-157), Arrow enabled for
@@ -15,6 +15,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def usable_cores() -> int:
+    """The cores this process may run on: ``SPARK_GRAFT_CPUS`` when
+    set, else the size of the process's CPU affinity mask (taskset and
+    cgroup cpusets shrink it; ``os.cpu_count()`` counts host cores
+    regardless)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # platform without an affinity API
+        return os.cpu_count() or 4
+
+
 def get_spark(
     app_name: str = "db2pq_spark",
     shuffle_partitions: int | None = None,
@@ -26,7 +40,7 @@ def get_spark(
     scale callers should pass ~2-3× total executor cores instead; AQE
     coalesces the excess at runtime.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    cpus = usable_cores()
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     builder = SparkSession.builder

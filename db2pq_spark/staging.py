@@ -31,15 +31,20 @@ def stage(df: DataFrame, eager: bool = False) -> DataFrame:
     - **No lifetime management.** The ContextCleaner frees the blocks
       when the staged DataFrame is garbage-collected; nothing grows
       for the session's lifetime.
-    - **Lazy vs eager.** ``eager=False`` materializes inside the first
-      job that reads the relation. That first consumer must be a
-      single sequenced action (a collect, count or the one downstream
-      job), never a broadcast build: concurrently launched broadcast
-      jobs do not deduplicate an in-flight RDD, so each would compute
-      the relation. Sites whose first consumers run concurrently, or
-      that must observe the materialized plan before continuing (the
-      per-round lineage cut of iterative algorithms), pass
-      ``eager=True``.
+    - **Lazy vs eager.** ``eager=False`` materializes the rows inside
+      the first job that reads the relation. That first consumer must
+      be a single sequenced action (a collect, count or the one
+      downstream job), never a broadcast build: concurrently launched
+      broadcast jobs do not deduplicate an in-flight RDD, so each
+      would compute the relation. Sites whose first consumers run
+      concurrently, or that must observe the materialized plan before
+      continuing (the per-round lineage cut of iterative algorithms),
+      pass ``eager=True``. Even lazy, the call is not free when ``df``
+      holds an exchange: ``localCheckpoint`` builds the RDD from the
+      physical plan, and under AQE that runs every query stage below
+      it (a shuffle map, a broadcast build) as a job at the call. A
+      narrow ``df`` submits no job at the call, a ``repartition``
+      input one (pinned in ``tests/test_staging.py``).
 
     Note that ``localCheckpoint`` under AQE erases
     ``outputPartitioning`` (the scan reports UnknownPartitioning), so

@@ -48,15 +48,17 @@ from db2pq_spark.streaming.rollup import _applied_batch, _applied_checkpoint
 __all__ = ["stream_token_drift", "init_token_counts", "TOKENIZER_ID"]
 
 #: identity of the tokenization the standing counts were built under
-#: (operators/textstats.py:tokens — lowercased, punctuation-stripped,
-#: whitespace-split). Bump when the tokenizer changes incompatibly.
-TOKENIZER_ID = "ws_norm_v1"
+#: (operators/dedup.py:doc_tokens). Bump when the tokenizer changes
+#: incompatibly. v2: whitespace collapses before the trim, so an edge
+#: tab/CR/LF and a blank document no longer count an empty token.
+TOKENIZER_ID = "ws_norm_v2"
 
 
 def _token_rows(df: DataFrame, text_col: str) -> DataFrame:
-    from db2pq_spark.operators.textstats import tokens
+    from db2pq_spark.operators.dedup import doc_tokens
 
-    return df.select(F.explode(tokens(text_col)).alias("tok"))
+    return doc_tokens(df, text_col, None).select(
+        F.explode("_toks").alias("tok"))
 
 
 def _stamped_tokenizer(table_dir: Path) -> str | None:

@@ -109,6 +109,8 @@ def _dsum_sql(expr: str, scale: int = 4) -> str:
 
 
 #: normalized-text / token-list SQL fragments shared by text oracles
-_NORM = "regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')"
+_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
 _TOKENS = f"string_split({_NORM}, ' ')"
+#: the documents that have tokens: a non-whitespace character in the text
+_HAS_TEXT = "regexp_matches(text, '\\S')"
 

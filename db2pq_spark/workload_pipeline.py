@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
 from db2pq_spark.workload_base import (  # noqa: F401
+    _HAS_TEXT,
     _NORM,
     _TOKENS,
     REGISTRY,
@@ -1127,7 +1128,7 @@ def q115_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH base AS (
       SELECT doc_id, {_TOKENS} AS toks FROM documents
-      WHERE text IS NOT NULL AND trim(text) <> ''
+      WHERE {_HAS_TEXT}
     ),
     g AS (
       SELECT doc_id, i - 1 AS pos,
@@ -1435,7 +1436,7 @@ def _q118_production(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q119_SQL = f"""
     WITH base AS (
       SELECT doc_id, {_TOKENS} AS toks FROM documents
-      WHERE text IS NOT NULL AND trim(text) <> ''
+      WHERE {_HAS_TEXT}
     ),
     kh AS (
       SELECT doc_id,
@@ -1550,7 +1551,7 @@ _Q120_SQL = f"""
     WITH wf AS (
       SELECT w AS word, COUNT(*) AS freq FROM (
         SELECT unnest({_TOKENS}) AS w FROM documents
-        WHERE text IS NOT NULL AND trim(text) <> '')
+        WHERE {_HAS_TEXT})
       WHERE w <> '' GROUP BY 1
     ),
     v0 AS (SELECT word, freq, string_split(word, '') AS sym FROM wf),
@@ -1586,7 +1587,7 @@ def q120_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q121_SQL = f"""
     WITH toks AS (
       SELECT doc_id, {_TOKENS} AS toks FROM documents
-      WHERE text IS NOT NULL AND trim(text) <> ''
+      WHERE {_HAS_TEXT}
     ),
     bg AS (
       SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2
@@ -1660,7 +1661,7 @@ _Q122_SQL = f"""
     WITH wf AS (
       SELECT w AS word, COUNT(*) AS freq FROM (
         SELECT unnest({_TOKENS}) AS w FROM documents
-        WHERE text IS NOT NULL AND trim(text) <> '')
+        WHERE {_HAS_TEXT})
       WHERE w <> '' GROUP BY 1
     ),
     v0 AS (SELECT word, freq, string_split(word, '') AS sym FROM wf),
@@ -1669,7 +1670,7 @@ _Q122_SQL = f"""
     e AS (
       SELECT doc_id, w FROM (
         SELECT doc_id, unnest({_TOKENS}) AS w FROM documents
-        WHERE text IS NOT NULL AND trim(text) <> '')
+        WHERE {_HAS_TEXT})
       WHERE w <> ''
     )
     SELECT doc_id,
@@ -1705,7 +1706,7 @@ def q122_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q123_SQL = f"""
     WITH base AS (
       SELECT doc_id, {_TOKENS} AS toks FROM documents
-      WHERE text IS NOT NULL AND trim(text) <> ''
+      WHERE {_HAS_TEXT}
     ),
     kh AS (
       SELECT doc_id,
@@ -2407,8 +2408,8 @@ _Q134_SQL = r"""
       SELECT doc_id,
              string_split(rt, chr(10)) AS lines,
              list_filter(string_split(rt, chr(10)),
-               ln -> len(string_split(regexp_replace(trim(ln),
-                         '\s+', ' ', 'g'), ' ')) >= 3
+               ln -> len(string_split(trim(regexp_replace(ln,
+                         '\s+', ' ', 'g')), ' ')) >= 3
                      AND NOT regexp_matches(lower(ln),
                                             'customer|stream')) AS kept
       FROM relined
@@ -2563,7 +2564,7 @@ _Q137_SQL = r"""
     ),
     norm AS (
       SELECT doc_id, pos, line,
-             lower(regexp_replace(trim(line), '\s+', ' ', 'g')) AS k
+             trim(regexp_replace(lower(line), '\s+', ' ', 'g')) AS k
       FROM ln
     ),
     freq AS (
@@ -2621,7 +2622,7 @@ _Q138_SQL = r"""
     ),
     b AS (SELECT * FROM relined WHERE doc_id % 5 = 0),
     cstate AS (
-      SELECT lower(regexp_replace(trim(l), '\s+', ' ', 'g')) AS k,
+      SELECT trim(regexp_replace(lower(l), '\s+', ' ', 'g')) AS k,
              COUNT(*) AS pc
       FROM (SELECT unnest(string_split(rt, chr(10))) AS l
             FROM relined WHERE doc_id % 5 <> 0)
@@ -2636,7 +2637,7 @@ _Q138_SQL = r"""
     ),
     norm AS (
       SELECT doc_id, pos, line,
-             lower(regexp_replace(trim(line), '\s+', ' ', 'g')) AS k
+             trim(regexp_replace(lower(line), '\s+', ' ', 'g')) AS k
       FROM ln
     ),
     bcnt AS (SELECT k, COUNT(*) AS bc FROM norm GROUP BY k),
@@ -2744,7 +2745,7 @@ def q139_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q140_SQL = f"""
     WITH toks AS (
       SELECT doc_id, {_TOKENS} AS toks FROM documents
-      WHERE text IS NOT NULL AND trim(text) <> ''
+      WHERE {_HAS_TEXT}
     ),
     bg AS (
       SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2
@@ -2829,7 +2830,7 @@ def _q140_production(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q141_SQL = f"""
     WITH toks AS (
       SELECT doc_id, {_TOKENS} AS toks FROM documents
-      WHERE text IS NOT NULL AND trim(text) <> ''
+      WHERE {_HAS_TEXT}
     ),
     train_bg AS (
       SELECT toks[i] AS w1, toks[i + 1] AS w2
@@ -2963,7 +2964,7 @@ def _q143_oracle() -> str:
     WITH wf AS (
       SELECT w AS word, COUNT(*) AS freq FROM (
         SELECT unnest({_TOKENS}) AS w FROM documents
-        WHERE text IS NOT NULL AND trim(text) <> '')
+        WHERE {_HAS_TEXT})
       WHERE w <> '' GROUP BY 1
     ),
     wfb AS (SELECT word, freq FROM wf WHERE len(word) <= 16),
@@ -3003,7 +3004,7 @@ def _q144_oracle() -> str:
     WITH wf AS (
       SELECT w AS word, COUNT(*) AS freq FROM (
         SELECT unnest({_TOKENS}) AS w FROM documents
-        WHERE text IS NOT NULL AND trim(text) <> '')
+        WHERE {_HAS_TEXT})
       WHERE w <> '' GROUP BY 1
     ),
     wfb AS (SELECT word, freq FROM wf WHERE len(word) <= 16),
@@ -3017,7 +3018,7 @@ def _q144_oracle() -> str:
     toks AS (
       SELECT doc_id, t.w AS word, t.pos
       FROM (SELECT doc_id, {_TOKENS} AS ws FROM documents
-            WHERE text IS NOT NULL AND trim(text) <> '') d,
+            WHERE {_HAS_TEXT}) d,
            LATERAL (SELECT unnest(ws) AS w,
                            unnest(generate_series(1, len(ws))) AS pos) t
       WHERE t.w <> ''
@@ -3061,7 +3062,7 @@ def _q145_oracle() -> str:
     wf AS (
       SELECT w AS word, COUNT(*) AS freq FROM (
         SELECT unnest({_TOKENS}) AS w FROM standing
-        WHERE text IS NOT NULL AND trim(text) <> '')
+        WHERE {_HAS_TEXT})
       WHERE w <> '' GROUP BY 1
     ),
     wfb AS (SELECT word, freq FROM wf WHERE len(word) <= 16),
@@ -3071,7 +3072,7 @@ def _q145_oracle() -> str:
       SELECT doc_id, t.w AS word, t.pos
       FROM (SELECT doc_id, {_TOKENS} AS ws FROM documents
             WHERE doc_id % 7 = 0
-              AND text IS NOT NULL AND trim(text) <> '') d,
+              AND {_HAS_TEXT}) d,
            LATERAL (SELECT unnest(ws) AS w,
                            unnest(generate_series(1, len(ws))) AS pos) t
       WHERE t.w <> ''
@@ -3132,7 +3133,7 @@ def _q146_oracle() -> str:
     WITH wf AS (
       SELECT w AS word, COUNT(*) AS freq FROM (
         SELECT unnest({_TOKENS}) AS w FROM documents
-        WHERE text IS NOT NULL AND trim(text) <> '')
+        WHERE {_HAS_TEXT})
       WHERE w <> '' GROUP BY 1
     ),
     wfb AS (SELECT word, freq FROM wf WHERE len(word) <= 16),
@@ -3141,7 +3142,7 @@ def _q146_oracle() -> str:
     toksall AS (
       SELECT doc_id, t.w AS word, t.pos
       FROM (SELECT doc_id, {_TOKENS} AS ws FROM documents
-            WHERE text IS NOT NULL AND trim(text) <> '') d,
+            WHERE {_HAS_TEXT}) d,
            LATERAL (SELECT unnest(ws) AS w,
                            unnest(generate_series(1, len(ws))) AS pos) t
       WHERE t.w <> ''
@@ -3196,7 +3197,7 @@ def q146_wordpiece_segment(spark: SparkSession,
 _Q147_SQL = f"""
     WITH toked AS (
       SELECT doc_id AS id, {_TOKENS} AS toks FROM documents
-      WHERE text IS NOT NULL AND trim(text) <> ''
+      WHERE {_HAS_TEXT}
     ),
     tk AS (
       SELECT id, toks, len(toks) AS m,
@@ -3326,7 +3327,7 @@ def _q148_oracle() -> str:
     WITH wf AS (
       SELECT w AS word, COUNT(*) AS freq FROM (
         SELECT unnest({_TOKENS}) AS w FROM documents
-        WHERE text IS NOT NULL AND trim(text) <> '')
+        WHERE {_HAS_TEXT})
       WHERE w <> '' GROUP BY 1
     ),
     wfb AS (SELECT word, freq FROM wf WHERE len(word) <= 16),
@@ -3367,7 +3368,7 @@ _Q149_SQL = f"""
     WITH tkf AS (
       SELECT doc_id, ws, len(ws) AS n FROM (
         SELECT doc_id, {_TOKENS} AS ws FROM documents
-        WHERE text IS NOT NULL AND trim(text) <> '')
+        WHERE {_HAS_TEXT})
       WHERE len(ws) > 0 AND ws[1] <> ''
     ),
     spans AS (
@@ -3436,7 +3437,7 @@ _Q150_SQL = f"""
     WITH tkf AS (
       SELECT doc_id, ws, len(ws) AS n FROM (
         SELECT doc_id, {_TOKENS} AS ws FROM documents
-        WHERE text IS NOT NULL AND trim(text) <> '')
+        WHERE {_HAS_TEXT})
       WHERE len(ws) > 0 AND ws[1] <> ''
     ),
     spans AS (
@@ -4528,7 +4529,7 @@ def q164_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q165_SQL = f"""
     WITH kbase AS (
       SELECT doc_id, {_TOKENS} AS toks FROM documents
-      WHERE text IS NOT NULL AND trim(text) <> ''
+      WHERE {_HAS_TEXT}
     ),
     kg AS (
       SELECT doc_id, i - 1 AS pos,

@@ -1108,12 +1108,12 @@ def q55_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (keep min doc_id per content hash) → quality/length filter → per-
     language corpus stats. Every stage is one of the engine's operators;
     the whole thing is two shuffles (dedup hash, final groupBy)."""
-    from db2pq_spark.operators.dedup import exact_dedup, normalize_text
+    from db2pq_spark.operators.dedup import exact_dedup, tokens_sql
 
     d = t(spark, sf_dir, "documents")
     keep = exact_dedup(d, "text", "doc_id").select(
         F.col("keep_id").alias("doc_id"))
-    toks = F.split(normalize_text("text"), " ")
+    toks = F.expr(tokens_sql("text"))
     staged = (
         d.join(keep, "doc_id")
         .select("doc_id", "lang", "n_chars", toks.alias("_toks"))

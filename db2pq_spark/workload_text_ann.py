@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
 from db2pq_spark.workload_base import (  # noqa: F401
+    _HAS_TEXT,
     _NORM,
     _TOKENS,
     REGISTRY,
@@ -486,7 +487,7 @@ def _q36_production(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH toks AS (
       SELECT doc_id AS id, {_TOKENS} AS toks
-      FROM documents WHERE text IS NOT NULL AND trim(text) <> ''
+      FROM documents WHERE {_HAS_TEXT}
     ),
     th AS (SELECT id, unnest(toks) AS tok FROM toks),
     h AS (

@@ -512,7 +512,7 @@ class TestRemoveRepeatedLinesIncremental:
         assert state["subscribe to our newsletter"]["n_occ"] == 2
         assert state["rare corpus line"]["n_occ"] == 1
         assert {r["_lk_repr"] for r in state.values()} \
-            == {"text|norm=1"}
+            == {"text|norm=2"}
 
     def test_stamp_mismatch_raises(self, spark):
         import pytest as _pytest

@@ -146,8 +146,7 @@ class TestExtractHost:
 
 class TestBroadcastAutoDegrade:
     """r14 (VERDICT r13 item 8): the broadcast-rank hints must degrade
-    automatically when the MEASURED node count exceeds the cap,
-    instead of trusting the caller's broadcast_ranks flag — a
+    automatically when the MEASURED node count exceeds the cap — a
     page-level graph would otherwise OOM the driver building the hash
     relation. With the cap patched below the graph's node count, the
     per-step contribution join must plan WITHOUT the broadcast hint

@@ -88,7 +88,10 @@ class TestIncrementalDedup:
         assert all(b in (1, 4) for b, _ in pairs)
 
     def test_exact_incremental_flags(self, docs):
-        from db2pq_spark.operators.dedup import exact_dedup_incremental
+        from db2pq_spark.operators.dedup import (
+            exact_dedup_incremental,
+            normalize_text,
+        )
 
         batch = docs.filter(F.col("doc_id").isin(1, 4))
         corpus = docs.filter(~F.col("doc_id").isin(1, 4))
@@ -99,8 +102,7 @@ class TestIncrementalDedup:
         assert flags == {1: True, 4: False}
         # precomputed hash-set path gives identical answers
         h = corpus.select(
-            F.md5(F.encode(F.regexp_replace(
-                F.trim(F.lower("text")), r"\s+", " "), "UTF-8"))
+            F.md5(F.encode(normalize_text("text"), "UTF-8"))
             .alias("content_hash"))
         flags2 = {r["id"]: r["is_duplicate"]
                   for r in exact_dedup_incremental(
@@ -903,18 +905,9 @@ class TestGopherRepetition:
             dup_max_pct={n: 100 for n in range(5, 11)}).collect()}
         assert all(got.values())
 
-    def test_hash_config_bit_identical(self, spark, docs):
-        """keys='hash' (production: xxhash64 over token-hash slices,
-        gram strings never built) must reproduce the exact config
-        bit-for-bit — the (count, length) tie discipline makes the
-        values key-order-invariant."""
+    def test_unknown_keys_raise(self, spark, docs):
         from db2pq_spark.operators.repetition import gopher_repetition
 
-        a = {r["id"]: tuple(r) for r in gopher_repetition(
-            docs, "text", "doc_id").collect()}
-        b = {r["id"]: tuple(r) for r in gopher_repetition(
-            docs, "text", "doc_id", keys="hash").collect()}
-        assert a == b
         with pytest.raises(ValueError, match="keys"):
             gopher_repetition(docs, "text", "doc_id", keys="nope")
 

@@ -695,23 +695,29 @@ class Engine:
                   .join(keys, on=key_cols, how="left_anti")
                   .unionByName(upserts.filter(in_touched)))
 
-        from db2pq_spark.sinks.parquet_sink import _rm, _write_sidecar, temp_path
+        from db2pq_spark.sinks.parquet_sink import (
+            _rm, _write_sidecar, parked_parts_path, temp_path)
         tmp = temp_path(self.data_dir, schema, table)
         _rm(tmp)
         (merged.write.mode("overwrite")
          .partitionBy(*partition_cols).parquet(str(tmp)))
+        # each partition swaps by two renames (park live → promote new);
+        # recover_parked restores a partition a crash leaves parked
+        parts = parked_parts_path(self.data_dir, schema, table)
         for tup in touched:
             rel = "/".join(f"{c}={v}" for c, v in zip(partition_cols, tup))
-            src, dst = tmp / rel, final / rel
+            src, dst, parked = tmp / rel, final / rel, parts / rel
             if src.exists():
-                parked = dst.parent / f".old_{dst.name}"
                 if dst.exists():
+                    parked.parent.mkdir(parents=True, exist_ok=True)
                     os.replace(dst, parked)
+                    os.utime(parts)     # the age guard measures the swap
                 dst.parent.mkdir(parents=True, exist_ok=True)
                 os.replace(src, dst)
                 _rm(parked)
             elif dst.exists():          # partition emptied by deletes
                 _rm(dst)
+        _rm(parts)
         _rm(tmp)
         _write_sidecar(final, preserved_modified)
         if self.verbose:

@@ -191,7 +191,6 @@ def corruption_spans(
     ≤ a-few-element list. No self-join, no second corpus scan,
     nothing driver-side."""
     from db2pq_spark.operators.sampling import hash_bucket
-    from db2pq_spark.operators.textstats import tokens
 
     if block < 1 or span_len < 1 or span_len > block or rate < 2:
         raise ValueError(
@@ -201,11 +200,11 @@ def corruption_spans(
     # pattern): the spans explode's implied size(...)>0 pruning filter
     # would otherwise push INTO the scan and re-run the split regex
     # twice more per row in DataFilters (the q96 pathology)
-    from db2pq_spark.operators.dedup import _stage_col
+    from db2pq_spark.operators.dedup import _stage_col, tokens_sql
 
     toked = _stage_col(df.select(F.col(id_col).alias("id"),
                                  F.col(text_col).alias("_txt")),
-                       ["id"], tokens("_txt"), "_toks")
+                       ["id"], tokens_sql("_txt"), "_toks")
 
     def cand(p):
         return hash_bucket(F.concat_ws("_", F.col("id"), p),

@@ -38,19 +38,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from db2pq_spark.operators.sampling import hash_bucket
+from db2pq_spark.operators.sampling import salted_bucket
 from db2pq_spark.operators.textstats import tokens
 
 __all__ = ["cms_build", "cms_merge", "cms_probe", "cms_col_sql"]
-
-
-def _col_expr(tok: Column, row: int, width: int, keys: str) -> Column:
-    if keys == "md5":
-        return hash_bucket(tok, width, salt=f"cms{row}")
-    if keys == "xxhash64":
-        return F.pmod(F.xxhash64(F.lit(f"cms{row}"), tok),
-                      F.lit(width))
-    raise ValueError(f"unknown keys {keys!r} — 'md5' or 'xxhash64'")
 
 
 def cms_col_sql(tok_expr: str, row: int, width: int) -> str:
@@ -94,7 +85,8 @@ def cms_build(
     toks = df.select(F.explode(tokens(text_col)).alias("tok"))
     cells = toks.select(F.explode(F.array(*[
         F.struct(F.lit(r).alias("row"),
-                 _col_expr(F.col("tok"), r, width, keys).alias("col"))
+                 salted_bucket(F.col("tok"), width, f"cms{r}", keys)
+                 .alias("col"))
         for r in range(int(depth))])).alias("_c")) \
         .select("_c.row", "_c.col")
     return (cells.groupBy("row", "col")
@@ -141,7 +133,7 @@ def cms_probe(
     cells = probes.select(F.col(tok_col).alias("tok")).distinct() \
         .select("tok", F.explode(F.array(*[
             F.struct(F.lit(r).alias("row"),
-                     _col_expr(F.col("tok"), r, width, keys)
+                     salted_bucket(F.col("tok"), width, f"cms{r}", keys)
                      .alias("col"))
             for r in range(int(depth))])).alias("_c")) \
         .select("tok", "_c.row", "_c.col")

@@ -44,12 +44,23 @@ rule no document's tokens contain ``''``, so no site needs an
 empty-token guard, and :func:`doc_tokens` filters on the raw text so
 the tokenization runs once per row (a filter on the token array is
 pushed below the tokenizing projection with the expression
-substituted, which evaluates it a second time).
+substituted, which evaluates it a second time). A blank text's
+:func:`tokens_sql` is ``[]``.
+
+N-gram key rule (MinHash shingle hashes, SimHash, winnowing, span
+dedup): one window builder (:func:`_windows_sql`) keys every ``n``-long
+slice of an array and yields ``array()`` for an array shorter than
+``n``, so no site pre-filters short documents (a test on ``_toks`` is
+the pushed-filter trap above; where rows must go, the filter runs on
+the array built behind a Generate barrier). One table
+(:data:`_HASH_FAMILIES`) maps a family name to its SQL key template:
+``xxhash64`` keys a slice of the per-token hash array
+(:func:`token_hashes_sql`), ``md5`` and ``md5_60`` the n-gram's text.
 """
 
 from __future__ import annotations
 
-from functools import reduce
+from functools import lru_cache, reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -78,9 +89,69 @@ def normalize_text(col: str) -> Column:
     return F.expr(normalize_sql(col))
 
 
-def tokens_sql(col: str) -> str:
-    """SQL text of the whitespace tokens of :func:`normalize_sql`."""
+def _split_sql(col: str) -> str:
+    """SQL text of :func:`normalize_sql` split on the space: the tokens
+    of a text that holds a non-whitespace character."""
     return f"split({normalize_sql(col)}, ' ')"
+
+
+def tokens_sql(col: str) -> str:
+    """SQL text of the whitespace tokens of :func:`normalize_sql`;
+    ``[]`` for a blank text (Spark splits ``''`` into ``['']``)."""
+    return f"array_remove({_split_sql(col)}, '')"
+
+
+#: SQL key template of each hash family, ``{}`` standing for the keyed
+#: value. ``md5`` (32 hex chars) and ``md5_60`` (its first 15 as a
+#: 60-bit long; the 4 missing high bits are 0 on every side, so Hamming
+#: distances are unaffected) are computed identically by every engine,
+#: so the gate oracles replay them in DuckDB; ``xxhash64`` is the fast
+#: JVM-side production key.
+_HASH_FAMILIES = {
+    "xxhash64": "xxhash64({})",
+    "md5": "md5(encode({}, 'UTF-8'))",
+    "md5_60": "CAST(conv(substring(md5(encode({}, 'UTF-8')), 1, 15), 16, 10)"
+              " AS BIGINT)",
+}
+
+
+def _family(name: str, allowed: tuple[str, ...], what: str) -> str:
+    """Key template of hash family ``name``, which must be one of
+    ``allowed`` (``what`` names the option in the error)."""
+    if name not in allowed:
+        raise ValueError(f"unknown {what} {name!r} — one of {allowed}")
+    return _HASH_FAMILIES[name]
+
+
+def token_hashes_sql(family: str = "xxhash64") -> str:
+    """SQL text of the per-token hash array of a ``_toks`` column."""
+    return f"transform(_toks, t -> {_HASH_FAMILIES[family].format('t')})"
+
+
+def _windows_sql(arr: str, n: int, key: str = "{}",
+                 short: str = "array()") -> str:
+    """SQL text of ``key`` (a template, ``{}`` the slice) over every
+    ``n``-long slice of array ``arr``, in order; ``short`` when ``arr``
+    is shorter than ``n`` (``sequence(1, s)`` with s ≤ 0 would count
+    downward and fabricate slices)."""
+    n = int(n)
+    keys = (f"transform(sequence(1, size({arr}) - {n} + 1), "
+            f"i -> {key.format(f'slice({arr}, i, {n})')})")
+    return f"CASE WHEN size({arr}) >= {n} THEN {keys} ELSE {short} END"
+
+
+def _ngram_keys_sql(n: int, family: str) -> str:
+    """SQL text of the ``family`` key of every ``n``-token window:
+    ``xxhash64`` over a slice of the per-token hashes ``_th`` (no
+    n-gram strings), the text families over the n-gram text of
+    ``_toks``."""
+    if family == "xxhash64":
+        # a bare array() would narrow the keys to non-null longs and
+        # drop the key joins' isnotnull filters: keep the plans as are
+        return _windows_sql("_th", n, _HASH_FAMILIES[family],
+                            "CAST(array() AS ARRAY<BIGINT>)")
+    return _windows_sql(
+        "_toks", n, _HASH_FAMILIES[family].format("concat_ws(' ', {})"))
 
 
 def _content_hash_sql(text_col: str) -> str:
@@ -175,7 +246,7 @@ def doc_tokens(df: DataFrame, text_col: str, id_col: str | None,
     row; no returned token is ``''``."""
     ident = [f"{_q(id_col)} AS id"] if id_col is not None else []
     return (df.where(rf"{_q(text_col)} RLIKE '\\S'")
-            .selectExpr(*ident, *extra, f"{tokens_sql(text_col)} AS _toks"))
+            .selectExpr(*ident, *extra, f"{_split_sql(text_col)} AS _toks"))
 
 
 def with_shingles(
@@ -199,15 +270,21 @@ def with_shingle_hashes(
     shingle everywhere set semantics are needed (64-bit collisions
     are negligible for dedup — the gate-exactness configurations pin
     the text representation instead)."""
-    n = int(n)
-    grams = (f"transform(sequence(1, size(_th) - {n} + 1), "
-             f"i -> xxhash64(slice(_th, i, {n})))")
+    grams = _windows_sql("_th", n, _HASH_FAMILIES["xxhash64"],
+                         "array(xxhash64(_th))")
     return (
         doc_tokens(df, text_col, id_col)
-        .selectExpr("id", "transform(_toks, t -> xxhash64(t)) AS _th")
-        .selectExpr("id", f"array_distinct(CASE WHEN size(_th) >= {n} "
-                    f"THEN {grams} ELSE array(xxhash64(_th)) END) AS shingles")
+        .selectExpr("id", f"{token_hashes_sql()} AS _th")
+        .selectExpr("id", f"array_distinct({grams}) AS shingles")
     )
+
+
+@lru_cache(maxsize=None)
+def _kernel(sc, factory, *args):
+    """``factory(*args)``, one per SparkContext ``sc``: a pandas UDF
+    builds its JVM function on first use (~25 py4j round trips) and
+    reuses it after, so each kernel is built once, not once per plan."""
+    return factory(*args)
 
 
 def _minhash_from_hashes_udf(num_hashes: int):
@@ -325,7 +402,9 @@ def minhash_signatures(
     else:
         raise ValueError(f"unknown shingle_repr {shingle_repr!r} — "
                          "'hash' or 'text'")
-    sig = _minhash_from_hashes_udf(num_hashes)(hs).alias("sig")
+    kern = _kernel(base.sparkSession.sparkContext, _minhash_from_hashes_udf,
+                   num_hashes)
+    sig = kern(hs).alias("sig")
     return base.select("id", "shingles", sig,
                        F.expr(f"'{shingle_repr}' AS _sig_repr"))
 
@@ -645,24 +724,6 @@ def _minhash_dedup_incremental_cached(
 _BIT_MASKS = [(1 << i) if i < 63 else -(1 << 63) for i in range(64)]
 
 
-def _token_hash(col: Column, algo: str) -> Column:
-    """Per-token 64-bit hash for SimHash voting.
-
-    ``xxhash64`` (default) is the fast JVM-side choice. ``md5_60`` maps
-    the first 15 hex chars of md5 to a 60-bit long — slower, but md5 is
-    computed identically by every engine, so a SimHash built on it can
-    be replayed bit-for-bit in plain SQL (the q37 gate oracle recomputes
-    the signatures in DuckDB this way). The 4 missing high bits are
-    constantly 0 on both sides, so Hamming distances are unaffected."""
-    if algo == "xxhash64":
-        return F.xxhash64(col)
-    if algo == "md5_60":
-        return F.conv(
-            F.substring(F.md5(F.encode(col, "UTF-8")), 1, 15), 16, 10
-        ).cast("long")
-    raise ValueError(f"unknown token_hash {algo!r}")
-
-
 def _simhash_from_hashes_udf():
     """Arrow kernel: token-hash array (long) → packed 64-bit SimHash.
 
@@ -709,18 +770,22 @@ def simhash(df: DataFrame, text_col: str, id_col: str,
     Fully **narrow** either way — no explode, no shuffle: each
     document's signature is computed where the document lives, which
     is exactly what you want scanning 100 TB of text. ``token_hash``
-    picks the per-token hash — see :func:`_token_hash`; both impls
-    consume the same hashes, so the choice is orthogonal.
+    picks the per-token hash family (:data:`_HASH_FAMILIES`:
+    ``xxhash64``, or ``md5_60``, which the q37 gate oracle replays in
+    DuckDB); both impls consume the same hashes, so the choice is
+    orthogonal.
     Under-partitioned small scans are pre-spread so the fold uses
     every core (no-op at scale — see :func:`..skew.ensure_parallelism`)."""
     from db2pq_spark.operators.skew import ensure_parallelism
 
     if impl not in ("arrow", "expr"):
         raise ValueError(f"unknown impl {impl!r} — 'arrow' or 'expr'")
+    _family(token_hash, ("xxhash64", "md5_60"), "token_hash")
     base = doc_tokens(ensure_parallelism(df), text_col, id_col)
-    hashes = F.transform("_toks", lambda t_: _token_hash(t_, token_hash))
+    hashes = F.expr(token_hashes_sql(token_hash))
     if impl == "arrow":
-        kern = _simhash_from_hashes_udf()
+        kern = _kernel(base.sparkSession.sparkContext,
+                       _simhash_from_hashes_udf)
         return base.select("id", kern(hashes).alias("simhash"))
     masks = F.array(*[F.lit(m) for m in _BIT_MASKS])
     votes = F.aggregate(
@@ -776,27 +841,18 @@ def simhash_dedup(
     sh = (simhash(df, text_col, id_col, token_hash=token_hash,
                   impl=impl)
           .persist(StorageLevel.MEMORY_AND_DISK))
-    chunks = sh.select(
-        "id",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(c).alias("chunk"),
-                F.shiftrightunsigned("simhash", c * chunk_bits)
-                 .bitwiseAND(F.lit(mask)).alias("key"),
-            )
-            for c in range(num_chunks)
-        ])).alias("ck"),
-    ).select("id", "ck.chunk", "ck.key")
-
-    cand = _bucket_pairs(chunks, ["chunk", "key"], max_bucket)
-    s1 = sh.withColumnsRenamed({"id": "id1", "simhash": "sh1"})
-    s2 = sh.withColumnsRenamed({"id": "id2", "simhash": "sh2"})
+    chunks = ", ".join(
+        f"struct({c} AS chunk, (shiftrightunsigned(simhash, "
+        f"{c * chunk_bits}) & {mask}) AS key)" for c in range(num_chunks))
+    cand = _bucket_pairs(
+        sh.selectExpr("id", f"explode(array({chunks})) AS ck")
+        .selectExpr("id", "ck.chunk", "ck.key"),
+        ["chunk", "key"], max_bucket)
     return (
-        cand.join(s1, "id1").join(s2, "id2")
-        .select("id1", "id2",
-                F.bit_count(F.col("sh1").bitwiseXOR(F.col("sh2")))
-                 .alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
+        cand.join(sh.selectExpr("id AS id1", "simhash AS sh1"), "id1")
+        .join(sh.selectExpr("id AS id2", "simhash AS sh2"), "id2")
+        .selectExpr("id1", "id2", "bit_count(sh1 ^ sh2) AS hamming")
+        .where(f"hamming <= {int(max_hamming)}")
     )
 
 
@@ -872,23 +928,16 @@ def winnow_fingerprints(
     Families are mutually incompatible (disjoint fingerprint values) —
     which is what the ``_fp_hash`` stamp below enforces.
 
-    BREAKING DEFAULT CHANGE (round 9): ``token_hash`` flipped
-    ``xxhash64`` → ``arrow64``, so fingerprints computed under default
-    arguments changed value across versions. Persisted fingerprint
-    sets are safe: they carry the ``_fp_hash`` stamp and the
-    incremental path REFUSES a family mismatch instead of silently
-    missing every overlap; cross-family pair-set parity is pinned by
-    ``tests/test_review_fixes.py::TestWinnowCrossFamilyParity``.
-
     COMPATIBILITY NOTE: the default flipped ``xxhash64`` → ``arrow64``
     in round 9, so fingerprints computed under default arguments
     changed value across versions. A persisted corpus built under the
     old default must either be probed with an explicit
     ``token_hash='xxhash64'`` or re-fingerprinted — the ``_fp_hash``
     stamp turns the mismatch into a hard error instead of silent
-    zero-overlap, and the cross-family parity test
-    (tests/test_review_fixes.py) pins that both families produce the
-    same overlap PAIR SET on guaranteed-run corpora.
+    zero-overlap, and
+    ``tests/test_review_fixes.py::TestWinnowCrossFamilyParity`` pins
+    that both families produce the same overlap PAIR SET on
+    guaranteed-run corpora.
 
     The output carries a ``_fp_hash`` stamp column naming the
     ``token_hash`` that built it — fingerprints from different hash
@@ -897,11 +946,10 @@ def winnow_fingerprints(
     nothing; :func:`winnow_overlap_incremental` enforces the stamp
     (same discipline as the MinHash ``_sig_repr`` stamp)."""
     return _winnow_arrays(df, text_col, id_col, k, w, token_hash) \
-        .select("id", F.explode("_fps").alias("fp"),
-                F.lit(token_hash).alias("_fp_hash"))
+        .selectExpr("id", "explode(_fps) AS fp", f"'{token_hash}' AS _fp_hash")
 
 
-def _stage_col(df: DataFrame, keep: list[str], expr: Column,
+def _stage_col(df: DataFrame, keep: list[str], expr: str,
                name: str) -> DataFrame:
     """Materialize ``expr`` as a real per-row column behind a Generate
     barrier: ``explode(array(expr))`` emits exactly one row per input
@@ -911,8 +959,10 @@ def _stage_col(df: DataFrame, keep: list[str], expr: Column,
     mechanism; the optimizer can inline an alias into every reference
     site, so an array referenced inside a per-window lambda re-computes
     per WINDOW (the un-barriered winnowing build measured ~50× slower —
-    the k-gram hash array was rebuilt for every sliding window)."""
-    return df.select(*keep, F.explode(F.array(expr)).alias(name))
+    the k-gram hash array was rebuilt for every sliding window).
+    ``expr`` is SQL text."""
+    return df.selectExpr(*map(_q, keep),
+                         f"explode(array({expr})) AS {_q(name)}")
 
 
 def _winnow_from_hashes_udf(k: int, w: int):
@@ -1019,39 +1069,31 @@ def _winnow_arrays(df: DataFrame, text_col: str, id_col: str,
     multi-consumer caller stages the result itself."""
     from db2pq_spark.operators.skew import ensure_parallelism
 
-    base = (doc_tokens(ensure_parallelism(df), text_col, id_col)
-            .where(F.size("_toks") >= k))
+    if token_hash != "arrow64":
+        _family(token_hash, ("xxhash64", "md5_60"), "token_hash")
+    base = doc_tokens(ensure_parallelism(df), text_col, id_col)
+    if token_hash == "md5_60":
+        staged = base
+    else:
+        staged = _stage_col(base, ["id"], token_hashes_sql(), "_th")
     if token_hash == "arrow64":
         # production default: per-token xxhash64 stays JVM-side (one
         # hash per token), then ONE Arrow kernel replaces the two
         # interpreted lambda stages (k-gram hash + window minima +
-        # distinct) — see _winnow_from_hashes_udf
-        th = F.transform("_toks", lambda t: F.xxhash64(t))
-        staged = _stage_col(base, ["id"], th, "_th")
-        kern = _winnow_from_hashes_udf(k, w)
-        staged = staged.select("id", kern("_th").alias("_fps"))
-    else:
-        if token_hash == "xxhash64":
-            th = F.transform("_toks", lambda t: F.xxhash64(t))
-            staged = _stage_col(base, ["id"], th, "_th")
-            kh = F.transform(
-                F.sequence(F.lit(1), F.size("_th") - k + 1),
-                lambda i: F.xxhash64(F.slice(F.col("_th"), i, k)))
-            staged = _stage_col(staged, ["id"], kh, "_kh")
-        else:
-            kh = F.transform(
-                F.sequence(F.lit(1), F.size("_toks") - k + 1),
-                lambda i: _token_hash(
-                    F.concat_ws(" ", F.slice(F.col("_toks"), i, k)),
-                    token_hash))
-            staged = _stage_col(base, ["id"], kh, "_kh")
-        wins = F.array_distinct(F.transform(
-            F.sequence(F.lit(1),
-                       F.greatest(F.lit(1), F.size("_kh") - w + 1)),
-            lambda i: F.array_min(F.slice(F.col("_kh"), i, w)),
-        ))
-        staged = staged.select("id", wins.alias("_fps"))
-    return staged
+        # distinct) — see _winnow_from_hashes_udf; a document shorter
+        # than k tokens gets []
+        kern = _kernel(staged.sparkSession.sparkContext,
+                       _winnow_from_hashes_udf, k, w)
+        return staged.select("id", kern("_th").alias("_fps"))
+    # a document shorter than k tokens has no k-grams: its row goes
+    # here, behind the barrier, so the tokenization runs once
+    staged = (_stage_col(staged, ["id"], _ngram_keys_sql(k, token_hash),
+                         "_kh")
+              .where("size(_kh) > 0"))
+    return staged.selectExpr(
+        "id", f"array_distinct(transform(sequence(1, greatest(1, "
+        f"size(_kh) - {int(w)} + 1)), i -> array_min(slice(_kh, i, "
+        f"{int(w)})))) AS _fps")
 
 
 def winnow_overlap_pairs(
@@ -1078,10 +1120,10 @@ def winnow_overlap_pairs(
     measured ~3× slower at the 100× replica)."""
     staged = stage(_winnow_arrays(df, text_col, id_col, k, w,
                                   token_hash))
-    fps = staged.select("id", F.explode("_fps").alias("fp"))
+    fps = staged.selectExpr("id", "explode(_fps) AS fp")
     if max_bucket is not None:
         hot = (fps.groupBy("fp").count()
-               .filter(F.col("count") > max_bucket).select("fp"))
+               .where(f"`count` > {int(max_bucket)}").select("fp"))
         fps = fps.join(F.broadcast(hot), "fp", "left_anti")
     a = fps.withColumnRenamed("id", "id1")
     # the self-join's build side is fingerprint-relation-sized (~
@@ -1090,13 +1132,17 @@ def winnow_overlap_pairs(
     # radix-sort, so sort-merge measures ~20% faster and steadier at
     # the 100× replica despite the session's global hash preference
     b = fps.withColumnRenamed("id", "id2").hint("merge")
-    return (
-        a.join(b, "fp")
-        .filter(F.col("id1") < F.col("id2"))
-        .groupBy("id1", "id2")
-        .agg(F.count("*").cast("bigint").alias("shared_fps"))
-        .filter(F.col("shared_fps") >= min_shared)
-    )
+    return _shared_counts(a.join(b, "fp").where("id1 < id2"),
+                          "id1", "id2", min_shared)
+
+
+def _shared_counts(occ: DataFrame, left: str, right: str,
+                   min_shared: int) -> DataFrame:
+    """(left, right, shared_fps) of the pairs ``occ`` joins on at least
+    ``min_shared`` fingerprints."""
+    return (occ.groupBy(left, right)
+            .agg(F.expr("CAST(count(*) AS BIGINT) AS shared_fps"))
+            .where(f"shared_fps >= {int(min_shared)}"))
 
 
 def winnow_overlap_incremental(
@@ -1147,7 +1193,7 @@ def winnow_overlap_incremental(
     broadcast does not (round-9 measured 100× ratio 17.8×→2.2×)."""
     bfp = (winnow_fingerprints(batch, text_col, id_col, k, w,
                                token_hash)
-           .select(F.col("id").alias("batch_id"), "fp"))
+           .selectExpr("id AS batch_id", "fp"))
     # two consumers below: the distinct-key semi filter and the final
     # pair join
     bfp = stage(bfp)
@@ -1200,7 +1246,7 @@ def winnow_overlap_incremental(
                 f"stamp — assuming token_hash={token_hash!r}; "
                 "re-persist via winnow_fingerprints() to make the "
                 "hash-family mismatch check effective", stacklevel=2)
-        cfp = corpus.select(F.col("id").alias("corpus_id"), "fp")
+        cfp = corpus.selectExpr("id AS corpus_id", "fp")
     else:
         # single downstream consumer (the broadcast semi filter), so
         # the raw path needs no staged materialization of the full
@@ -1208,8 +1254,7 @@ def winnow_overlap_incremental(
         # write of anything corpus-sized
         cfp = (_winnow_arrays(corpus, text_col, id_col, k, w,
                               token_hash)
-               .select(F.col("id").alias("corpus_id"),
-                       F.explode("_fps").alias("fp")))
+               .selectExpr("id AS corpus_id", "explode(_fps) AS fp"))
     # broadcast the batch's DISTINCT fingerprint keys as a semi filter
     # FIRST: a corpus fingerprint absent from the batch can neither
     # produce an overlap row nor change the hot-ness of any surviving
@@ -1226,117 +1271,62 @@ def winnow_overlap_incremental(
         # corpus fingerprints
         hits = stage(hits)
         hot = (hits.groupBy("fp").count()
-               .filter(F.col("count") > max_bucket).select("fp"))
+               .where(f"`count` > {int(max_bucket)}").select("fp"))
         hits = hits.join(F.broadcast(hot), "fp", "left_anti")
-    return (
-        hits.join(F.broadcast(bfp), "fp")
-        .filter(F.col("corpus_id") != F.col("batch_id"))
-        .groupBy("batch_id", "corpus_id")
-        .agg(F.count("*").cast("bigint").alias("shared_fps"))
-        .filter(F.col("shared_fps") >= min_shared)
-    )
+    return _shared_counts(
+        hits.join(F.broadcast(bfp), "fp").where("corpus_id != batch_id"),
+        "batch_id", "corpus_id", min_shared)
 
 
 # ---------------------------------------------------------------------------
 # Exact-substring (repeated-span) detection
 # ---------------------------------------------------------------------------
 
-def _span_key(col: Column, algo: str) -> Column:
-    """Span-text equality key. ``xxhash64`` (production default) shuffles
-    8-byte longs — ~4× fewer key bytes than md5's 32-char hex strings,
-    which at 100 TB is pure shuffle-width savings; its 64-bit space makes
-    corpus-scale collisions possible-but-negligible for a *dedup* signal
-    (a colliding pair merely over-counts one span). ``md5`` is the
-    exactness configuration: every engine computes it identically, so the
-    gate oracles (q102/q104/q116) replay the keys bit-for-bit in DuckDB —
-    same gate-config / production-config split as q36/q38/q117."""
-    if algo == "xxhash64":
-        return F.xxhash64(col)
-    if algo == "md5":
-        return F.md5(F.encode(col, "UTF-8"))
-    raise ValueError(f"unknown span_hash {algo!r}")
-
-
-def _span_hash_expr(n: int, span_hash: str, toks_col: str = "_toks",
-                    th_col: str = "_th") -> Column:
-    """In-row array of span keys for an ``n``-token sliding window.
-
-    ``xxhash64`` (production) never builds span STRINGS: each token is
-    hashed once (``th_col``, an array<long> the caller projects first)
-    and the span key is xxhash64 over the n-long slice — measured ~25%
-    cheaper per corpus pass than concat_ws+hash at the 100× replica,
-    and the dominant cost of the span family is exactly these passes.
-    ``md5`` (the gate-exactness config) must hash the span TEXT so
-    DuckDB can replay the keys, so it concat_ws's the slice. Documents
-    shorter than ``n`` tokens get an empty array (``sequence(1, s)``
-    with s ≤ 0 would count DOWNWARD and fabricate keys)."""
-    if span_hash == "xxhash64":
-        body = F.transform(
-            F.sequence(F.lit(1), F.size(th_col) - n + 1),
-            lambda i: F.xxhash64(F.slice(F.col(th_col), i, n)),
-        )
-        guard = F.size(th_col)
-    else:
-        body = F.transform(
-            F.sequence(F.lit(1), F.size(toks_col) - n + 1),
-            lambda i: _span_key(
-                F.concat_ws(" ", F.slice(F.col(toks_col), i, n)),
-                span_hash),
-        )
-        guard = F.size(toks_col)
-    empty = F.array().cast(
-        "array<bigint>" if span_hash == "xxhash64" else "array<string>")
-    return F.when(guard >= n, body).otherwise(empty)
+_SPAN_FAMILIES = ("xxhash64", "md5")
 
 
 def _span_hashes(df: DataFrame, text_col: str, id_col: str, n: int,
                  span_hash: str = "xxhash64") -> DataFrame:
     """(id, pos, h): every positioned n-token span of every document,
-    keyed per :func:`_span_hash_expr` (xxhash64: token-hash slices, no
+    keyed per :func:`_ngram_keys_sql` (xxhash64: token-hash slices, no
     span strings) or — for the md5 exactness config — by the codegen'd
-    post-explode :func:`_span_key` of the span text. Documents shorter
-    than ``n`` tokens contribute nothing; ``pos`` is the 0-based start
-    token."""
+    post-explode md5 of the span text. A document shorter than ``n``
+    tokens has no spans; ``pos`` is the 0-based start token."""
     from db2pq_spark.operators.skew import ensure_parallelism
 
-    base = (doc_tokens(ensure_parallelism(df), text_col, id_col)
-            .where(F.size("_toks") >= n))
+    key = _family(span_hash, _SPAN_FAMILIES, "span_hash")
+    base = doc_tokens(ensure_parallelism(df), text_col, id_col)
     if span_hash == "xxhash64":
-        return (
-            base.select("id",
-                        F.transform("_toks", lambda t: F.xxhash64(t))
-                        .alias("_th"))
-            .select("id", F.posexplode(_span_hash_expr(n, span_hash))
-                    .alias("pos", "h"))
-        )
-    spans = F.transform(
-        F.sequence(F.lit(1), F.size("_toks") - n + 1),
-        lambda i: F.concat_ws(" ", F.slice(F.col("_toks"), i, n)),
-    )
-    return (
-        base.select("id", F.posexplode(spans).alias("pos", "_span"))
-        .select("id", "pos",
-                _span_key(F.col("_span"), span_hash).alias("h"))
-    )
+        keys = _ngram_keys_sql(n, span_hash)
+        return (base.selectExpr("id", f"{token_hashes_sql()} AS _th")
+                .selectExpr("id", f"posexplode({keys}) AS (pos, h)"))
+    spans = _windows_sql("_toks", n, "concat_ws(' ', {})")
+    return (base.selectExpr("id", f"posexplode({spans}) AS (pos, _span)")
+            .selectExpr("id", "pos", f"{key.format('_span')} AS h"))
 
 
 def _span_stage(df: DataFrame, text_col: str, id_col: str, n: int,
                 span_hash: str, keep_tokens: bool) -> DataFrame:
     """The shared span-family staging relation: per-doc
     (id[, _toks], _sh) where ``_sh`` is the in-row span-key array
-    (:func:`_span_hash_expr`) — one tokenize+hash pass over the
+    (:func:`_ngram_keys_sql`) — one tokenize+hash pass over the
     corpus, staged once so every consumer (key counting, occurrence
     extraction, rebuilds) re-reads it instead of re-running the pass
     (the un-staged shape really re-executes per consumer — it was ~2/3
-    of the span family's runtime at the 100× replica)."""
+    of the span family's runtime at the 100× replica). The span key,
+    ``span_hash``: ``xxhash64`` (production default) shuffles 8-byte
+    longs — ~4× fewer key bytes than md5's 32-char hex strings — and
+    its corpus-scale collisions are negligible for a dedup signal (a
+    colliding pair merely over-counts one span); ``md5`` is the
+    exactness configuration the q102/q104/q116 gate oracles replay."""
+    _family(span_hash, _SPAN_FAMILIES, "span_hash")
     staged = doc_tokens(df, text_col, id_col)
     if span_hash == "xxhash64":
-        staged = staged.select(
-            "id", "_toks",
-            F.transform("_toks", lambda t: F.xxhash64(t)).alias("_th"))
+        staged = staged.selectExpr("id", "_toks",
+                                   f"{token_hashes_sql()} AS _th")
     cols = ["id", "_toks"] if keep_tokens else ["id"]
-    return stage(staged.select(*cols, _span_hash_expr(n, span_hash)
-                               .alias("_sh")))
+    return stage(staged.selectExpr(
+        *cols, f"{_ngram_keys_sql(n, span_hash)} AS _sh"))
 
 
 def duplicate_spans(
@@ -1370,29 +1360,27 @@ def duplicate_spans(
     measured super-linear at an all-duplicate replica vs ~linear for
     this shape. Never materializes pairs, never goes quadratic.
 
-    ``span_hash`` picks the span equality key — see :func:`_span_key`
+    ``span_hash`` picks the span equality key — see :func:`_span_stage`
     (``xxhash64`` production default; ``md5`` for engine-replayable
     oracles)."""
     from db2pq_spark.operators.skew import ensure_parallelism
 
     staged = _span_stage(ensure_parallelism(df), text_col, id_col, n,
                          span_hash, keep_tokens=False)
-    per_doc = (staged.where(F.size("_sh") > 0)
-               .select("id", F.size("_sh").alias("n_spans")))
-    g = staged.select("id", F.explode("_sh").alias("h"))
-    dup = (g.groupBy("h").agg(F.count("*").alias("tot"))
-           .filter(F.col("tot") >= min_count).select("h"))
+    per_doc = (staged.where("size(_sh) > 0")
+               .selectExpr("id", "size(_sh) AS n_spans"))
+    g = staged.selectExpr("id", "explode(_sh) AS h")
+    dup = (g.groupBy("h").agg(F.expr("count(*) AS tot"))
+           .where(f"tot >= {int(min_count)}").select("h"))
     dup_per_doc = (g.join(dup, "h").groupBy("id")
-                   .agg(F.count("*").alias("_dup_c")))
+                   .agg(F.expr("count(*) AS _dup_c")))
     return (
         per_doc.join(dup_per_doc, "id", "left")
-        .select(F.col("id").alias(id_col),
-                F.col("n_spans").cast("bigint").alias("n_spans"),
-                F.coalesce(F.col("_dup_c"), F.lit(0))
-                 .cast("bigint").alias("dup_spans"))
-        .select(id_col, "n_spans", "dup_spans",
-                F.round(F.col("dup_spans") / F.col("n_spans"), 6)
-                 .alias("dup_span_ratio"))
+        .selectExpr(f"id AS {_q(id_col)}",
+                    "CAST(n_spans AS BIGINT) AS n_spans",
+                    "CAST(coalesce(_dup_c, 0) AS BIGINT) AS dup_spans")
+        .selectExpr(_q(id_col), "n_spans", "dup_spans",
+                    "round(dup_spans / n_spans, 6) AS dup_span_ratio")
     )
 
 
@@ -1409,14 +1397,14 @@ def duplicate_span_positions(
 
     staged = _span_stage(ensure_parallelism(df), text_col, id_col, n,
                          span_hash, keep_tokens=False)
-    g = staged.select("id", F.posexplode("_sh").alias("pos", "h"))
+    g = staged.selectExpr("id", "posexplode(_sh) AS (pos, h)")
     dup_counts = (
-        g.groupBy("h").agg(F.count("*").alias("span_count"))
-        .filter(F.col("span_count") >= min_count)
+        g.groupBy("h").agg(F.expr("count(*) AS span_count"))
+        .where(f"span_count >= {int(min_count)}")
     )
     return (
         g.join(dup_counts, "h")  # broadcast-or-hash, never sorted
-        .select(F.col("id").alias(id_col), "pos", "span_count")
+        .selectExpr(f"id AS {_q(id_col)}", "pos", "span_count")
     )
 
 
@@ -1474,7 +1462,7 @@ def remove_duplicate_spans(
     the suite's worst 100× ratio). Like the detection pass: aggregate,
     don't sort; never pairs, never quadratic.
 
-    ``span_hash``: see :func:`_span_key`."""
+    ``span_hash``: see :func:`_span_stage`."""
     from db2pq_spark.operators.skew import ensure_parallelism
 
     if keep not in ("none", "one"):
@@ -1482,55 +1470,43 @@ def remove_duplicate_spans(
     staged = _span_stage(ensure_parallelism(df), text_col, id_col, n,
                          span_hash, keep_tokens=True)
     base = staged.select("id", "_toks")
-    g = staged.select("id", F.posexplode("_sh").alias("pos", "h"))
+    g = staged.selectExpr("id", "posexplode(_sh) AS (pos, h)")
     # the same count aggregate also picks each key's exemplar when
     # keep="one" — min(struct(id, pos)), the propagate_labels
     # argmin-by-struct pattern; no extra shuffle over the span relation
     dup = (g.groupBy("h")
-           .agg(F.count("*").alias("c"),
-                F.min(F.struct("id", "pos")).alias("_ex"))
-           .filter(F.col("c") >= min_count).select("h", "_ex"))
+           .agg(F.expr("count(*) AS c"), F.expr("min(struct(id, pos)) AS _ex"))
+           .where(f"c >= {int(min_count)}").select("h", "_ex"))
     cut_occ = g.join(dup, "h")
     if keep == "one":
-        cut_occ = cut_occ.filter(
-            ~((F.col("id") == F.col("_ex.id"))
-              & (F.col("pos") == F.col("_ex.pos"))))
+        cut_occ = cut_occ.where("NOT ((id = _ex.id) AND (pos = _ex.pos))")
     # only duplicated span OCCURRENCES shuffle, and only their start
     # positions — the ×n covered-index expansion happens in-row below
-    starts = (
-        cut_occ
-        .groupBy("id")
-        .agg(F.collect_set("pos").alias("_starts"))
-    )
-    cut = F.array_distinct(F.flatten(F.transform(
-        "_starts", lambda p: F.sequence(p, p + F.lit(n - 1)))))
-    kept_idx = F.array_except(
-        F.sequence(F.lit(0), F.size("_toks") - 1), F.col("_cut"))
+    starts = cut_occ.groupBy("id").agg(F.expr("collect_set(pos) AS _starts"))
+    cut = ("array_distinct(flatten(transform(_starts, "
+           f"p -> sequence(p, p + {int(n) - 1}))))")
+    kept_idx = "array_except(sequence(0, size(_toks) - 1), _cut)"
+    rebuilt = ("concat_ws(' ', transform(_ki, "
+               "i -> element_at(_toks, i + 1)))")
     # stepwise selects keep each expensive alias referenced ≤ the
     # CollapseProject inlining rules allow, so the interpreted
     # expressions are planned ONCE, inside the affected-rows branch
     return (
         base.join(starts, "id", "left")
-        .select("id", "_toks", F.when(F.col("_starts").isNotNull(), cut)
-                .alias("_cut"))
-        .select("id", "_toks", F.when(F.col("_cut").isNotNull(), kept_idx)
-                .alias("_ki"))
-        .select(
+        .selectExpr("id", "_toks",
+                    f"CASE WHEN _starts IS NOT NULL THEN {cut} END AS _cut")
+        .selectExpr("id", "_toks",
+                    f"CASE WHEN _cut IS NOT NULL THEN {kept_idx} END AS _ki")
+        .selectExpr(
             "id",
-            F.when(
-                F.col("_ki").isNull(), F.concat_ws(" ", "_toks"),
-            ).otherwise(
-                F.concat_ws(" ", F.transform(
-                    "_ki", lambda i: F.element_at("_toks", i + 1)))
-            ).alias("clean_text"),
+            "CASE WHEN _ki IS NULL THEN concat_ws(' ', _toks) "
+            f"ELSE {rebuilt} END AS clean_text",
             # size(NULL) is -1 under non-ANSI defaults — branch on the
             # array itself, never coalesce over size()
-            F.when(F.col("_ki").isNull(), F.size("_toks"))
-             .otherwise(F.size("_ki"))
-             .cast("bigint").alias("n_kept"),
-            F.when(F.col("_ki").isNull(), F.lit(0))
-             .otherwise(F.size("_toks") - F.size("_ki"))
-            .cast("bigint").alias("n_removed"))
+            "CAST(CASE WHEN _ki IS NULL THEN size(_toks) ELSE size(_ki) END"
+            " AS BIGINT) AS n_kept",
+            "CAST(CASE WHEN _ki IS NULL THEN 0 "
+            "ELSE size(_toks) - size(_ki) END AS BIGINT) AS n_removed")
     )
 
 
@@ -1548,25 +1524,20 @@ def contamination_stats(
     distinct benchmark-span side is broadcast by AQE; training spans
     stream through a semi-join probe without reshuffling the corpus —
     the only wide operation is the per-document count. ``span_hash``:
-    see :func:`_span_key`."""
+    see :func:`_span_stage`."""
     tspans = _span_hashes(train, text_col, id_col, n, span_hash)
     bspans = _span_hashes(bench, text_col, id_col, n, span_hash) \
         .select("h").distinct()
-    hits = (
-        tspans.join(bspans, "h", "left_semi")
-        .groupBy("id")
-        .agg(F.count("*").alias("contaminated_spans"))
-    )
-    totals = tspans.groupBy("id").agg(F.count("*").alias("n_spans"))
+    hits = (tspans.join(bspans, "h", "left_semi").groupBy("id")
+            .agg(F.expr("count(*) AS contaminated_spans")))
+    totals = tspans.groupBy("id").agg(F.expr("count(*) AS n_spans"))
     return (
         totals.join(hits, "id", "left")
-        .select(
-            F.col("id").alias(id_col), "n_spans",
-            F.coalesce("contaminated_spans", F.lit(0)).cast("bigint")
-             .alias("contaminated_spans"),
-            (F.coalesce("contaminated_spans", F.lit(0)) > 0)
-             .alias("contaminated"),
-        )
+        .selectExpr(
+            f"id AS {_q(id_col)}", "n_spans",
+            "CAST(coalesce(contaminated_spans, 0) AS BIGINT)"
+            " AS contaminated_spans",
+            "coalesce(contaminated_spans, 0) > 0 AS contaminated")
     )
 
 
@@ -1581,7 +1552,7 @@ def decontaminate(
     flagged = (
         contamination_stats(train, bench, text_col, id_col, n,
                             span_hash)
-        .where(F.col("contaminated_spans") >= min_overlap)
+        .where(f"contaminated_spans >= {int(min_overlap)}")
         .select(id_col)
     )
     return train.join(flagged, id_col, "left_anti")

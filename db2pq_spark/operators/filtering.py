@@ -84,7 +84,8 @@ def gopher_rules(
     Exactness: every ratio rule is an integer cross-multiplication
     (``n_alpha * 100 >= pct * n_words``), and mean word length uses
     the identity ``word_chars = len(normalized) - (n_words - 1)``
-    (single-spaced normalized text), so no float ever decides a flag
+    (single-spaced normalized text; 0 for a blank text, which has no
+    words), so no float ever decides a flag
     and the DuckDB oracle replays the identical decisions.
 
     Scale: one narrow projection over the corpus — codegen'd
@@ -101,7 +102,8 @@ def gopher_rules(
     norm = normalize_sql(text_col)
     toks = tokens_sql(text_col)
     n_words = f"CAST(size({toks}) AS BIGINT)"
-    word_chars = f"CAST(length({norm}) - ({n_words} - 1) AS BIGINT)"
+    word_chars = (f"CAST(length({norm}) - greatest({n_words} - 1, 0) "
+                  "AS BIGINT)")
     n_alpha = f"CAST(size(filter({toks}, x -> x RLIKE '[a-z]')) AS BIGINT)"
     # Gopher's symbol rule counts '#' and ellipsis occurrences; a
     # non-overlapping regex scan is identical in Java regex and RE2.

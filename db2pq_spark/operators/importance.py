@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from db2pq_spark.operators.sampling import hash_bucket
+from db2pq_spark.operators.sampling import hash_bucket, salted_bucket
 from db2pq_spark.operators.textstats import tokens
 
 
@@ -54,13 +54,7 @@ def _bigram_features(df: DataFrame, text_col: str, id_col: str,
           .select("id", "_tgt",
                   F.concat_ws(" ", F.col("_p").getField("0"),
                               F.col("_p").getField("1")).alias("_gram")))
-    if keys == "md5":
-        feat = hash_bucket(F.col("_gram"), n_buckets, salt="dsir")
-    elif keys == "xxhash64":
-        feat = F.pmod(F.xxhash64(F.lit("dsir"), F.col("_gram")),
-                      F.lit(n_buckets))
-    else:
-        raise ValueError(f"unknown keys {keys!r} — 'md5' or 'xxhash64'")
+    feat = salted_bucket(F.col("_gram"), n_buckets, "dsir", keys)
     return bg.select("id", "_tgt", feat.alias("feat"))
 
 

@@ -46,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from db2pq_spark.operators.sampling import hash_bucket
+from db2pq_spark.operators.sampling import salted_bucket
 from db2pq_spark.operators.textstats import tokens
 
 __all__ = ["logreg_features", "logreg_train", "logreg_score",
@@ -54,14 +54,6 @@ __all__ = ["logreg_features", "logreg_train", "logreg_score",
 
 #: micro-unit scale for weights and residuals
 _UNIT = 1_000_000
-
-
-def _feat_expr(tok: Column, n_buckets: int, keys: str) -> Column:
-    if keys == "md5":
-        return hash_bucket(tok, n_buckets, salt="lr")
-    if keys == "xxhash64":
-        return F.pmod(F.xxhash64(F.lit("lr"), tok), F.lit(n_buckets))
-    raise ValueError(f"unknown keys {keys!r} — 'md5' or 'xxhash64'")
 
 
 def logreg_features(
@@ -78,7 +70,7 @@ def logreg_features(
                      tokens(text_col).alias("_toks"))
     # r13 plan shape: ONE exchange total. The bias feature rides the
     # token array as an in-row sentinel element (feat = n_buckets is
-    # reserved — _feat_expr lands in [0, n_buckets), so the sentinel
+    # reserved — salted_bucket lands in [0, n_buckets), so the sentinel
     # can never collide with a hashed token, and a NULL-text document
     # still contributes exactly its bias row via the coalesce), the
     # compact doc rows repartition by id ONCE, and the (id, y, feat)
@@ -90,7 +82,7 @@ def logreg_features(
     featarr = F.concat(
         F.coalesce(
             F.transform("_toks",
-                        lambda t_: _feat_expr(t_, n_buckets, keys)
+                        lambda t_: salted_bucket(t_, n_buckets, "lr", keys)
                         .cast("bigint")),
             F.array().cast("array<bigint>")),
         F.array(F.lit(n_buckets).cast("bigint")))
@@ -230,7 +222,7 @@ def logreg_score(
     featarr = F.concat(
         F.coalesce(
             F.transform("_toks",
-                        lambda t_: _feat_expr(t_, n_buckets, keys)
+                        lambda t_: salted_bucket(t_, n_buckets, "lr", keys)
                         .cast("bigint")),
             F.array().cast("array<bigint>")),
         F.array(F.lit(n_buckets).cast("bigint")))

@@ -171,16 +171,13 @@ def _gopher_arrow(
     in, 10 int64 columns out)."""
     from pyspark.sql.types import (LongType, StructField, StructType)
 
-    from db2pq_spark.operators.dedup import doc_tokens
+    from db2pq_spark.operators.dedup import doc_tokens, token_hashes_sql
 
     top_ns, dup_ns = sorted(top_max_pct), sorted(dup_max_pct)
     all_ns = sorted(set(top_ns) | set(dup_ns))
     base = (doc_tokens(df, text_col, id_col)
-            .select("id",
-                    F.transform("_toks", lambda t_: F.length(t_))
-                    .alias("_lens"),
-                    F.transform("_toks", lambda t_: F.xxhash64(t_))
-                    .alias("_th")))
+            .selectExpr("id", "transform(_toks, t -> length(t)) AS _lens",
+                        f"{token_hashes_sql()} AS _th"))
     cols = (["n_chars"] + [f"top{n}_chars" for n in top_ns]
             + [f"dup{n}_chars" for n in dup_ns])
     schema = StructType([base.schema["id"]]

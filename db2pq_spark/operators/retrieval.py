@@ -85,7 +85,7 @@ def bm25_scores(
                        F.coalesce(tokenize(text_col),
                                   F.array().cast("array<string>"))
                        .alias("_raw"))
-    toks = _stage_col(base, ["doc_id"], F.col("_raw"), "terms")
+    toks = _stage_col(base, ["doc_id"], "_raw", "terms")
     # one NULL sentinel per document guarantees every doc (even one
     # made entirely of query terms, or empty) emits a NULL-term row —
     # that row carries the doc's existence and dl into the single
@@ -108,8 +108,8 @@ def bm25_scores(
     # barrier the filters stop above the aggregate, every consumer
     # carries the identical exchange subtree, and Catalyst plans one
     # scan + one shuffle + ReusedExchange (verified by the plan test).
-    grouped = _stage_col(grouped, ["doc_id", "dl", "_cnt"],
-                         F.col("_gterm"), "term")
+    grouped = _stage_col(grouped, ["doc_id", "dl", "_cnt"], "_gterm",
+                         "term")
     # keep _cnt REQUIRED in every consumer subtree: stats and df never
     # read it, so column pruning would otherwise drop the count from
     # their copies of the aggregate — a different partial aggregate is

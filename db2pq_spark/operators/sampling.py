@@ -63,6 +63,20 @@ def hash_bucket(key: Column | str, n_buckets: int = DEFAULT_BUCKETS,
     return (h % F.lit(n_buckets)).alias("bucket")
 
 
+def salted_bucket(key: Column, n_buckets: int, salt: str,
+                  keys: str) -> Column:
+    """``key``'s bucket in [0, n_buckets) under hash family ``keys``:
+    ``md5`` is :func:`hash_bucket` (every engine computes it
+    identically, so oracles replay it), ``xxhash64`` is
+    ``pmod(xxhash64(salt, key), n_buckets)`` (one 64-bit hash, no
+    hex-string build)."""
+    if keys == "md5":
+        return hash_bucket(key, n_buckets, salt=salt)
+    if keys == "xxhash64":
+        return F.pmod(F.xxhash64(F.lit(salt), key), F.lit(n_buckets))
+    raise ValueError(f"unknown keys {keys!r} — 'md5' or 'xxhash64'")
+
+
 def hash_bucket_sql(key_expr: str, n_buckets: int = DEFAULT_BUCKETS,
                     salt: str = "") -> str:
     """The DuckDB/ANSI twin of :func:`hash_bucket` (used by oracles)."""

@@ -91,7 +91,7 @@ def _prepare(df: DataFrame, text_col: str, id_col: str,
     equality-equivalent, which is all the LCP argument needs)."""
     if keys not in ("exact", "hash"):
         raise ValueError(f"unknown keys {keys!r} — 'exact' or 'hash'")
-    from db2pq_spark.operators.dedup import doc_tokens
+    from db2pq_spark.operators.dedup import doc_tokens, token_hashes_sql
     from db2pq_spark.operators.skew import ensure_parallelism
 
     # NOTE (r13, measured): pre-hash-partitioning this relation buys
@@ -100,10 +100,8 @@ def _prepare(df: DataFrame, text_col: str, id_col: str,
     # showed no win for repartition("id") (+checkpoint or +persist)
     # over the plain parallelism spread. Keep the original shape.
     base = doc_tokens(ensure_parallelism(df), text_col, id_col)
-    kk = (F.transform("_toks", lambda t_: F.xxhash64(t_))
-          if keys == "hash" else F.col("_toks"))
-    return stage(base.select("id", F.col("_toks").alias("_tk"),
-                             kk.alias("_kk")))
+    kk = token_hashes_sql() if keys == "hash" else "_toks"
+    return stage(base.selectExpr("id", "_toks AS _tk", f"{kk} AS _kk"))
 
 
 def _position_mlens_raw(

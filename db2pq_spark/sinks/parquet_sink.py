@@ -76,6 +76,14 @@ def parked_path(data_dir: str | Path, schema: str, table: str) -> Path:
     return Path(data_dir) / schema / f".old_{table}.parquet"
 
 
+def parked_parts_path(data_dir: str | Path, schema: str,
+                      table: str) -> Path:
+    """Where a partition-scoped merge parks each live partition it
+    swaps, under the partition's own ``col=val`` path (hidden, so
+    readers skip it)."""
+    return table_path(data_dir, schema, table) / ".old_parts"
+
+
 def recover_parked(data_dir: str | Path, schema: str, table: str,
                    min_age_seconds: float = 0.0) -> bool:
     """Heal the swap's crash window. POSIX rename cannot replace a
@@ -83,7 +91,12 @@ def recover_parked(data_dir: str | Path, schema: str, table: str,
     promote new); a crash between them leaves ``.old_<table>.parquet``
     beside a *missing* table. Restore it (returns True). A parked copy
     beside a *present* table is the post-promote leftover of a crash
-    before cleanup — remove it.
+    before cleanup — remove it. The partition-scoped merge swaps
+    partitions the same way, parking them under
+    :func:`parked_parts_path`; each parked partition whose live copy
+    is missing is restored the same way (returns True), the rest
+    removed. Without a crash this costs two ``stat`` calls, no
+    directory listing.
 
     ``min_age_seconds`` guards concurrent readers against racing a
     *live* writer's swap (the two renames are microseconds apart; a
@@ -93,24 +106,40 @@ def recover_parked(data_dir: str | Path, schema: str, table: str,
     would keep the content-write mtime, which can be arbitrarily old),
     so the age check measures the swap itself. Writers — the
     repository's single mutator per table — pass 0."""
-    import time
-
     final = table_path(data_dir, schema, table)
     parked = parked_path(data_dir, schema, table)
-    if not parked.exists():
+    restored = False
+    if _settled(parked, min_age_seconds):
+        if final.exists():
+            _rm(parked)                 # stale: promote completed
+        else:
+            os.replace(parked, final)   # crash mid-swap: restore
+            restored = True
+    parts = parked_parts_path(data_dir, schema, table)
+    if _settled(parts, min_age_seconds):
+        leaves = [Path(d) for d, subdirs, _ in os.walk(parts)
+                  if d != str(parts) and not any("=" in s for s in subdirs)]
+        for leaf in leaves:
+            live = final / leaf.relative_to(parts)
+            if not live.exists():
+                live.parent.mkdir(parents=True, exist_ok=True)
+                os.replace(leaf, live)
+                restored = True
+        _rm(parts)
+    return restored
+
+
+def _settled(parked: Path, min_age_seconds: float) -> bool:
+    """Whether parked copy ``parked`` exists and is at least
+    ``min_age_seconds`` old (a younger one may belong to a live swap:
+    hands off)."""
+    import time
+
+    try:
+        mtime = parked.stat().st_mtime
+    except OSError:                     # absent, or the writer finished
         return False
-    if min_age_seconds > 0:
-        try:
-            age = time.time() - parked.stat().st_mtime
-        except OSError:                 # vanished: writer finished
-            return False
-        if age < min_age_seconds:
-            return False                # possibly a live swap: hands off
-    if final.exists():
-        _rm(parked)                     # stale: promote completed
-        return False
-    os.replace(parked, final)           # crash mid-swap: restore
-    return True
+    return min_age_seconds <= 0 or time.time() - mtime >= min_age_seconds
 
 
 def write_parquet(

@@ -108,9 +108,10 @@ def _dsum_sql(expr: str, scale: int = 4) -> str:
             f" AS DECIMAL(38,{scale})) AS DOUBLE)")
 
 
-#: normalized-text / token-list SQL fragments shared by text oracles
+#: normalized-text / token-list SQL fragments shared by text oracles; a
+#: blank text has no tokens (DuckDB, like Spark, splits '' into [''])
 _NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
-_TOKENS = f"string_split({_NORM}, ' ')"
+_TOKENS = f"list_filter(string_split({_NORM}, ' '), x -> x <> '')"
 #: the documents that have tokens: a non-whitespace character in the text
 _HAS_TEXT = "regexp_matches(text, '\\S')"
 

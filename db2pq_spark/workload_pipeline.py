@@ -2190,7 +2190,7 @@ _Q130_SQL = f"""
     WITH feat AS (
       SELECT doc_id,
              len({_TOKENS}) AS n_words,
-             LENGTH({_NORM}) - (len({_TOKENS}) - 1) AS word_chars,
+             LENGTH({_NORM}) - greatest(len({_TOKENS}) - 1, 0) AS word_chars,
              len(list_filter({_TOKENS},
                  x -> regexp_matches(x, '[a-z]'))) AS n_alpha_words,
              len(regexp_extract_all(text, '#|\\.\\.\\.')) AS n_symbols,

@@ -8,9 +8,11 @@ Usage: python scripts/dump_plans.py [sf_dir]   (default sf0.01)
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 #: query -> the plan property it demonstrates
 SHOWCASE = {
@@ -291,7 +293,7 @@ def main() -> None:
         plan = df._jdf.queryExecution().executedPlan().toString()
         out.append(f"\n## {name}\n\n*{why}*\n\n```\n{plan.rstrip()}\n```\n")
 
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
         fh.write("".join(out))
     print(f"wrote PLANS.md ({len(SHOWCASE)} plans)")
 

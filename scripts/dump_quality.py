@@ -11,10 +11,12 @@ Usage: python scripts/dump_quality.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 K = 10
 N_QUERIES = 50
@@ -190,7 +192,7 @@ def main() -> None:
         "(FULLGATE: all queries green) while this file tracks the "
         "recall/latency dial a 100 TB deployment actually uses.\n",
     ]
-    with open("/root/repo/QUALITY.md", "w") as fh:
+    with open(os.path.join(REPO, "QUALITY.md"), "w") as fh:
         fh.writelines(lines)
     print("wrote QUALITY.md")
     for name, rec, dt in results:

@@ -1,10 +1,11 @@
 #!/bin/bash
-# Parallel 2-shard test run — the full suite is ~13 min single-process
-# (502 tests, most of it Spark-session wall time); two concurrent
-# pytest processes with their own Spark sessions finish in ~6-7 min on
-# local[32]. Shards are deterministic: test FILES sorted by name,
-# alternating assignment, so both halves carry a similar session count
-# and any file always lands in the same shard.
+# Parallel 2-shard test run — the full suite is ~10 min single-process
+# on 4 vCPUs (~750 tests, most of it Spark-session wall time); two
+# concurrent pytest processes run their own Spark sessions, each
+# sizing local[N] from session.usable_cores(), so the split pays off
+# only with cores to spare. Shards are deterministic: test FILES
+# sorted by name, alternating assignment, so both halves carry a
+# similar session count and any file always lands in the same shard.
 #
 # Usage: bash scripts/run_tests.sh          # both shards, parallel
 #        bash scripts/run_tests.sh 0|1      # one shard (serial CI use)

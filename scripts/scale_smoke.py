@@ -54,13 +54,20 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import bench  # noqa: E402  (the shared fresh-worker plumbing)
 
 SF_DIR = "/root/testdata/sf0.1"
 COPIES = int(os.environ.get("SMOKE_COPIES", "10"))
+
+
+def _smoke_md() -> str:
+    """This checkout's smoke report for the ``COPIES`` replica."""
+    name = ("SCALE_SMOKE.md" if COPIES == 10
+            else f"SCALE_SMOKE_{COPIES}x.md")
+    return os.path.join(REPO, name)
 #: 3 steady repetitions at every factor: big-factor runs were assumed
 #: "long enough to be stable" at 2, but back-to-back 100× script runs
 #: shipped q118 17.9s-min-of-3 and then 53.1s-min-of-2 with zero code
@@ -393,8 +400,7 @@ def main() -> None:
         print(json.dumps({"copies": COPIES, "isolated": True,
                           "queries": sidecar}, indent=1))
         if os.environ.get("SMOKE_MERGE") == "1":
-            out_md = ("/root/repo/SCALE_SMOKE.md" if COPIES == 10
-                      else f"/root/repo/SCALE_SMOKE_{COPIES}x.md")
+            out_md = _smoke_md()
             out_js = out_md.replace(".md", ".json")
             with open(out_js) as fh:
                 full = json.load(fh)
@@ -424,8 +430,7 @@ def main() -> None:
             shutil.rmtree(big, ignore_errors=True)
         return
 
-    out_md = ("/root/repo/SCALE_SMOKE.md" if COPIES == 10
-              else f"/root/repo/SCALE_SMOKE_{COPIES}x.md")
+    out_md = _smoke_md()
     lines = [
         f"# SCALE_SMOKE — {COPIES}× replica run (auto-generated)\n",
         f"\nlineitem rows: {rows_small:,} (sf0.1) → {rows_big:,} "

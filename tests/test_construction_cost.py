@@ -9,15 +9,31 @@ under a budget at least 3× below the count of the former ``F.*``-built
 version, measured on the sf0.001 documents fixture after one warm-up
 build:
 
-=========================  =========  ======
-operator                   F.* built  budget
-=========================  =========  ======
-gopher_rules                     715     238
-exact_dedup                      114      38
-minhash_signatures               438     146
-minhash_dedup, hash repr        1005     335
-minhash_dedup, text repr         949     316
-=========================  =========  ======
+=================================  =========  ======
+operator                           F.* built  budget
+=================================  =========  ======
+gopher_rules                             715     238
+exact_dedup                              114      38
+minhash_signatures                       438     146
+minhash_dedup, hash repr                1005     335
+minhash_dedup, text repr                 949     316
+simhash_dedup                            536     178
+simhash_dedup, md5_60                    557     185
+winnow_fingerprints                      190      63
+winnow_overlap_pairs                     351     140
+winnow_overlap_pairs, md5_60             491     163
+winnow_overlap_incremental               615     246
+duplicate_spans                          590     196
+duplicate_spans, md5                     540     180
+duplicate_span_positions                 357     119
+remove_duplicate_spans                   883     294
+contamination_stats                      686     228
+contamination_stats, md5                 575     191
+=================================  =========  ======
+
+``winnow_overlap_pairs`` and ``winnow_overlap_incremental`` (default
+``arrow64`` family) are held at 2.5×: each Arrow kernel's Column call
+and alias cost 22 commands that no SQL text replaces.
 
 Object-release commands (``m\\nd\\n``, sent when Python garbage-collects
 a JVM reference) are not counted: their number follows the collector,
@@ -43,6 +59,18 @@ BUDGETS = {
     "minhash_signatures": 146,
     "minhash_dedup_hash": 335,
     "minhash_dedup_text": 316,
+    "simhash_dedup": 178,
+    "simhash_dedup_md5_60": 185,
+    "winnow_fingerprints": 63,
+    "winnow_overlap_pairs": 140,
+    "winnow_overlap_pairs_md5_60": 163,
+    "winnow_overlap_incremental": 246,
+    "duplicate_spans": 196,
+    "duplicate_spans_md5": 180,
+    "duplicate_span_positions": 119,
+    "remove_duplicate_spans": 294,
+    "contamination_stats": 228,
+    "contamination_stats_md5": 191,
 }
 
 BUILDERS = {
@@ -53,6 +81,28 @@ BUILDERS = {
     "minhash_dedup_hash": lambda d: dedup.minhash_dedup(d, "text", "doc_id"),
     "minhash_dedup_text": lambda d: dedup.minhash_dedup(
         d, "text", "doc_id", shingle_repr="text"),
+    "simhash_dedup": lambda d: dedup.simhash_dedup(d, "text", "doc_id"),
+    "simhash_dedup_md5_60": lambda d: dedup.simhash_dedup(
+        d, "text", "doc_id", token_hash="md5_60"),
+    "winnow_fingerprints":
+        lambda d: dedup.winnow_fingerprints(d, "text", "doc_id"),
+    "winnow_overlap_pairs":
+        lambda d: dedup.winnow_overlap_pairs(d, "text", "doc_id"),
+    "winnow_overlap_pairs_md5_60": lambda d: dedup.winnow_overlap_pairs(
+        d, "text", "doc_id", token_hash="md5_60"),
+    "winnow_overlap_incremental": lambda d: dedup.winnow_overlap_incremental(
+        d.where("doc_id % 5 = 0"), d, "text", "doc_id"),
+    "duplicate_spans": lambda d: dedup.duplicate_spans(d, "text", "doc_id"),
+    "duplicate_spans_md5": lambda d: dedup.duplicate_spans(
+        d, "text", "doc_id", span_hash="md5"),
+    "duplicate_span_positions":
+        lambda d: dedup.duplicate_span_positions(d, "text", "doc_id"),
+    "remove_duplicate_spans":
+        lambda d: dedup.remove_duplicate_spans(d, "text", "doc_id"),
+    "contamination_stats": lambda d: dedup.contamination_stats(
+        d, d.where("doc_id % 7 = 0"), "text", "doc_id"),
+    "contamination_stats_md5": lambda d: dedup.contamination_stats(
+        d, d.where("doc_id % 7 = 0"), "text", "doc_id", span_hash="md5"),
 }
 
 

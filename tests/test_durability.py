@@ -100,6 +100,68 @@ class TestCrashWindowVsIncrementalPaths:
         row = eng.read_pq("s", "r").first()
         assert row["n"] == 3 and row["sum_x"] == 7.0
 
+    def test_crash_mid_partition_swap_loses_no_rows(self, spark, tmp_path,
+                                                    monkeypatch):
+        """A partition-scoped merge that crashes between parking a live
+        partition and promoting its replacement must not lose the
+        parked rows: the next read restores them, and the next merge
+        of the same update completes it."""
+        eng = Engine(spark, tmp_path)
+        df = spark.createDataFrame([(i, f"p{i % 2}", "old")
+                                    for i in range(10)],
+                                   "k long, part string, v string")
+        eng.df_to_pq(df, "s", "t", partition_by=["part"])
+        upd = spark.createDataFrame([(0, "p0", "new")],
+                                    "k long, part string, v string")
+        real_replace, calls = os.replace, [0]
+
+        def crash_on_second(src, dst, *a, **kw):
+            calls[0] += 1
+            if calls[0] == 2:
+                raise OSError("simulated crash")
+            return real_replace(src, dst, *a, **kw)
+
+        monkeypatch.setattr(os, "replace", crash_on_second)
+        with pytest.raises(OSError, match="simulated crash"):
+            eng.merge_pq(upd, "s", "t", ["k"], partition_cols=["part"])
+        monkeypatch.setattr(os, "replace", real_replace)
+        # age the parked partition past the reader-side guard
+        parts = table_path(tmp_path, "s", "t") / ".old_parts"
+        assert parts.exists()
+        old = time.time() - 60
+        os.utime(parts, (old, old))
+        assert eng.read_pq("s", "t").count() == 10
+        assert not parts.exists()
+
+        eng.merge_pq(upd, "s", "t", ["k"], partition_cols=["part"])
+        rows = {r["k"]: r["v"] for r in eng.read_pq("s", "t").collect()}
+        assert len(rows) == 10 and rows[0] == "new"
+        assert sum(v == "old" for v in rows.values()) == 9
+
+    def test_crash_mid_partition_swap_is_healed_by_merge(
+            self, spark, tmp_path, monkeypatch):
+        """The writer-side heal needs no age: a merge right after the
+        crash restores the parked partition before it reads."""
+        eng = Engine(spark, tmp_path)
+        df = spark.createDataFrame([(i, f"p{i % 2}") for i in range(10)],
+                                   "k long, part string")
+        eng.df_to_pq(df, "s", "t", partition_by=["part"])
+        upd = spark.createDataFrame([(20, "p1")], "k long, part string")
+        real_replace, calls = os.replace, [0]
+
+        def crash_on_second(src, dst, *a, **kw):
+            calls[0] += 1
+            if calls[0] == 2:
+                raise OSError("simulated crash")
+            return real_replace(src, dst, *a, **kw)
+
+        monkeypatch.setattr(os, "replace", crash_on_second)
+        with pytest.raises(OSError, match="simulated crash"):
+            eng.merge_pq(upd, "s", "t", ["k"], partition_cols=["part"])
+        monkeypatch.setattr(os, "replace", real_replace)
+        eng.merge_pq(upd, "s", "t", ["k"], partition_cols=["part"])
+        assert eng.read_pq("s", "t").count() == 11
+
     def test_fresh_parked_copy_is_left_alone_by_readers(self, spark,
                                                         tmp_path):
         """A just-created parked dir (a live writer mid-swap) must not

@@ -17,7 +17,8 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 pytestmark = pytest.mark.skipif(
     not os.environ.get("RUN_FULLGATE"),
@@ -26,7 +27,7 @@ pytestmark = pytest.mark.skipif(
 
 
 def test_every_oracle_bearing_query_is_green(spark):
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, os.path.join(REPO, "scripts"))
     from check_oracle import run_sweep
 
     results = run_sweep(spark=spark, verbose=False)

@@ -230,13 +230,13 @@ class TestSimhash:
         # the portable hash must equal hashlib's md5 (and therefore any
         # engine's): first 15 hex chars as a 60-bit int — the q37 gate
         # oracle recomputes it in DuckDB
-        from db2pq_spark.operators.dedup import _token_hash
+        from db2pq_spark.operators.dedup import _HASH_FAMILIES
 
         words = ["hello", "world", "a", "", "Ünïcode tøken"]
         df = spark.createDataFrame([(w,) for w in words], "w string")
         got = {r["w"]: r["h"]
-               for r in df.select(
-                   "w", _token_hash(F.col("w"), "md5_60").alias("h")
+               for r in df.selectExpr(
+                   "w", _HASH_FAMILIES["md5_60"].format("w") + " AS h"
                ).collect()}
         for w in words:
             exp = int(hashlib.md5(w.encode()).hexdigest()[:15], 16)

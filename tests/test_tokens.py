@@ -122,3 +122,56 @@ def test_drift_counts_no_empty_token(spark, docs):
     toks = {r["tok"]: r["n"] for r in _token_rows(docs, "text")
             .groupBy("tok").agg(F.count("*").alias("n")).collect()}
     assert toks == {w: 3 for w in WORDS}
+
+
+class TestBlankTextHasNoTokens:
+    """Spark splits '' into [''], so without a guard a blank text
+    counts one token."""
+
+    @pytest.fixture(scope="class")
+    def blank(self, spark):
+        return spark.createDataFrame([(1, ""), (2, "\t"), (3, "a b")],
+                                     "doc_id long, text string")
+
+    def test_token_count(self, blank):
+        from db2pq_spark.operators.textstats import token_count, tokens
+
+        got = {r["doc_id"]: (r["n"], r["t"]) for r in blank.select(
+            "doc_id", token_count("text").alias("n"),
+            tokens("text").alias("t")).collect()}
+        assert got == {1: (0, []), 2: (0, []), 3: (2, ["a", "b"])}
+
+    def test_gopher_rules_counts_no_word(self, blank):
+        from db2pq_spark.operators.filtering import gopher_rules
+
+        got = {r["id"]: (r["n_words"], r["word_chars"]) for r in
+               gopher_rules(blank, "text", "doc_id").collect()}
+        assert got == {1: (0, 0), 2: (0, 0), 3: (2, 2)}
+
+
+def _regexp_replaces(df) -> int:
+    return (df._jdf.queryExecution().optimizedPlan().toString()
+            .count("regexp_replace("))
+
+
+class TestNgramKeysTokenizeOnce:
+    """A short-document filter on ``_toks`` would be pushed below the
+    tokenizing projection with the split substituted, tokenizing every
+    document twice; the n-gram builders need none."""
+
+    @pytest.mark.parametrize("token_hash", ["arrow64", "xxhash64", "md5_60"])
+    def test_winnow_fingerprints(self, docs, token_hash):
+        from db2pq_spark.operators.dedup import winnow_fingerprints
+
+        assert _regexp_replaces(winnow_fingerprints(
+            docs, "text", "doc_id", token_hash=token_hash)) == 1
+
+    @pytest.mark.parametrize("span_hash", ["xxhash64", "md5"])
+    def test_contamination_stats(self, docs, span_hash):
+        from db2pq_spark.operators.dedup import contamination_stats
+
+        # three span relations, each tokenized once: the train spans
+        # feed both the per-document total and the bench probe
+        assert _regexp_replaces(contamination_stats(
+            docs, docs.where("doc_id > 5"), "text", "doc_id", n=2,
+            span_hash=span_hash)) == 3

@@ -60,7 +60,7 @@ the array built behind a Generate barrier). One table
 
 from __future__ import annotations
 
-from functools import lru_cache, reduce
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -279,14 +279,6 @@ def with_shingle_hashes(
     )
 
 
-@lru_cache(maxsize=None)
-def _kernel(sc, factory, *args):
-    """``factory(*args)``, one per SparkContext ``sc``: a pandas UDF
-    builds its JVM function on first use (~25 py4j round trips) and
-    reuses it after, so each kernel is built once, not once per plan."""
-    return factory(*args)
-
-
 def _minhash_from_hashes_udf(num_hashes: int):
     """Arrow-vectorized MinHash: array<bigint> base hashes → the
     num_hashes-slot signature, all numpy (see
@@ -402,9 +394,7 @@ def minhash_signatures(
     else:
         raise ValueError(f"unknown shingle_repr {shingle_repr!r} — "
                          "'hash' or 'text'")
-    kern = _kernel(base.sparkSession.sparkContext, _minhash_from_hashes_udf,
-                   num_hashes)
-    sig = kern(hs).alias("sig")
+    sig = _minhash_from_hashes_udf(num_hashes)(hs).alias("sig")
     return base.select("id", "shingles", sig,
                        F.expr(f"'{shingle_repr}' AS _sig_repr"))
 
@@ -784,8 +774,7 @@ def simhash(df: DataFrame, text_col: str, id_col: str,
     base = doc_tokens(ensure_parallelism(df), text_col, id_col)
     hashes = F.expr(token_hashes_sql(token_hash))
     if impl == "arrow":
-        kern = _kernel(base.sparkSession.sparkContext,
-                       _simhash_from_hashes_udf)
+        kern = _simhash_from_hashes_udf()
         return base.select("id", kern(hashes).alias("simhash"))
     masks = F.array(*[F.lit(m) for m in _BIT_MASKS])
     votes = F.aggregate(
@@ -965,6 +954,18 @@ def _stage_col(df: DataFrame, keep: list[str], expr: str,
                          f"explode(array({expr})) AS {_q(name)}")
 
 
+def _session_function(spark, name: str, factory, *args) -> str:
+    """``name``, registered in ``spark``'s session as the SQL function
+    ``factory(*args)`` unless it already is. A pandas UDF called as a
+    Column sends ~20 py4j commands per call site; called by name in
+    SQL text it costs none, and the session's function registry — not
+    a process-wide cache — holds it, so it lives as long as the session.
+    ``name`` must encode ``args``."""
+    if not spark.catalog.functionExists(name):
+        spark.udf.register(name, factory(*args))
+    return name
+
+
 def _winnow_from_hashes_udf(k: int, w: int):
     """Arrow-vectorized winnowing: per-token xxhash64 longs in →
     distinct window-minimum fingerprints out, all numpy. The
@@ -982,7 +983,8 @@ def _winnow_from_hashes_udf(k: int, w: int):
     least one k-gram but fewer than w windows keep the min of what
     they have (the standard short-document variant, same as the
     expression form); docs shorter than k tokens yield an empty array
-    (the caller filters those, but the kernel stays total)."""
+    (:func:`_winnow_arrays` drops those rows after the kernel, as it
+    drops them for the expression families)."""
     import numpy as np
     import pandas as pd
 
@@ -1081,10 +1083,12 @@ def _winnow_arrays(df: DataFrame, text_col: str, id_col: str,
         # hash per token), then ONE Arrow kernel replaces the two
         # interpreted lambda stages (k-gram hash + window minima +
         # distinct) — see _winnow_from_hashes_udf; a document shorter
-        # than k tokens gets []
-        kern = _kernel(staged.sparkSession.sparkContext,
-                       _winnow_from_hashes_udf, k, w)
-        return staged.select("id", kern("_th").alias("_fps"))
+        # than k tokens gets [], and its row goes after the kernel
+        kern = _session_function(staged.sparkSession,
+                                 f"winnow_from_hashes_k{int(k)}_w{int(w)}",
+                                 _winnow_from_hashes_udf, k, w)
+        return (_stage_col(staged, ["id"], f"{kern}(_th)", "_fps")
+                .where("size(_fps) > 0"))
     # a document shorter than k tokens has no k-grams: its row goes
     # here, behind the barrier, so the tokenization runs once
     staged = (_stage_col(staged, ["id"], _ngram_keys_sql(k, token_hash),

@@ -20,9 +20,9 @@ minhash_dedup, text repr                 949     316
 simhash_dedup                            536     178
 simhash_dedup, md5_60                    557     185
 winnow_fingerprints                      190      63
-winnow_overlap_pairs                     351     140
+winnow_overlap_pairs                     351     117
 winnow_overlap_pairs, md5_60             491     163
-winnow_overlap_incremental               615     246
+winnow_overlap_incremental               615     205
 duplicate_spans                          590     196
 duplicate_spans, md5                     540     180
 duplicate_span_positions                 357     119
@@ -30,10 +30,6 @@ remove_duplicate_spans                   883     294
 contamination_stats                      686     228
 contamination_stats, md5                 575     191
 =================================  =========  ======
-
-``winnow_overlap_pairs`` and ``winnow_overlap_incremental`` (default
-``arrow64`` family) are held at 2.5×: each Arrow kernel's Column call
-and alias cost 22 commands that no SQL text replaces.
 
 Object-release commands (``m\\nd\\n``, sent when Python garbage-collects
 a JVM reference) are not counted: their number follows the collector,
@@ -62,9 +58,9 @@ BUDGETS = {
     "simhash_dedup": 178,
     "simhash_dedup_md5_60": 185,
     "winnow_fingerprints": 63,
-    "winnow_overlap_pairs": 140,
+    "winnow_overlap_pairs": 117,
     "winnow_overlap_pairs_md5_60": 163,
-    "winnow_overlap_incremental": 246,
+    "winnow_overlap_incremental": 205,
     "duplicate_spans": 196,
     "duplicate_spans_md5": 180,
     "duplicate_span_positions": 119,

@@ -954,18 +954,6 @@ def _stage_col(df: DataFrame, keep: list[str], expr: str,
                          f"explode(array({expr})) AS {_q(name)}")
 
 
-def _session_function(spark, name: str, factory, *args) -> str:
-    """``name``, registered in ``spark``'s session as the SQL function
-    ``factory(*args)`` unless it already is. A pandas UDF called as a
-    Column sends ~20 py4j commands per call site; called by name in
-    SQL text it costs none, and the session's function registry — not
-    a process-wide cache — holds it, so it lives as long as the session.
-    ``name`` must encode ``args``."""
-    if not spark.catalog.functionExists(name):
-        spark.udf.register(name, factory(*args))
-    return name
-
-
 def _winnow_from_hashes_udf(k: int, w: int):
     """Arrow-vectorized winnowing: per-token xxhash64 longs in →
     distinct window-minimum fingerprints out, all numpy. The
@@ -1082,11 +1070,17 @@ def _winnow_arrays(df: DataFrame, text_col: str, id_col: str,
         # production default: per-token xxhash64 stays JVM-side (one
         # hash per token), then ONE Arrow kernel replaces the two
         # interpreted lambda stages (k-gram hash + window minima +
-        # distinct) — see _winnow_from_hashes_udf; a document shorter
-        # than k tokens gets [], and its row goes after the kernel
-        kern = _session_function(staged.sparkSession,
-                                 f"winnow_from_hashes_k{int(k)}_w{int(w)}",
-                                 _winnow_from_hashes_udf, k, w)
+        # distinct) — see _winnow_from_hashes_udf. The kernel is a SQL
+        # function of the session, registered on its first use there:
+        # a pandas UDF called as a Column costs ~20 py4j commands per
+        # call site, called by name in SQL text none.
+        kern = f"winnow_from_hashes_k{int(k)}_w{int(w)}"
+        spark = staged.sparkSession
+        if not spark.catalog.functionExists(kern):
+            spark.udf.register(kern, _winnow_from_hashes_udf(k, w))
+        # a document shorter than k tokens gets []: its row goes behind
+        # the barrier (a filter on the kernel's output alone is pushed
+        # below it and runs the kernel twice)
         return (_stage_col(staged, ["id"], f"{kern}(_th)", "_fps")
                 .where("size(_fps) > 0"))
     # a document shorter than k tokens has no k-grams: its row goes
